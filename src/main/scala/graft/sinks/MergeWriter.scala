@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned-parquet PK upsert — the reference's `update_table`
   * (crypto_data_pipeline_duckdb.py:1546-1594: temp table → UPDATE
@@ -24,17 +25,30 @@ object MergeWriter {
 
   /** Upsert `delta` into the parquet table at `path`.
     *
+    * The base is read with the delta's schema, so no schema-inference
+    * job runs over the store's footers. The partition column keeps the
+    * delta's type: a string `sym=007` stays "007" and is rewritten in
+    * place, where an inferred int 7 would land in a new `sym=7`
+    * directory beside the stale one. A column that older files lack
+    * reads as null (parquet's schema-evolution rule). A missing store,
+    * or a root without partition directories (a failed first write
+    * leaves only `_temporary`), merges against an empty base.
+    *
     * @param keys         primary-key columns (delta must be unique on them)
     * @param partitionCol physical partition column; must be in both schemas
+    * @return the delta's distinct partition values — the partitions
+    *         rewritten; empty (and nothing read or written) for an
+    *         empty delta
     */
   def merge(spark: SparkSession, path: String, delta: DataFrame,
-            keys: Seq[String], partitionCol: String): Unit = {
+            keys: Seq[String], partitionCol: String): Seq[Any] = {
+    val impacted = partitionValues(delta, partitionCol)
+    if (impacted.isEmpty) return impacted
     val dataCols = delta.columns.toSeq
-    val impacted = delta.select(col(partitionCol)).distinct().collect().map(_.get(0))
 
-    val base = prunedRead(spark, path, partitionCol, impacted.toSeq)
+    val base = prunedRead(spark, path, partitionCol, impacted, Some(delta.schema))
       .map(_.select(dataCols.map(col): _*))
-      .getOrElse(delta.limit(0).select(dataCols.map(col): _*))
+      .getOrElse(delta.limit(0))
 
     // delta (priority 1) overrides base (priority 0) per PK: one shuffle
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__prio").desc)
@@ -53,7 +67,17 @@ object MergeWriter {
         .partitionBy(partitionCol)
         .parquet(path)
     } finally graft.Checkpoints.free(out)
+    impacted
   }
+
+  /** The distinct values of `partitionCol` in ONE job: each task
+    * dedups its own rows and the driver merges the per-task sets (a
+    * `distinct()` is a shuffle-stage job plus a result job under AQE).
+    * The driver-side list is bounded by tasks × partitions, not rows. */
+  private def partitionValues(df: DataFrame, partitionCol: String): Seq[Any] =
+    df.select(col(partitionCol)).rdd
+      .mapPartitions(_.map(_.get(0)).toSet.iterator)
+      .collect().distinct.toSeq
 
   /** Read ONLY the named partitions of a partitioned-parquet table, by
     * explicit partition PATH — `spark.read.parquet(root).filter(isin)`
@@ -66,10 +90,15 @@ object MergeWriter {
     * probe caught the difference: a fixed-delta tick grew 3.7× with a
     * ×10 store through the full index, flat through this.
     *
+    * `schema`, when given, is the read schema (partition column
+    * included, with the type it keeps): no footer-inference job runs.
+    * Without it, Spark infers the data schema from a footer and the
+    * partition column's type from the directory names.
+    *
     * Returns None when none of the partitions exist (or the table root
     * is missing) — callers substitute an empty frame. */
   def prunedRead(spark: SparkSession, path: String, partitionCol: String,
-                 values: Seq[Any]): Option[DataFrame] = {
+                 values: Seq[Any], schema: Option[StructType] = None): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return None
@@ -81,7 +110,10 @@ object MergeWriter {
       .filter(st => wanted.contains(st.getPath.getName.drop(partitionCol.length + 1)))
       .map(_.getPath.toString)
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", path).parquet(dirs.toIndexedSeq: _*))
+    else {
+      val reader = spark.read.option("basePath", path)
+      Some(schema.fold(reader)(reader.schema).parquet(dirs.toIndexedSeq: _*))
+    }
   }
 
   /** Compact fragmented partitions — the reference's `OPTIMIZE TABLE …
@@ -126,8 +158,11 @@ object MergeWriter {
     }.toSeq
     fragmented.foreach { case (value, nFiles) =>
       // prunedRead: the rewrite's scan must not re-file-index the whole
-      // store any more than the listing above does
+      // store any more than the listing above does. The partition value
+      // stays the directory's decoded string: an inferred type could
+      // rename the directory on write (`day=007` read as int 7 → `day=7`)
       val part = prunedRead(spark, path, partitionCol, Seq(value)).get
+        .withColumn(partitionCol, lit(value))
       val out = part.coalesce(nFiles).localCheckpoint(eager = true)
       try {
         out.write

@@ -2196,33 +2196,33 @@ object StreamOps {
     parsed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = dedup(batch)
-            .localCheckpoint(eager = true)
-          // storage-agnostic first-load probe (HDFS/S3-safe, same pattern
-          // as IncrementalPipeline.watermark) — java.io.File would only
-          // see the local filesystem
-          val storeExists =
-            try { spark.read.parquet(storePath).schema; true }
-            catch { case _: org.apache.spark.sql.AnalysisException => false }
-          try {
-            if (storeExists)
-              graft.sinks.MergeWriter.merge(spark, storePath, delta, mergeKeys, partitionCol)
-            else
-              // overwrite: a batch-0 retry after a partial write must
-              // be self-healing (see streamingMarketPipeline)
-              delta.write.mode("overwrite").partitionBy(partitionCol).parquet(storePath)
-            // small-file maintenance, bounded by the delta's partitions
-            // (the marketTick rule)
-            val impacted = delta.select(col(partitionCol)).distinct()
-              .collect().map(_.get(0)).toSeq
-            graft.sinks.MergeWriter.compact(spark, storePath, partitionCol,
-              onlyValues = Some(impacted))
-            ()
-          } finally graft.Checkpoints.free(delta)
-        }
+        ingestBatch(spark, batch, storePath, dedup, mergeKeys, partitionCol)
       }
       .start()
+
+  /** One [[ingestSink]] micro-batch: heal the landed rows, upsert them
+    * into the store, compact the partitions they touched. Each step
+    * runs once, so a batch merged into an existing store is six Spark
+    * jobs: the healed delta's checkpoint (shuffle + materialize),
+    * merge's impacted-partition collect, merge's checkpoint (shuffle +
+    * materialize) and its write; compaction only lists unless a
+    * partition is fragmented. Needs no store or emptiness probe: a
+    * batch that parses to no rows impacts no partitions and writes
+    * nothing, and a missing store — or a root holding only a failed
+    * first write's `_temporary` — merges against an empty base, so a
+    * retried first batch heals itself. */
+  private[graft] def ingestBatch(spark: SparkSession, batch: DataFrame, storePath: String,
+                                 dedup: DataFrame => DataFrame, mergeKeys: Seq[String],
+                                 partitionCol: String): Unit = {
+    val delta = dedup(batch).localCheckpoint(eager = true)
+    try {
+      val impacted = graft.sinks.MergeWriter.merge(spark, storePath, delta, mergeKeys, partitionCol)
+      // small-file maintenance, bounded by the delta's partitions
+      // (the marketTick rule)
+      graft.sinks.MergeWriter.compact(spark, storePath, partitionCol,
+        onlyValues = Some(impacted))
+    } finally graft.Checkpoints.free(delta)
+  }
 
   /** The d13 incremental-dedup daily loop as a CONTINUOUS pipeline —
     * the curation twin of [[streamingKlineIngest]]'s store loop: each

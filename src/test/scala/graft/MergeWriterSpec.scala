@@ -88,4 +88,34 @@ class MergeWriterSpec extends SparkSpec {
     val got = spark.read.parquet(dir).select("symbol", "day", "ts", "close").as[Kline].collect().toSet
     assert(got == Set(Kline("BTC", "d1", 1, 2.0), Kline("BTC", "d1", 2, 3.0)))
   }
+
+  // a string partition value that looks numeric ("007") must keep its
+  // own directory: an inferred int 7 would rewrite into day=7 and leave
+  // the stale day=007 beside it
+  private def dayDirs(dir: String): Set[String] =
+    new java.io.File(dir).list().filter(_.startsWith("day=")).toSet
+  private def readKlines(dir: String): Seq[Kline] =
+    spark.read.schema(org.apache.spark.sql.Encoders.product[Kline].schema)
+      .parquet(dir).as[Kline].collect().toSeq
+
+  test("merge keeps a numeric-looking string partition value in its directory") {
+    val dir = Files.createTempDirectory("graft_merge_num").toString + "/t"
+    Seq(Kline("BTC", "007", 1, 1.0), Kline("BTC", "007", 2, 2.0)).toDS()
+      .write.partitionBy("day").parquet(dir)
+    val delta = Seq(Kline("BTC", "007", 2, 20.0), Kline("BTC", "007", 3, 3.0)).toDS().toDF()
+    assert(MergeWriter.merge(spark, dir, delta, Seq("symbol", "ts"), "day") == Seq("007"))
+    assert(dayDirs(dir) == Set("day=007"))
+    val got = readKlines(dir)
+    assert(got.sortBy(_.ts) == Seq(
+      Kline("BTC", "007", 1, 1.0), Kline("BTC", "007", 2, 20.0), Kline("BTC", "007", 3, 3.0)))
+  }
+
+  test("compact keeps a numeric-looking string partition value in its directory") {
+    val dir = Files.createTempDirectory("graft_compact_num").toString + "/t"
+    val rows = (1 to 6).map(i => Kline("BTC", "007", i.toLong, i.toDouble))
+    rows.foreach(r => Seq(r).toDS().coalesce(1).write.mode("append").partitionBy("day").parquet(dir))
+    assert(MergeWriter.compact(spark, dir, "day", maxFiles = 4) == Seq("007"))
+    assert(dayDirs(dir) == Set("day=007"))
+    assert(readKlines(dir).sortBy(_.ts) == rows, "compaction is a pure physical rewrite")
+  }
 }
