@@ -55,11 +55,8 @@ object AnnStore {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def hasLandings(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val f = fs(spark, p)
-    f.exists(hp) && f.listStatus(hp).exists(_.getPath.getName.startsWith("__landing="))
-  }
+  private def hasLandings(spark: SparkSession, p: String): Boolean =
+    PartitionDirs.list(spark, p, "__landing").nonEmpty
 
   /** Run `body` with dynamic partition overwrite on, restoring the
     * prior session value after (insertInto reads the SESSION conf, not
@@ -80,18 +77,13 @@ object AnnStore {
     * (`part-NNNNN-uuid_BBBBB.c000…`) — the marker Spark itself uses to
     * map a file to its bucket, so it is exactly the "safe to declare
     * CLUSTERED BY over these files" test. */
-  private def filesAreBucketed(spark: SparkSession, p: String): Boolean = {
-    val f = fs(spark, p)
-    val root = new org.apache.hadoop.fs.Path(p)
-    val part = f.listStatus(root)
-      .find(_.getPath.getName.startsWith("__landing="))
-    part.exists { d =>
-      f.listStatus(d.getPath).exists { st =>
+  private def filesAreBucketed(spark: SparkSession, p: String): Boolean =
+    PartitionDirs.list(spark, p, "__landing").headOption.exists { case (_, dir) =>
+      fs(spark, p).listStatus(dir).exists { st =>
         val nm = st.getPath.getName
         nm.startsWith("part-") && nm.matches(""".*_\d{5}\.c000.*""")
       }
     }
-  }
 
   /** Register the catalog table over existing landed files (fresh
     * session reading a durable store). Returns false when the files
@@ -130,9 +122,14 @@ object AnnStore {
     }
     if (!spark.catalog.tableExists(t) || !hasLandings(spark, p)) {
       // fresh store — or a stale catalog entry whose files are gone (a
-      // dropped temp store, or a crash before the first files landed):
-      // (re)create table + files in one bucketed write
+      // dropped temp store, a crash before the first files landed, or a
+      // compaction that dropped every landing): (re)create table + files
+      // in one bucketed write. No landing is listed here (a listed one
+      // would have registered the table above), so clear what the
+      // directory still holds (`_SUCCESS`, `_temporary`): a CREATE TABLE
+      // AS SELECT refuses a non-empty location
       spark.sql(s"DROP TABLE IF EXISTS $t")
+      fs(spark, p).delete(new org.apache.hadoop.fs.Path(p), true)
       out.write
         .partitionBy("__landing")
         .bucketBy(Buckets, bucketCol).sortBy(bucketCol)
@@ -219,22 +216,12 @@ object AnnStore {
   def dropLandings(spark: SparkSession, storePath: String, sub: String,
                    before: Long): Unit = {
     val t = tableName(storePath, sub)
-    val p = subPath(storePath, sub)
-    val dir = new org.apache.hadoop.fs.Path(p)
-    val f = fs(spark, p)
-    if (!f.exists(dir)) return
-    f.listStatus(dir).foreach { st =>
-      val nm = st.getPath.getName
-      if (nm.startsWith("__landing=") &&
-          nm.stripPrefix("__landing=").toLong < before) {
-        if (spark.catalog.tableExists(t)) {
-          spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION " +
-            s"(__landing=${nm.stripPrefix("__landing=")})")
-        }
-        f.delete(st.getPath, true); ()
-      }
+    val dropped = PartitionDirs.drop(spark, subPath(storePath, sub), "__landing")(_.toLong < before)
+    if (spark.catalog.tableExists(t)) {
+      dropped.foreach(id =>
+        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (__landing=$id)"))
+      spark.catalog.refreshTable(t)
     }
-    if (spark.catalog.tableExists(t)) spark.catalog.refreshTable(t)
   }
 
   /** Drop the catalog entries for a store (the files' owner deletes

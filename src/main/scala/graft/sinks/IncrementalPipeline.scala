@@ -61,14 +61,8 @@ object IncrementalPipeline {
       .filter(col("__rn") === 1)
       .drop("__rn")
     val n = delta.count()
-    if (n > 0) {
-      if (wm.isEmpty) {
-        // first load: plain partitioned write
-        delta.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-      } else {
-        MergeWriter.merge(spark, path, delta, keys, partitionCol)
-      }
-    }
+    // a first load is a merge against an empty base
+    if (n > 0) MergeWriter.merge(spark, path, delta, keys, partitionCol)
     n
   }
 

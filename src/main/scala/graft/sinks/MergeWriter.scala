@@ -74,7 +74,7 @@ object MergeWriter {
     * dedups its own rows and the driver merges the per-task sets (a
     * `distinct()` is a shuffle-stage job plus a result job under AQE).
     * The driver-side list is bounded by tasks × partitions, not rows. */
-  private def partitionValues(df: DataFrame, partitionCol: String): Seq[Any] =
+  private[graft] def partitionValues(df: DataFrame, partitionCol: String): Seq[Any] =
     df.select(col(partitionCol)).rdd
       .mapPartitions(_.map(_.get(0)).toSet.iterator)
       .collect().distinct.toSeq
@@ -99,16 +99,9 @@ object MergeWriter {
     * is missing) — callers substitute an empty frame. */
   def prunedRead(spark: SparkSession, path: String, partitionCol: String,
                  values: Seq[Any], schema: Option[StructType] = None): Option[DataFrame] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val wanted = values.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(String.valueOf(v))).toSet
-    val dirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(partitionCol + "="))
-      .filter(st => wanted.contains(st.getPath.getName.drop(partitionCol.length + 1)))
-      .map(_.getPath.toString)
+    val wanted = values.map(PartitionDirs.dirName(partitionCol, _)).toSet
+    val dirs = PartitionDirs.list(spark, path, partitionCol)
+      .collect { case (_, dir) if wanted.contains(dir.getName) => dir.toString }
     if (dirs.isEmpty) None
     else {
       val reader = spark.read.option("basePath", path)
@@ -138,24 +131,16 @@ object MergeWriter {
               onlyValues: Option[Seq[Any]] = None): Seq[Any] = {
     // driver-side listing is bounded by partition/file count, not rows —
     // same budget as merge()'s impacted-partition list
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return Seq.empty
-    val wanted = onlyValues.map(_.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(String.valueOf(v))).toSet)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .filter(s => wanted.forall(_.contains(
-        s.getPath.getName.drop(partitionCol.length + 1))))
-    val fragmented = parts.flatMap { p =>
-      val files = fs.listStatus(p.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-      if (files.length <= maxFiles) None
-      else Some((
-        // directory names percent-encode special chars (e.g. "BTC/USDT")
-        java.net.URLDecoder.decode(p.getPath.getName.drop(partitionCol.length + 1), "UTF-8"),
-        math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)))
-    }.toSeq
+    val wanted = onlyValues.map(_.map(PartitionDirs.dirName(partitionCol, _)).toSet)
+    val fragmented = PartitionDirs.list(spark, path, partitionCol)
+      .filter { case (_, dir) => wanted.forall(_.contains(dir.getName)) }
+      .flatMap { case (value, dir) =>
+        val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+        if (files.length <= maxFiles) None
+        else Some((value,
+          math.max(1, math.ceil(files.map(_.getLen).sum.toDouble / targetBytes).toInt)))
+      }
     fragmented.foreach { case (value, nFiles) =>
       // prunedRead: the rewrite's scan must not re-file-index the whole
       // store any more than the listing above does. The partition value
@@ -173,9 +158,5 @@ object MergeWriter {
       } finally graft.Checkpoints.free(out)
     }
     fragmented.map(_._1)
-  }
-
-  private implicit class ColOps(private val c: org.apache.spark.sql.Column) extends AnyVal {
-    def isInStr(vals: Array[Any]): org.apache.spark.sql.Column = c.isin(vals.toIndexedSeq: _*)
   }
 }

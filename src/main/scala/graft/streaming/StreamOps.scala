@@ -1347,19 +1347,6 @@ object StreamOps {
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
   }
 
-  /** A landing store read that tolerates an EMPTY directory (a
-    * compaction may drop every partition of the deletes store while
-    * the dir itself remains): None when the path is missing or holds
-    * no landing partition. */
-  private def readStore(spark: SparkSession, p: String): Option[DataFrame] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else if (!fs.listStatus(hp).exists(_.getPath.getName.startsWith("__landing=")))
-      None
-    else Some(spark.read.parquet(p))
-  }
-
   /** Landing ids from the store's PARTITION DIRECTORY names — the
     * `__landing=N` dirs ARE the landing ids (dynamic overwrite writes
     * one dir per landing; drops remove it), so a driver-side FS listing
@@ -1368,20 +1355,12 @@ object StreamOps {
     * dir is counted only when it holds at least one file — a crash
     * after mkdir but before any data file must not register). */
   private def landingIdsOf(spark: SparkSession, path: String,
-                           before: Long): Array[Long] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) Array.empty
-    else fs.listStatus(hp).flatMap { st =>
-      val nm = st.getPath.getName
-      if (!nm.startsWith("__landing=")) None
-      else {
-        val id = nm.stripPrefix("__landing=").toLong
-        if (id < before && fs.listStatus(st.getPath).exists(_.isFile)) Some(id)
-        else None
-      }
-    }.distinct
-  }
+                           before: Long): Array[Long] =
+    graft.sinks.PartitionDirs.list(spark, path, "__landing").collect {
+      case (v, dir) if v.toLong < before &&
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(dir).exists(_.isFile) => v.toLong
+    }.distinct.toArray
 
   /** Latest-op-wins LIVE vector view over an [[annIndexTick]] store:
     * per vec_id, the newest event among vector landings and delete
@@ -1823,17 +1802,7 @@ object StreamOps {
     graft.sinks.AnnStore.dropLandings(spark, storePath, "asg", base)
     graft.sinks.AnnStore.dropLandings(spark, storePath, "deletes", upTo)
     // ticks is a plain (unbucketed) landing store — drop by dir
-    locally {
-      val dir = new org.apache.hadoop.fs.Path(s"$storePath/ticks")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith("__landing=") &&
-            nm.stripPrefix("__landing=").toLong < base) {
-          fs.delete(st.getPath, true); ()
-        }
-      }
-    }
+    graft.sinks.PartitionDirs.drop(spark, s"$storePath/ticks", "__landing")(_.toLong < base)
   }
 
   /** The s26 incremental graph insert run CONTINUOUSLY: every
@@ -2445,8 +2414,7 @@ object StreamOps {
     // symbols would leave pruning to runtime DPP — the round-14
     // scan-metrics spec caught the guard read scanning every partition
     // that way)
-    val deltaSyms = healed.select(col("symbol")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val deltaSyms = graft.sinks.MergeWriter.partitionValues(healed, "symbol")
     // every store read below goes through MergeWriter.prunedRead —
     // explicit partition paths, so neither the LISTING nor the scan
     // ever touches an untouched symbol (a plain read + isin filter
@@ -2455,36 +2423,21 @@ object StreamOps {
     def storeSlice(): Option[org.apache.spark.sql.DataFrame] =
       graft.sinks.MergeWriter.prunedRead(spark, storePath, "symbol", deltaSyms)
         .map(_.withColumn("symbol", col("symbol").cast("string")))
-    val storeExists = {
-      val root = new org.apache.hadoop.fs.Path(storePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(root) &&
-        fs.listStatus(root).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith("symbol="))
+    // revision precedence: a delta row loses to a stored row with a
+    // STRICTLY higher page_seq (late page 1 after page 2); the stored
+    // side is pruned to the delta's symbol partitions. A missing store
+    // (or a batch-0 retry over a failed write's `_temporary`) has no
+    // impacted partitions: merge lands every row against an empty base
+    val effective = storeSlice() match {
+      case None => healed
+      case Some(s) => healed
+        .join(s.select(col("symbol"), col("fundingTime"), col("page_seq").as("__cur_seq")),
+          Seq("symbol", "fundingTime"), "left")
+        .filter(col("__cur_seq").isNull || col("page_seq") >= col("__cur_seq"))
+        .drop("__cur_seq")
     }
-    if (!storeExists) {
-      // overwrite, not ErrorIfExists: a batch-0 retry after a
-      // partial write (only _temporary left behind) must be
-      // self-healing, not permanently wedge the stream
-      healed.write.mode("overwrite").partitionBy("symbol").parquet(storePath)
-    } else {
-      // revision precedence: a delta row loses to a stored row
-      // with a STRICTLY higher page_seq (late page 1 after
-      // page 2); the stored side is pruned to the delta's
-      // symbol partitions
-      val cur = storeSlice().map(_.select(col("symbol"), col("fundingTime"),
-        col("page_seq").as("__cur_seq")))
-      val effective = cur match {
-        case None => healed // no impacted partitions yet: all rows are new
-        case Some(c) => healed
-          .join(c, Seq("symbol", "fundingTime"), "left")
-          .filter(col("__cur_seq").isNull ||
-            col("page_seq") >= col("__cur_seq"))
-          .drop("__cur_seq")
-      }
-      graft.sinks.MergeWriter.merge(spark, storePath, effective,
-        keys = Seq("symbol", "fundingTime"), partitionCol = "symbol")
-    }
+    graft.sinks.MergeWriter.merge(spark, storePath, effective,
+      keys = Seq("symbol", "fundingTime"), partitionCol = "symbol")
     // maintenance: every merge leaves a shuffle-task-count file-set in
     // each touched partition (a long-running stream rots into small-file
     // scans); compact the DELTA's partitions — listing and rewrite both
@@ -2507,8 +2460,7 @@ object StreamOps {
       .filter(col("__rn") <= 20).drop("__rn")
       .localCheckpoint(eager = true)
     try {
-      val present = deltaCands.select(col("symbol")).distinct()
-        .collect().map(_.getString(0)).toSet
+      val present = graft.sinks.MergeWriter.partitionValues(deltaCands, "symbol").toSet
       if (present.nonEmpty)
         deltaCands.write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -2517,16 +2469,8 @@ object StreamOps {
       // partition under dynamic overwrite — drop it explicitly
       // (bounded by the delta's symbol count, like the merge)
       val stale = deltaSyms.filterNot(present).toSet
-      if (stale.nonEmpty) {
-        val root = new org.apache.hadoop.fs.Path(candPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root))
-          fs.listStatus(root)
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("symbol="))
-            .filter(st => stale.contains(java.net.URLDecoder
-              .decode(st.getPath.getName.drop("symbol=".length), "UTF-8")))
-            .foreach(st => fs.delete(st.getPath, true))
-      }
+      if (stale.nonEmpty)
+        graft.sinks.PartitionDirs.drop(spark, candPath, "symbol")(stale.contains)
       // ---- stage 4: global cut from the bounded candidate table ----
       val stored =
         try Some(spark.read.parquet(candPath)

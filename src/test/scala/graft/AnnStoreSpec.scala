@@ -89,6 +89,28 @@ class AnnStoreSpec extends SparkSpec {
     }
   }
 
+  test("a delete tick after a compaction that retired every deletes " +
+    "landing re-creates the deletes store and serves the expected live set") {
+    import spark.implicits._
+    val all = vecsOf(sfDir).filter(col("vec_id") < 300)
+    val store = java.nio.file.Files.createTempDirectory("graft_anncompact_").toString
+    def tick(lo: Long, hi: Long, landingId: Long, deletes: DataFrame): Unit =
+      StreamOps.annIndexTick(spark, store,
+        all.filter(col("vec_id") >= lo && col("vec_id") < hi),
+        "vec_id", "v", r = 8, beam = 4, hops = 3, landingId = landingId,
+        deletes = deletes)
+    tick(0L, 200L, 0L, null)
+    tick(200L, 250L, 1L, all.filter(col("vec_id") < 200 && col("vec_id") % 10 === 3))
+    StreamOps.annIndexCompact(spark, store, upTo = 2L)
+    assert(AnnStore.readOpt(spark, store, "deletes", "vec_id").isEmpty,
+      "the compaction retires every deletes landing")
+    tick(250L, 300L, 2L, all.filter(col("vec_id") < 250 && col("vec_id") % 10 === 7))
+    val expect = all.select(col("vec_id")).as[Long].collect().toSet
+      .filterNot(id => (id < 200 && id % 10 == 3) || (id < 250 && id % 10 == 7))
+    val live = StreamOps.annLiveVectors(spark, store).select(col("vec_id")).as[Long].collect()
+    assert(live.length == expect.size && live.toSet == expect)
+  }
+
   test("a LEGACY (pre-bucketing) store is served read-only via the plain " +
     "path fallback; landing into it fails loudly") {
     import graft.sinks.SketchStore

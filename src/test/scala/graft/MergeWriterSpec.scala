@@ -111,11 +111,15 @@ class MergeWriterSpec extends SparkSpec {
   }
 
   test("compact keeps a numeric-looking string partition value in its directory") {
-    val dir = Files.createTempDirectory("graft_compact_num").toString + "/t"
-    val rows = (1 to 6).map(i => Kline("BTC", "007", i.toLong, i.toDouble))
-    rows.foreach(r => Seq(r).toDS().coalesce(1).write.mode("append").partitionBy("day").parquet(dir))
-    assert(MergeWriter.compact(spark, dir, "day", maxFiles = 4) == Seq("007"))
-    assert(dayDirs(dir) == Set("day=007"))
-    assert(readKlines(dir).sortBy(_.ts) == rows, "compaction is a pure physical rewrite")
+    // "A+B": the directory name decodes back to "A+B" (a form decoder
+    // reads `+` as a space and names no directory)
+    Seq("007", "A+B").foreach { day =>
+      val dir = Files.createTempDirectory("graft_compact_num").toString + "/t"
+      val rows = (1 to 6).map(i => Kline("BTC", day, i.toLong, i.toDouble))
+      rows.foreach(r => Seq(r).toDS().coalesce(1).write.mode("append").partitionBy("day").parquet(dir))
+      assert(MergeWriter.compact(spark, dir, "day", maxFiles = 4) == Seq(day))
+      assert(dayDirs(dir) == Set(s"day=$day"))
+      assert(readKlines(dir).sortBy(_.ts) == rows, "compaction is a pure physical rewrite")
+    }
   }
 }
