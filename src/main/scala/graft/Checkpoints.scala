@@ -1,17 +1,39 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Explicit storage release for `localCheckpoint`'d frames.
+/** The one way `src/main` materializes a frame (a lineage cut).
   *
-  * `Dataset.unpersist()` only clears CacheManager entries; a local
-  * checkpoint's blocks live on the underlying RDD and otherwise stay
-  * pinned in executor storage until the session ends. Call [[free]]
-  * once nothing will reference the frame again (its lineage is
-  * truncated, so a later access WOULD fail — this is deliberate
-  * end-of-life, e.g. the previous round's labels in an iterative
-  * algorithm after the next round has materialized). */
+  * [[stabilize]] is the materialization call: `localCheckpoint` by
+  * default, reliable `checkpoint` when [[ReliableKey]] is set, and the
+  * result is always registered with the enclosing [[scoped]] block, so
+  * a block that materializes frames releases their storage when it
+  * exits. [[fresh]] is `stabilize` followed by an `RDD[Row]` round
+  * trip, for the few plans that must not carry the origin's
+  * constraints (see its doc). No other code in `src/main` calls
+  * `localCheckpoint` or `checkpoint` — CheckpointsSpec enforces it.
+  *
+  * Storage release: `Dataset.unpersist()` only clears CacheManager
+  * entries; a local checkpoint's blocks live on the underlying RDD and
+  * otherwise stay pinned in executor storage until the session ends.
+  * [[scoped]] frees what was materialized inside it; call [[free]]
+  * directly only where a frame's end of life comes before the scope's
+  * — a temporary that a returned result must outlive, or the previous
+  * round of an iterative loop once the next round has materialized.
+  * Either way the frame's lineage is truncated, so a later access
+  * WOULD fail: freeing is deliberate end-of-life.
+  *
+  * The scope is thread-local: a frame materialized on another thread
+  * (e.g. the tick's background lander) is not captured by the
+  * caller's [[scoped]] block.
+  *
+  * Reliable mode writes files under `SparkContext.setCheckpointDir`
+  * that [[free]] does not delete. A continuous loop in reliable mode
+  * should run with Spark's
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`, so the
+  * files of collected checkpoints are removed — a deployment setting,
+  * not a graft option. */
 object Checkpoints {
 
   /** Session conf key: when `true`, [[stabilize]] uses RELIABLE
@@ -23,55 +45,68 @@ object Checkpoints {
     * preempted executor would fail the whole computation. */
   val ReliableKey = "spark.graft.checkpoint.reliable"
 
-  /** Truncate lineage between iterative rounds: `localCheckpoint` by
-    * default, reliable `checkpoint` when [[ReliableKey]] is set. The
-    * result is plan-identical either way (a LogicalRDD leaf), so
-    * operator output does not depend on the mode — only failure
-    * recovery does (spec-pinned in Round9Spec). */
-  def stabilize(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val s = df.sparkSession
-    if (s.conf.get(ReliableKey, "false").toBoolean) {
-      require(s.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableKey=true requires SparkContext.setCheckpointDir " +
-          "(a DFS path on a cluster) before running iterative operators")
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
+  /** Materialize `ds` and truncate its lineage: `localCheckpoint` by
+    * default, reliable `checkpoint` when [[ReliableKey]] is set, and
+    * registered with the enclosing [[scoped]] block (none active: the
+    * blocks stay until GC). The result is plan-identical either way (a
+    * LogicalRDD leaf), so operator output does not depend on the mode
+    * — only failure recovery does (spec-pinned in Round9Spec). */
+  def stabilize[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val s = ds.sparkSession
+    val ck =
+      if (s.conf.get(ReliableKey, "false").toBoolean) {
+        require(s.sparkContext.getCheckpointDir.isDefined,
+          s"$ReliableKey=true requires SparkContext.setCheckpointDir " +
+            "(a DFS path on a cluster) before running iterative operators")
+        ds.checkpoint(eager)
+      } else ds.localCheckpoint(eager)
+    val b = scope.get()
+    if (b != null) b += ck
+    ck
   }
 
-  def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
+  /** [[stabilize]] that deliberately DROPS the origin plan's
+    * statistics and constraints: Spark 4.1's `LogicalRDD` carries the
+    * checkpointed plan's constraints rewritten to the new output, and
+    * a Union over such leaves inside a deep composed plan can crash
+    * constraint rewriting with `key not found: attr#N` (observed at
+    * probe scale in the tick's delete+insert composition; AQE
+    * re-optimization walks the constraints the gate-scale plan never
+    * touches). Round-tripping through an `RDD[Row]` yields a clean
+    * leaf with the same materialize-once behavior. It is a separate
+    * function, not a flag of [[stabilize]]: the round trip also drops
+    * the statistics and output partitioning, which would change the
+    * plans of every other site. */
+  def fresh(df: DataFrame, eager: Boolean): DataFrame = {
+    val ck = stabilize(df, eager)
+    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
+  def free(ds: Dataset[_]): Unit =
+    ds.queryExecution.analyzed.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
   private val scope =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]()
-
-  /** Register a checkpointed frame with the enclosing [[scoped]] block
-    * (no-op when none is active — one-shot operator calls keep their
-    * blocks until GC, as before). */
-  private[graft] def register(df: DataFrame): DataFrame = {
-    val b = scope.get()
-    if (b != null) b += df
-    df
-  }
+    new ThreadLocal[scala.collection.mutable.ArrayBuffer[Dataset[_]]]()
 
   /** Run `body` with a checkpoint-tracking scope: every frame
-    * [[register]]ed inside (the tick-internal localCheckpoints of the
-    * graph-maintenance path) is [[free]]d when the block exits. A
-    * CONTINUOUS loop calls bounded ticks forever — without this, each
-    * tick's checkpoint blocks pin executor storage until a GC happens
-    * to collect the driver-side references, and a day of micro-batches
-    * fills the store's disk with dead blocks (observed: the ×100
-    * anntick probe transiently eating ~76 GB). Frames freed here are
-    * end-of-life by construction: a tick lands everything it computed
-    * before returning. */
+    * [[stabilize]]d inside it on this thread is [[free]]d when the
+    * block exits. A CONTINUOUS loop calls bounded ticks and
+    * micro-batches forever — without this, each one's checkpoint
+    * blocks pin executor storage until a GC happens to collect the
+    * driver-side references, and a day of micro-batches fills the
+    * store's disk with dead blocks (observed: the ×100 anntick probe
+    * transiently eating ~76 GB). So a block must consume everything it
+    * materialized before it returns (a tick lands it, a micro-batch
+    * writes it): its result must not be a frame built on them. */
   def scoped[T](body: => T): T = {
     val prev = scope.get()
-    val buf = new scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val buf = new scala.collection.mutable.ArrayBuffer[Dataset[_]]()
     scope.set(buf)
     try body finally {
-      buf.foreach(df => try free(df) catch { case _: Throwable => () })
+      buf.foreach(ds => try free(ds) catch { case _: Throwable => () })
       scope.set(prev)
     }
   }

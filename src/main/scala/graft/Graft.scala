@@ -946,7 +946,7 @@ object Graft {
     // recomputes the (usually aggregated) input twice — no cross-side
     // common-subtree elimination. The grid is bucket-sized, so the
     // checkpoint is tiny.
-    val grid = df.localCheckpoint()
+    val grid = Checkpoints.stabilize(df)
     val a = grid.select(col(key).as("type_a"), col(bucket).as("__b"), col(value).as("__x"))
     val b = grid.select(col(key).as("type_b"), col(bucket).as("__b2"), col(value).as("__y"))
     val ord = Window.partitionBy(col("type_a"), col("type_b")).orderBy(col("__b"))
@@ -988,7 +988,7 @@ object Graft {
              benchmark: String): DataFrame = {
     // both sides derive from the same (usually aggregated) grid — the
     // pairCorr cross-side-recompute barrier, tiny by construction
-    val grid = df.localCheckpoint()
+    val grid = Checkpoints.stabilize(df)
     val w = Window.partitionBy(col(key)).orderBy(col(bucket))
     val r = grid
       .withColumn("__prev", lag(col(value), 1).over(w))

@@ -289,8 +289,8 @@ object ScaleProbe {
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val keys = Seq("event_type")
-    val ev = Tables.t(spark, src, "events")
-      .select(col("event_type"), col("user_id")).localCheckpoint(eager = true)
+    val ev = Checkpoints.stabilize(Tables.t(spark, src, "events")
+      .select(col("event_type"), col("user_id")))
     val store = java.nio.file.Files.createTempDirectory("graft_landings_").toString
     def fileCount(): Int = {
       def walk(f: java.io.File): Int =
@@ -428,11 +428,10 @@ object ScaleProbe {
       })
     def reap(): Unit = { System.gc(); Thread.sleep(2000) }
     def run(n: Long): (Double, Long, Long) = {
-      val corpus = vecsOf(n, 0L).localCheckpoint()
+      val corpus = Checkpoints.stabilize(vecsOf(n, 0L))
       val anchors = corpus.filter(pmod(col("vec_id"), lit(64L)) === 0)
-      val edges = SimOps.knnGraphOf(corpus, anchors, "vec_id", "v",
-        "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1)
-        .localCheckpoint()
+      val edges = Checkpoints.stabilize(SimOps.knnGraphOf(corpus, anchors, "vec_id", "v",
+        "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1))
       val nEdges = edges.count()
       val queries = vecsOf(5L, 0L) // the same 5 query vectors at both sizes
       def search(): Unit = SimOps.graphAnnOf(corpus, queries, anchors, edges,
@@ -505,8 +504,7 @@ object ScaleProbe {
     val tBefore = time(readAll())
     val landingsBefore = spark.read.parquet(s"$base/edges")
       .select(col("__landing")).distinct().count()
-    val idx = StreamOps.annIndexReport(spark, base)
-      .localCheckpoint(eager = true).count()
+    val idx = Checkpoints.stabilize(StreamOps.annIndexReport(spark, base)).count()
     val tCompact = time(StreamOps.annIndexCompact(spark, base, upTo = n + 1L))
     reap()
     readAll()
@@ -531,8 +529,8 @@ object ScaleProbe {
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val keys = Seq("event_type")
-    val ev = Tables.t(spark, src, "events")
-      .select(col("event_type"), col("value")).localCheckpoint(eager = true)
+    val ev = Checkpoints.stabilize(Tables.t(spark, src, "events")
+      .select(col("event_type"), col("value")))
     val store = java.nio.file.Files.createTempDirectory("graft_loghist_land_").toString
     def mergedSec(): Double = {
       val t0 = System.nanoTime()

@@ -19,7 +19,6 @@ object TickProbe {
     val all = Tables.t(s, dir, "embeddings")
       .select(col("vec_id"), F.asDouble(col("embedding")).as("v"))
     val m10 = pmod(col("vec_id"), lit(10))
-    if (args.headOption.contains("internals")) { tick1Internals(s, all, m10); s.stop(); return }
     // warm pass (footers, codegen) — mirror of the bench's warm+timed
     (1 to 2).foreach { pass =>
       println(s"== pass $pass")
@@ -48,83 +47,5 @@ object TickProbe {
       graft.sinks.AnnStore.dropTables(s, store)
     }
     s.stop()
-  }
-
-  /** Phase breakdown of the st17-shape delete+insert tick (tick 1),
-    * replicated step by step with the same checkpointing choices. */
-  private def tick1Internals(s: org.apache.spark.sql.SparkSession,
-                             all: org.apache.spark.sql.DataFrame,
-                             m10: org.apache.spark.sql.Column): Unit = {
-    import graft.ops.SimOps
-    import graft.streaming.StreamOps
-    def t[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PHASE $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    (1 to 2).foreach { pass =>
-      println(s"== pass $pass")
-      val store = java.nio.file.Files.createTempDirectory("graft_probe_i_").toString
-      t("tick0_build")(StreamOps.annIndexTick(s, store,
-        all.filter(m10 =!= 8), "vec_id", "v",
-        r = 8, beam = 4, hops = 3, landingId = 0L))
-      // --- tick 1 replicated ---
-      graft.Checkpoints.scoped {
-        val b = all.filter(m10 === 8).select(col("vec_id"), col("v"))
-        val delIds = all.filter(m10 === 9).select(col("vec_id")).distinct()
-        val priorLive0 = SimOps.freshCheckpoint(
-          StreamOps.annLiveVectors(s, store, 1L), eager = false)
-        val nDeletes = t("counts_del")(delIds.count())
-        val nBatch = t("counts_batch")(b.count())
-        t("guard") {
-          val survivors0 = priorLive0.join(delIds, Seq("vec_id"), "left_anti")
-          b.select("vec_id").join(survivors0.select("vec_id"), Seq("vec_id"), "left_semi")
-            .limit(5).collect()
-        }
-        t("land_deletes")(graft.sinks.AnnStore.land(s, store, "deletes", delIds, 1L, "vec_id"))
-        t("land_vectors")(graft.sinks.AnnStore.land(s, store, "vectors", b, 1L, "vec_id"))
-        val priorEdges = SimOps.freshCheckpoint(
-          StreamOps.annIndexReport(s, store, 1L), eager = false)
-        val cd = t("delete_delta")(SimOps.freshCheckpoint(
-          SimOps.graphDeleteDeltaOf(priorLive0, delIds, priorEdges,
-            "vec_id", "v", r = 8), eager = true))
-        val after = cd.unionByName(priorEdges
-          .join(cd.select("src").distinct(), Seq("src"), "left_anti")
-          .join(delIds.select(col("vec_id").as("src")), Seq("src"), "left_anti"))
-        val survivors = priorLive0.join(delIds, Seq("vec_id"), "left_anti")
-        val anc = survivors.filter(pmod(col("vec_id"), lit(64L)) === 0)
-        t("land_asg") {
-          val asg = SimOps.cellAsgOf(b, broadcast(anc.select(col("vec_id").as("c_id"),
-            col("v").as("cv"))), cellProbes = 2)
-          graft.sinks.AnnStore.land(s, store, "asg", asg, 1L, "vec_id")
-        }
-        val survivorAsg = graft.sinks.AnnStore.read(s, store, "asg", "vec_id")
-          .filter(col("__landing").cast("long") < 1L)
-          .withColumn("__maxl", max(col("__landing").cast("long"))
-            .over(org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))))
-          .filter(col("__landing").cast("long") === col("__maxl"))
-          .select(col("vec_id"), col("cell"))
-          .join(survivors.select("vec_id"), Seq("vec_id"), "left_semi")
-        val ci = SimOps.graphInsertDeltaOf(survivors, b, after,
-          anc, anc, "vec_id", "v", r = 8, beam = 4, hops = 3,
-          corpusAsg = survivorAsg)
-        val changed = ci.unionByName(cd
-          .join(ci.select("src").distinct(), Seq("src"), "left_anti"))
-        val changedOut = t("insert_compute")(graft.Checkpoints.register(
-          changed.select(col("src"), col("dst"), col("cos"))
-            .localCheckpoint(eager = true)))
-        val nChanged = changedOut.count()
-        t("land_edges")(graft.sinks.AnnStore.land(s, store, "edges", changedOut, 1L, "src"))
-        import s.implicits._
-        t("land_manifest")(graft.sinks.SketchStore.land(s, s"$store/ticks",
-          Seq((nBatch, nDeletes, nChanged)).toDF("n_batch", "n_deletes", "n_changed"), 1L))
-      }
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(store))
-      graft.sinks.AnnStore.dropTables(s, store)
-    }
   }
 }

@@ -1414,10 +1414,9 @@ object DataOps {
     // once, not per landing; the k-row output is materialized eagerly
     // below and ev freed (the t25 finally-unpersist rule), so
     // multi-query runs accumulate no blocks (round-17; bit-identical)
-    val ev = t(s, dir, "events")
+    val ev = graft.Checkpoints.stabilize(t(s, dir, "events")
       .select(col("event_type"), col("user_id"), col("value"),
-        (dayofmonth(col("ts")) % 3).as("__landing"))
-      .localCheckpoint(eager = true)
+        (dayofmonth(col("ts")) % 3).as("__landing")))
     val store = java.nio.file.Files.createTempDirectory("graft_sketch_store_").toString
     (0 until 3).foreach { l =>
       val batch = ev.filter(col("__landing") === l)
@@ -1433,12 +1432,11 @@ object DataOps {
       Seq(0.5 -> "p50_est", 0.95 -> "p95_est"))
     val exact = ev.groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
-    try exact.join(est, "event_type").join(qs, "event_type")
+    try graft.Checkpoints.stabilize(exact.join(est, "event_type").join(qs, "event_type")
       .select(col("event_type"), col("n"), col("exact_users"),
         r4(col("est")).as("est_users"), r4(col("p50_est")).as("p50_est"),
         r4(col("p95_est")).as("p95_est"))
-      .orderBy("event_type")
-      .localCheckpoint(eager = true)
+      .orderBy("event_type"))
     finally graft.Checkpoints.free(ev)
   }
 
@@ -1517,13 +1515,11 @@ object DataOps {
     // bit-identical; the inner joins' key-intersection semantics are
     // reproduced by the non-null filter (a key in a∩b always has a
     // union estimate). The tagged state is checkpointed once
-    // (kilobyte-sized, ≤ 2^p rows per key side) and REGISTERED so
-    // scoped callers reclaim the blocks (round-17 advice).
-    val states = graft.Checkpoints.register(
+    // (kilobyte-sized, ≤ 2^p rows per key side).
+    val states = graft.Checkpoints.stabilize(
       SketchStore.hllState(a, keys, valueCol, p).withColumn("__side", lit("a"))
         .unionByName(
-          SketchStore.hllState(b, keys, valueCol, p).withColumn("__side", lit("b")))
-        .localCheckpoint())
+          SketchStore.hllState(b, keys, valueCol, p).withColumn("__side", lit("b"))))
     val merged = states
       .groupBy((kc :+ col("reg")): _*)
       .agg(max(col("rho")).as("rho"))

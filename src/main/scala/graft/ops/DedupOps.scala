@@ -92,12 +92,11 @@ object DedupOps {
     // elimination across self-join sides (verified: 2 FileScans, 0
     // ReusedExchange), so without this the whole tokenize+shingle+md5
     // pipeline runs twice, once per side. (id, sig) is k longs/doc.
-    val sig = docs
+    val sig = graft.Checkpoints.stabilize(docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= shingleN)
       .withColumn("sig", expr(s"graft_minhash(ws, $shingleN, $k)"))
-      .select(col("doc_id"), col("sig"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("sig")))
     val bkey = (0 until r)
       .map(i => s"CAST(sig[$r*b+$i] AS STRING)").mkString("concat_ws('_', ", ", ", ")")
     val bands_ = sig
@@ -373,11 +372,11 @@ object DedupOps {
     require(bits % chunks == 0, "bits must divide evenly into chunks")
     val cb = bits / chunks
     val mask = (1L << cb) - 1
-    val sh = docs
+    // one simhash pass, not one per self-join side
+    val sh = graft.Checkpoints.stabilize(docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= 1)
-      .select(col("doc_id"), expr(s"graft_simhash(ws, $bits)").as("simhash"))
-      .localCheckpoint() // one simhash pass, not one per self-join side
+      .select(col("doc_id"), expr(s"graft_simhash(ws, $bits)").as("simhash")))
     val ch = sh.select(col("doc_id"), col("simhash"), explode(sequence(lit(0), lit(chunks - 1))).as("c"))
       .withColumn("chunk", expr(s"shiftright(simhash, CAST($cb * c AS INT)) & $mask"))
     val a = ch.select(col("doc_id").as("doc_a"), col("simhash").as("ha"), col("c"), col("chunk"))
@@ -439,14 +438,13 @@ object DedupOps {
     // frame feeds three plan branches (two shd joins + the band explode),
     // each of which would otherwise recompute it from the scan
     val shingleExpr = (0 until shingleN).map(j => s"ws[i+$j]").mkString("concat_ws(' ', ", ", ", ")")
-    val d = docs
+    val d = graft.Checkpoints.stabilize(docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= shingleN)
       .withColumn("sh", expr(s"transform(sequence(0, size(ws)-$shingleN), i -> $shingleExpr)"))
       .withColumn("shd", array_distinct(col("sh")))
       .withColumn("sig", expr(s"graft_minhash(ws, $shingleN, $k)"))
-      .select(col("doc_id"), col("shd"), col("sig"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("shd"), col("sig")))
     val byDoc = d.select(col("doc_id"), col("shd"))
     val mh = (0 until r)
       .map(j => s"CAST(sig[$r*i+$j] AS STRING)").mkString("concat_ws('_', ", ", ", ")")
@@ -601,10 +599,10 @@ object DedupOps {
     // native single-pass kernel: all sketch bits in one expression,
     // bit-identical to the composed per-plane folds it replaced
     // (graft.functions.SignSketch — planesFor verbatim)
-    val banded = vecs
+    // sketch once, not once per self-join side
+    val banded = graft.Checkpoints.stabilize(vecs
       .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("sketch", expr(s"graft_signsketch(__v, $sketchBits, $dims)"))
-      .localCheckpoint() // sketch once, not once per self-join side
+      .withColumn("sketch", expr(s"graft_signsketch(__v, $sketchBits, $dims)")))
       .select(col("vec_id"), col("__v"), col("sketch"),
         explode(sequence(lit(0), lit(bands - 1))).as("c"))
       .withColumn("chunk", expr(s"shiftright(sketch, CAST($cb * c AS INT)) & $mask"))
@@ -676,10 +674,10 @@ object DedupOps {
     require(sketchBits % bands == 0, "sketchBits must divide evenly into bands")
     val cb = sketchBits / bands
     val mask = (1L << cb) - 1
-    def banded(df: DataFrame, side: String): DataFrame = df
+    // sketch once per side (round-2 sketch rule)
+    def banded(df: DataFrame, side: String): DataFrame = graft.Checkpoints.stabilize(df
       .select(col(idCol).as(s"${side}_id"), col(vecCol).cast("array<double>").as(s"__v$side"))
-      .withColumn("sketch", expr(s"graft_signsketch(__v$side, $sketchBits, $dims)"))
-      .localCheckpoint() // sketch once per side (round-2 sketch rule)
+      .withColumn("sketch", expr(s"graft_signsketch(__v$side, $sketchBits, $dims)")))
       .select(col(s"${side}_id"), col(s"__v$side"), col("sketch"),
         explode(sequence(lit(0), lit(bands - 1))).as("c"))
       .withColumn("chunk", expr(s"shiftright(sketch, CAST($cb * c AS INT)) & $mask"))
@@ -1159,11 +1157,10 @@ object DedupOps {
     // p03, the entire surv2 anti-join chain underneath it) executed
     // twice, and the projections defeat ReuseExchange (round-18, guide
     // §1.2 step 1; values bit-identical)
-    val d = graft.Checkpoints.register(docs
+    val d = graft.Checkpoints.stabilize(docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= w)
-      .withColumn("n_tokens", size(col("ws")).cast("long"))
-      .localCheckpoint(eager = false))
+      .withColumn("n_tokens", size(col("ws")).cast("long")), eager = false)
     val wins = d
       .withColumn("p", explode(sequence(lit(0), (col("n_tokens") - w).cast("int"))))
       .withColumn("h", hash60(concat_ws(" ", slice(col("ws"), col("p") + 1, lit(w)))))
@@ -1505,12 +1502,11 @@ object DedupOps {
     // made the round-17 dropNear checkpoint a loss no longer exists to
     // be broken — without the checkpoint the band self-join chain would
     // execute once per plan (round-18; values bit-identical).
-    val dropNear = graft.Checkpoints.register(
+    val dropNear = graft.Checkpoints.stabilize(
       minhashPairsOf(surv1, "doc_id", "text", shingleN = 3, k = 8, bands = 4)
         .filter(col("est_sim") >= 0.5)
         .select(col("doc_b").as("doc_id")).distinct()
-        .withColumn("__near", lit(1))
-        .localCheckpoint(eager = false))
+        .withColumn("__near", lit(1)), eager = false)
     val surv2 = surv1.join(dropNear, Seq("doc_id"), "left")
       .filter(col("__near").isNull)
       .select(col("doc_id"), col("text"))

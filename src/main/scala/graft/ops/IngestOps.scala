@@ -202,9 +202,8 @@ object IngestOps {
     // the report is top-20-sized: checkpoint it EAGERLY so the whole
     // temp tree (landing + store + ckpt + report) can be deleted now —
     // repeated Verify/Bench cycles must not accumulate /tmp garbage
-    val out = s.read.parquet(s"$base/report")
-      .orderBy(col("ts_ms").desc, col("symbol"))
-      .localCheckpoint(eager = true)
+    val out = graft.Checkpoints.stabilize(s.read.parquet(s"$base/report")
+      .orderBy(col("ts_ms").desc, col("symbol")))
     deleteRecursively(new java.io.File(base))
     out
   }

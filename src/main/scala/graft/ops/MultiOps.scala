@@ -819,12 +819,9 @@ object MultiOps {
     // ent feeds BOTH the QC-survivor filter and the final verdict join
     // — checkpoint the (vid, entropy) rows so the byte-histogram chain
     // runs once, not per reference (round-17; bit-identical).
-    // Registered (round-18, the round-17 advice): scoped callers
-    // reclaim the blocks instead of pinning them until session end.
-    val ent = graft.Checkpoints.register(
+    val ent = graft.Checkpoints.stabilize(
       byteEntropyOf(aug, "doc_id", "payload")
-        .select(col("doc_id").as("vid"), col("entropy_bits"))
-        .localCheckpoint())
+        .select(col("doc_id").as("vid"), col("entropy_bits")))
     val pass = aug.select(col("doc_id").as("vid"), col("payload"))
       .join(ent, "vid").filter(col("entropy_bits") >= 3.0)
     val pairs = keyframeDupPairsOf(

@@ -327,7 +327,7 @@ object ParScanOps {
       }
       // eager checkpoint: both passes fully run against the persisted
       // block, which the finally-unpersist below then releases
-      spark.createDataset(outRdd).localCheckpoint(eager = true)
+      graft.Checkpoints.stabilize(spark.createDataset(outRdd))
     } finally rdd.unpersist(blocking = false)
   }
 
@@ -485,7 +485,7 @@ object ParScanOps {
           (k, t, i, xh, p)
         }
       }
-      spark.createDataset(outRdd).localCheckpoint(eager = true)
+      graft.Checkpoints.stabilize(spark.createDataset(outRdd))
         .toDF(key, "ts_ms", tie, "level", "variance")
     } finally rdd.unpersist(blocking = false)
   }

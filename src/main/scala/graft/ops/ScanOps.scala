@@ -128,7 +128,7 @@ object ScanOps {
         val pruned = df.select(needed.distinct.map(col): _*)
         val snap =
           if (lineageIsCheap(pruned)) pruned
-          else pruned.localCheckpoint(eager = false)
+          else graft.Checkpoints.stabilize(pruned, eager = false)
         val longest = snap.groupBy(col(key)).count()
           .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
         if (longest <= thr) { seqDispatches.incrementAndGet(); seq(snap) }

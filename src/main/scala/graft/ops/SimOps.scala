@@ -250,20 +250,6 @@ object SimOps {
     * route-parity spec pins both paths on one corpus by moving it.) */
   private[graft] var HierAsgThreshold = 256
 
-  /** localCheckpoint that deliberately DROPS the origin plan's
-    * statistics and constraints: Spark 4.1's `LogicalRDD` carries the
-    * checkpointed plan's constraints rewritten to the new output, and
-    * a Union over such leaves inside a deep composed plan can crash
-    * constraint rewriting with `key not found: attr#N` (observed at
-    * probe scale in the tick's delete+insert composition; AQE
-    * re-optimization walks the constraints the gate-scale plan never
-    * touches). Round-tripping through an `RDD[Row]` yields a clean
-    * leaf with the same materialize-once behavior. */
-  private[graft] def freshCheckpoint(df: DataFrame, eager: Boolean): DataFrame = {
-    val ck = graft.Checkpoints.register(df.localCheckpoint(eager))
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** Shared cell-assignment kernel of [[knnGraphOf]] and
     * [[graphInsertOf]]: each node of `v` → its `cellProbes` nearest
     * centroid cells (exact brute rank under [[HierAsgThreshold]]
@@ -435,8 +421,7 @@ object SimOps {
     // withV feeds both self-join sides (the a-side scan AND the capped
     // rep window) — checkpoint so the asg⋈vector join runs once
     // (round-17; bit-identical)
-    val withV = graft.Checkpoints.register(
-      asg.join(v, "vec_id").localCheckpoint(eager = false))
+    val withV = graft.Checkpoints.stabilize(asg.join(v, "vec_id"), eager = false)
     val wCell = Window.partitionBy(col("cell"))
       .orderBy(graft.F.hash60(concat(lit("s20cap:"), col("vec_id").cast("string"))),
         col("vec_id"))
@@ -470,7 +455,7 @@ object SimOps {
     // round's fresh scores once instead of re-embedding the subtree
     // per reference (values bit-identical)
     def shared(df: DataFrame): DataFrame =
-      graft.Checkpoints.register(df.localCheckpoint(eager = false))
+      graft.Checkpoints.stabilize(df, eager = false)
     var scored = if (descentRounds > 0) shared(scored0) else scored0
     var edges = topR(scored)
     var round = 0
@@ -557,7 +542,7 @@ object SimOps {
     val anc = broadcast(anchors.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("av")))
     def shared(df: DataFrame): DataFrame =
-      if (share) graft.Checkpoints.register(df.localCheckpoint(eager = false)) else df
+      if (share) graft.Checkpoints.stabilize(df, eager = false) else df
     val wEnt = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     val entry = shared(q.crossJoin(anc)
       .withColumn("cos", expr("graft_cosine(qv, av)"))
@@ -780,7 +765,7 @@ object SimOps {
     // asgD is referenced three times (deltaCells, the rep-pool union,
     // the cellPairs x-side) — un-checkpointed, the delta×centroid
     // cosine rank re-ran per reference (round-17; bit-identical)
-    val asgD = freshCheckpoint(
+    val asgD = graft.Checkpoints.fresh(
       cellAsgOf(vD, cents, cellProbes).join(vD, "vec_id"), eager = false)
     val deltaCells = asgD.select(col("cell")).distinct()
     val asgCFull =
@@ -796,7 +781,7 @@ object SimOps {
     // repsAll is referenced three times (cellPairs y-side, repsD,
     // repsC) — checkpoint so the per-cell cap window and its corpus
     // semi-join input run once (round-17; bit-identical)
-    val repsAll = freshCheckpoint(
+    val repsAll = graft.Checkpoints.fresh(
       asgC.unionByName(asgD.select(col("vec_id"), col("cell"), col("v")))
         .withColumn("__crn", row_number().over(wCell))
         .filter(col("__crn") <= maxCellOcc).drop("__crn"), eager = false)
@@ -809,7 +794,7 @@ object SimOps {
     // the delta lists are referenced by the reverse challenge, the
     // affected-src set AND the final union — checkpoint once so the
     // deep beam-search plan underneath isn't replanned per reference
-    val newOut = freshCheckpoint(
+    val newOut = graft.Checkpoints.fresh(
       topRDedup(deltaOld.union(cellPairs), r), eager = false)
     // repair (a): reversed new edges challenge their targets' lists
     val rev = newOut.select(col("dst").as("src"), col("src").as("dst"), col("cos"))
@@ -828,8 +813,8 @@ object SimOps {
       .filter(col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"),
         expr("graft_cosine(x.v, y.v)").as("cos"))
-    val challenges = freshCheckpoint(rev.union(abPairs), eager = false)
-    val affected = freshCheckpoint(newOut.select(col("src"))
+    val challenges = graft.Checkpoints.fresh(rev.union(abPairs), eager = false)
+    val affected = graft.Checkpoints.fresh(newOut.select(col("src"))
       .union(challenges.select(col("src"))).distinct(), eager = false)
     // broadcast the delta-bounded affected set into the re-rank base's
     // semi join — the edge list is scanned, never exchanged (§3.1)
@@ -898,7 +883,7 @@ object SimOps {
     val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     // the delete set feeds six anti/semi joins below — checkpoint so
     // its distinct's exchange runs once (round-17; bit-identical)
-    val del = freshCheckpoint(
+    val del = graft.Checkpoints.fresh(
       deleted.select(col(idCol).as("vec_id")).distinct(), eager = false)
     val e = edges.select(col("src"), col("dst"), col("cos"))
     // ONE tagged pass over the edge list (round-18, guide §1.2 step 1):
@@ -911,7 +896,7 @@ object SimOps {
     // are literal anti/semi semantics — and each view is a projection of
     // the one checkpointed tagged frame (round-17's live/severed
     // checkpoints subsumed; values bit-identical).
-    val tagged = freshCheckpoint(e
+    val tagged = graft.Checkpoints.fresh(e
       .join(del.select(col("vec_id").as("src"), lit(true).as("__sdel")),
         Seq("src"), "left")
       .join(del.select(col("vec_id").as("dst"), lit(true).as("__ddel")),
@@ -947,7 +932,7 @@ object SimOps {
     // corpus is now only scanned, never exchanged, by the stitch
     // scoring (values unchanged — broadcast is a strategy hint).
     val sevSrcs = severed.select(col("p").as("src")).distinct()
-    val liveSev = freshCheckpoint(
+    val liveSev = graft.Checkpoints.fresh(
       live.join(broadcast(sevSrcs), Seq("src"), "left_semi"), eager = false)
     val stitch = severed.join(outgoing, "d")
       .filter(col("p") =!= col("x"))
@@ -992,9 +977,8 @@ object SimOps {
   private val s20: Q = (s, dir) => {
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
-    val edges = knnGraphOf(all, anchors, "vec_id", "v",
-      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1)
-      .localCheckpoint(eager = false)
+    val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v",
+      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1), eager = false)
     graphAnnOf(all, all.filter(col("vec_id") < 5), anchors,
         edges, "vec_id", "v", k = K, beam = 4, hops = 3)
       .select(col("q_id"), col("rank"), col("vec_id"), r6(col("cos")).as("cos_sim"))
@@ -1050,9 +1034,8 @@ object SimOps {
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
     val corpus = all.select(col("vec_id"), col("v"))
     val anchors = corpus.filter(pmod(col("vec_id"), lit(64)) === 0)
-    val edges = knnGraphOf(corpus, anchors, "vec_id", "v",
-      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1)
-      .localCheckpoint(eager = false)
+    val edges = graft.Checkpoints.stabilize(knnGraphOf(corpus, anchors, "vec_id", "v",
+      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1), eager = false)
     filteredAnnOf(corpus, corpus.filter(col("vec_id") < 5), anchors, edges,
         "vec_id", "v", all.filter(col("label") === 1), k = K, beam = 40, hops = 3)
       .join(all.select(col("vec_id"), col("label")), "vec_id")
@@ -1082,10 +1065,9 @@ FROM fr WHERE rank <= $K ORDER BY q_id, rank"""
   private val s29: Q = (s, dir) => {
     val all = t(s, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
-    val edges = labeledGraphOf(all, "vec_id", "v", "label", r = 8,
+    val edges = graft.Checkpoints.stabilize(labeledGraphOf(all, "vec_id", "v", "label", r = 8,
       cellProbes = 2, descentRounds = 1)
-      .filter(col("label") === 1).select(col("src"), col("dst"), col("cos"))
-      .localCheckpoint(eager = false)
+      .filter(col("label") === 1).select(col("src"), col("dst"), col("cos")), eager = false)
     val slice = all.filter(col("label") === 1)
       .select(col("vec_id"), col("v"), col("label").as("__lbl"))
     val anchors = labelAnchorsOf(slice, 64).select(col("vec_id"), col("v"))
@@ -1260,11 +1242,11 @@ ORDER BY q_id, rank"""
   private val s21: Q = (s, dir) => {
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
-    val edges = knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1).localCheckpoint(eager = false)
+    val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
+      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
     val q = all.filter(col("vec_id") < 5)
-    val brute = graft.Graft.knnBrute(all, q, "vec_id", "v", K)
-      .select(col("q_id"), col("vec_id")).localCheckpoint(eager = false)
+    val brute = graft.Checkpoints.stabilize(graft.Graft.knnBrute(all, q, "vec_id", "v", K)
+      .select(col("q_id"), col("vec_id")), eager = false)
     // ONE shared beam chain serves all three frontier points (the
     // prefix-invariance the oracle already exploits): element h of
     // [[beamScoredByHop]] IS the `hops = h` search's scored set, so the
@@ -1330,8 +1312,8 @@ ORDER BY q_id, rank"""
     val a = all.filter(pmod(col("vec_id"), lit(10)) =!= 9)
     val b = all.filter(pmod(col("vec_id"), lit(10)) === 9)
     val anchors = a.filter(pmod(col("vec_id"), lit(64)) === 0)
-    val edges = knnGraphOf(a, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1).localCheckpoint(eager = false)
+    val edges = graft.Checkpoints.stabilize(knnGraphOf(a, anchors, "vec_id", "v", "vec_id", "v",
+      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
     graphInsertOf(a, b, edges, anchors, anchors, "vec_id", "v",
       r = 8, beam = 4, hops = 3)
       .select(col("src"), col("dst"), r6(col("cos")).as("cos_sim"))
@@ -1409,8 +1391,8 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin ORDER BY src, dst"""
   private val s27: Q = (s, dir) => {
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
-    val edges = knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1).localCheckpoint(eager = false)
+    val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
+      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
     val del = all.filter(pmod(col("vec_id"), lit(10)) === 9)
     graphDeleteOf(all, del, edges, "vec_id", "v", r = 8)
       .select(col("src"), col("dst"), r6(col("cos")).as("cos_sim"))
@@ -1490,11 +1472,11 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
   private val s22: Q = (s, dir) => {
     val all = vecs(s, dir)
     val n = 20
-    val cand = graft.Graft.knnBrute(all, all.filter(col("vec_id") < 5), "vec_id", "v", n)
-      .select(col("q_id"), col("vec_id"), col("cos_sim").as("rel"))
-      .join(all, Seq("vec_id"))
-      .select(col("q_id"), col("vec_id"), col("rel"), col("v"))
-      .localCheckpoint(eager = false)
+    val cand = graft.Checkpoints.stabilize(
+      graft.Graft.knnBrute(all, all.filter(col("vec_id") < 5), "vec_id", "v", n)
+        .select(col("q_id"), col("vec_id"), col("cos_sim").as("rel"))
+        .join(all, Seq("vec_id"))
+        .select(col("q_id"), col("vec_id"), col("rel"), col("v")), eager = false)
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("__score").desc, col("vec_id"))
     def pick(scored: DataFrame, round: Int): DataFrame =
@@ -1502,8 +1484,8 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         .filter(col("__rn") === 1)
         .select(col("q_id"), lit(round.toLong).as("round"), col("vec_id"),
           col("rel"), col("__score").as("mmr_score"), col("v"))
-    var acc = pick(cand.withColumn("__score", lit(0.7) * col("rel")), 1)
-      .localCheckpoint(eager = false)
+    var acc = graft.Checkpoints.stabilize(
+      pick(cand.withColumn("__score", lit(0.7) * col("rel")), 1), eager = false)
     for (t <- 2 to K) {
       val rem = cand.join(acc.select(col("q_id"), col("vec_id")),
         Seq("q_id", "vec_id"), "left_anti")
@@ -1513,7 +1495,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         .groupBy(col("q_id"), col("vec_id")).agg(max(col("__sim")).as("__maxsim"))
       val scored = rem.join(ms, Seq("q_id", "vec_id"))
         .withColumn("__score", lit(0.7) * col("rel") - lit(0.3) * col("__maxsim"))
-      acc = acc.unionByName(pick(scored, t)).localCheckpoint(eager = false)
+      acc = graft.Checkpoints.stabilize(acc.unionByName(pick(scored, t)), eager = false)
     }
     acc.select(col("q_id"), col("round"), col("vec_id"),
         r6(col("mmr_score")).as("mmr_score"), r6(col("rel")).as("rel"))
@@ -1921,10 +1903,10 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
   def aucOf(df: DataFrame, scoreCol: String, labelCol: String,
             tieCol: String, buckets: Int = 256): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val in = df.select(col(scoreCol).cast("double").as("__s"),
+    // three passes (stats, offsets, rank)
+    val in = graft.Checkpoints.stabilize(df.select(col(scoreCol).cast("double").as("__s"),
         col(labelCol).cast("boolean").as("__y"), col(tieCol).as("__tie"))
-      .filter(col("__s").isNotNull && !isnan(col("__s")) && col("__y").isNotNull)
-      .localCheckpoint(true) // three passes (stats, offsets, rank)
+      .filter(col("__s").isNotNull && !isnan(col("__s")) && col("__y").isNotNull))
     try {
       // DISTRIBUTED exact global rank — never a partitionless window
       // (that funnels the corpus through ONE task): range-bucket by
@@ -1952,7 +1934,8 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         col("__b"))
       val rnk = offCol + row_number().over(
         Window.partitionBy(col("__b")).orderBy(col("__s"), col("__tie"))).cast("long")
-      withB
+      // the one-row result outlives in's storage
+      graft.Checkpoints.stabilize(withB
         .withColumn("__r", rnk)
         .agg(
           sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"),
@@ -1964,8 +1947,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
             (col("__rs").cast("double") -
               col("n_pos").cast("double") * (col("n_pos").cast("double") + lit(1.0)) / lit(2.0)) /
               (col("n_pos").cast("double") * col("n_neg").cast("double")))
-            .as("auc"))
-        .localCheckpoint(true) // the one-row result outlives in's storage
+            .as("auc")))
     } finally graft.Checkpoints.free(in)
   }
 
@@ -2018,10 +2000,9 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
   def calibrationOf(df: DataFrame, scoreCol: String, labelCol: String,
                     tieCol: String, bins: Int = 10): DataFrame = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
-    val in = df.select(col(scoreCol).cast("double").as("__s"),
+    val in = graft.Checkpoints.stabilize(df.select(col(scoreCol).cast("double").as("__s"),
         col(labelCol).cast("boolean").as("__y"), col(tieCol).as("__tie"))
-      .filter(col("__s").isNotNull && !isnan(col("__s")) && col("__y").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("__s").isNotNull && !isnan(col("__s")) && col("__y").isNotNull))
     try {
       val r = in.agg(min(col("__s")), max(col("__s"))).collect()(0)
       require(!r.isNullAt(0),
@@ -2032,7 +2013,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         floor((col("__s") - lit(lo)) / lit(width)).cast("int"))).as("bin")
       val ord = Window.partitionBy(col("bin")).orderBy(col("__s"), col("__tie"))
       val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      in.withColumn("bin", bin)
+      graft.Checkpoints.stabilize(in.withColumn("bin", bin)
         .withColumn("__rn", row_number().over(ord))
         .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("bin"))))
         .withColumn("__np", sum(when(col("__y"), 1L).otherwise(0L)).over(
@@ -2042,8 +2023,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         .select(col("bin"), col("__n").as("n"), col("__np").as("n_pos"),
           (col("__cs") / col("__n").cast("double")).as("mean_score"),
           (col("__np").cast("double") / col("__n").cast("double")).as("frac_pos"))
-        .orderBy("bin")
-        .localCheckpoint(true)
+        .orderBy("bin"))
     } finally graft.Checkpoints.free(in)
   }
 
@@ -2118,7 +2098,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
       .select(col(idCol).as("__id"), col("cluster"))
     val v = vecs.select(col(idCol).as("__id"),
       col(vecCol).cast("array<double>").as("__v"))
-    val av = assigned.join(v, "__id").localCheckpoint(true)
+    val av = graft.Checkpoints.stabilize(assigned.join(v, "__id"))
     val a = av.select(col("__id").as("__ia"), col("cluster"), col("__v").as("__va"))
     val b = av.select(col("__id").as("__ib"), col("cluster"), col("__v").as("__vb"))
     val dropped = a.join(b, Seq("cluster"))
@@ -2459,15 +2439,14 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
     * asserts the output is hash-identical to the plain layout while
     * the id-sliced scans prune). */
   def retrievalPipelineOf(all: DataFrame): DataFrame = {
-    val sv = all.join(
+    val sv = graft.Checkpoints.stabilize(all.join(
         semDedupOf(all, "vec_id", "v", dims = 64, k = 8, iters = 2, threshold = 0.45)
           .filter(col("is_kept")).select("vec_id"),
-        "vec_id")
-      .localCheckpoint(true)
+        "vec_id"))
     val q = all.filter(col("vec_id") < 5)
-    val hits = ivfAnnOf(sv, q, sv.filter(col("vec_id") < 8), "vec_id", "v",
-        "vec_id", "v", k = K, probes = 2)
-      .localCheckpoint(true)
+    val hits = graft.Checkpoints.stabilize(
+      ivfAnnOf(sv, q, sv.filter(col("vec_id") < 8), "vec_id", "v",
+        "vec_id", "v", k = K, probes = 2))
     val brute = graft.Graft.knnBrute(sv, q, "vec_id", "v", K)
       .select(col("q_id"), col("vec_id"))
     val recall = brute

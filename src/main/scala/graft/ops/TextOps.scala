@@ -395,13 +395,13 @@ object TextOps {
     // the bigram stream feeds BOTH the model counts and the scoring
     // join; the barrier stops the tokenize+explode from running twice
     // (no cross-side common-subtree elimination in Catalyst)
-    val bg = docs.select(col(idCol).as("doc_id"), words(col(textCol)).as("__ws"))
+    val bg = graft.Checkpoints.stabilize(docs
+      .select(col(idCol).as("doc_id"), words(col(textCol)).as("__ws"))
       .filter(size(col("__ws")) >= 2)
       .select(col("doc_id"), posexplode(expr(
         "transform(sequence(0, size(__ws)-2), i -> struct(__ws[i] AS w1, __ws[i+1] AS w2))"))
         .as(Seq("pos", "__bg")))
-      .select(col("doc_id"), col("pos"), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("pos"), col("__bg.w1").as("w1"), col("__bg.w2").as("w2")))
     val counts = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       .withColumn("c1", sum(col("c12")).over(Window.partitionBy(col("w1"))))
     val vocab = counts.agg(count_distinct(col("w2")).as("__v"))
@@ -634,14 +634,13 @@ object TextOps {
       .join(ph, Seq("doc_id", "grp"))
     val rank = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("phrase"))
-    try scored
+    try graft.Checkpoints.stabilize(scored
       .groupBy(col("doc_id"), col("phrase"), col("len"))
       .agg(max(col("cscore")).as("score"), count(lit(1)).as("n_occurrences"))
       .withColumn("rank", row_number().over(rank).cast("long"))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("phrase"),
-        col("len").as("n_words"), col("n_occurrences"), col("score"))
-      .localCheckpoint(eager = true)
+        col("len").as("n_words"), col("n_occurrences"), col("score")))
     finally cw.unpersist()
   }
 
@@ -724,10 +723,9 @@ object TextOps {
     require(kGram >= 1 && window >= 1, s"kGram/window must be >= 1, got $kGram/$window")
     require(minOverlap > 0 && minOverlap <= 1, s"minOverlap must be in (0,1], got $minOverlap")
     require(maxDf >= 2, s"maxDf must be >= 2 (a pair needs 2 docs), got $maxDf")
-    val ex0 = docs.filter(length(col(text)) >= kGram + window - 1)
+    val ex0 = graft.Checkpoints.stabilize(docs.filter(length(col(text)) >= kGram + window - 1)
       .select(col(id).as("__id"),
-        explode(expr(s"graft_winnow_set($text, $kGram, $window)")).as("__fp"))
-      .localCheckpoint()
+        explode(expr(s"graft_winnow_set($text, $kGram, $window)")).as("__fp")))
     // per-doc sets are distinct, so count(*) per fingerprint IS its df
     val rare = ex0.groupBy(col("__fp")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf)
@@ -735,9 +733,8 @@ object TextOps {
     // the filtered+counted side feeds BOTH halves of the pair join:
     // checkpoint it so the df-filter join and the per-doc window run
     // once, not once per side (same rule as ex0 above)
-    val ex = ex0.join(rare, Seq("__fp"))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__id"))))
-      .localCheckpoint()
+    val ex = graft.Checkpoints.stabilize(ex0.join(rare, Seq("__fp"))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__id")))))
     val a = ex.select(col("__fp"), col("__id").as("doc_a"), col("__n").as("__na"))
     val b = ex.select(col("__fp"), col("__id").as("doc_b"), col("__n").as("__nb"))
     a.join(b, Seq("__fp"))
@@ -1226,12 +1223,11 @@ object TextOps {
       // score the WHOLE corpus with the fitted weights; y rides along
       // left-joined so unlabeled docs keep score but null y/correct.
       // Materialize before the cache drops (the t25 finally-unpersist rule).
-      scored(x, w)
+      graft.Checkpoints.stabilize(scored(x, w)
         .join(lab, Seq("doc_id"), "left")
         .withColumn("predicted", col("score") >= 0)
         .withColumn("correct", (col("score") >= 0) === (col("y") > 0))
-        .select(col("doc_id"), col("y"), col("score"), col("predicted"), col("correct"))
-        .localCheckpoint(eager = true)
+        .select(col("doc_id"), col("y"), col("score"), col("predicted"), col("correct")))
     } finally xy.unpersist()
   }
 

@@ -59,14 +59,13 @@ object MergeWriter {
       .drop("__prio", "__rn")
 
     // cut lineage before overwriting the very partitions being read
-    val out = merged.localCheckpoint(eager = true)
-    try {
-      out.write
+    graft.Checkpoints.scoped {
+      graft.Checkpoints.stabilize(merged).write
         .mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCol)
         .parquet(path)
-    } finally graft.Checkpoints.free(out)
+    }
     impacted
   }
 
@@ -148,14 +147,13 @@ object MergeWriter {
       // rename the directory on write (`day=007` read as int 7 → `day=7`)
       val part = prunedRead(spark, path, partitionCol, Seq(value)).get
         .withColumn(partitionCol, lit(value))
-      val out = part.coalesce(nFiles).localCheckpoint(eager = true)
-      try {
-        out.write
+      graft.Checkpoints.scoped {
+        graft.Checkpoints.stabilize(part.coalesce(nFiles)).write
           .mode(SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partitionCol)
           .parquet(path)
-      } finally graft.Checkpoints.free(out)
+      }
     }
     fragmented.map(_._1)
   }

@@ -136,15 +136,15 @@ object VersionedStore {
       .select(dataCols.map(col): _*).withColumn("__op", lit("d"))
     // materialize ONCE: the emptiness probe and the write would
     // otherwise each run the full reconstruction + diff pipeline
-    val delta = upserts.unionByName(deletes).localCheckpoint(true)
-    try {
+    graft.Checkpoints.scoped {
+      val delta = graft.Checkpoints.stabilize(upserts.unionByName(deletes))
       if (delta.isEmpty) vs.last
       else {
         val next = vs.last + 1
         writeVersion(spark, path, delta, next)
         next
       }
-    } finally graft.Checkpoints.free(delta)
+    }
   }
 
   /** Reconstruct version `version` exactly: fold the deltas since the
@@ -172,10 +172,11 @@ object VersionedStore {
   def checkpoint(spark: SparkSession, path: String, keys: Seq[String]): Int = {
     val vs = versions(spark, path)
     require(vs.nonEmpty, "nothing committed yet")
-    val cur = read(spark, path, vs.last, keys).localCheckpoint(true)
     val next = vs.last + 1
-    try writeVersion(spark, path, cur.withColumn("__op", lit("u")), next)
-    finally graft.Checkpoints.free(cur)
+    graft.Checkpoints.scoped {
+      val cur = graft.Checkpoints.stabilize(read(spark, path, vs.last, keys))
+      writeVersion(spark, path, cur.withColumn("__op", lit("u")), next)
+    }
     fs(spark, path).create(new Path(path, s"_ck_$next"), true).close()
     next
   }

@@ -936,14 +936,13 @@ object StreamOps {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          sketchProfileTick(spark, storePath, batch, keys, distinctCol,
-            valueCol, width, batchId)
-          val rep = sketchProfileReport(spark, storePath, keys, width, qs)
-            .localCheckpoint(eager = true)
-          try rep.write.mode("overwrite").parquet(reportPath)
-          finally graft.Checkpoints.free(rep)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            sketchProfileTick(spark, storePath, batch, keys, distinctCol,
+              valueCol, width, batchId)
+            graft.Checkpoints.stabilize(sketchProfileReport(spark, storePath, keys, width, qs))
+              .write.mode("overwrite").parquet(reportPath)
+          }
         }
       }
       .start()
@@ -1056,9 +1055,9 @@ object StreamOps {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          bloomTick(spark, storePath, batch, textCol, mBits, kHashes, batchId)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty)
+            bloomTick(spark, storePath, batch, textCol, mBits, kHashes, batchId)
         }
       }
       .start()
@@ -1180,14 +1179,14 @@ object StreamOps {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          ohlcTick(spark, storePath, batch, keys, tsCol, idCol, valueCol,
-            unit, batchId)
-          val rep = ohlcStoreReport(spark, storePath, keys)
-            .localCheckpoint(eager = true)
-          try graft.sinks.AtomicReport.publish(rep, reportPath, batchId)
-          finally graft.Checkpoints.free(rep)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            ohlcTick(spark, storePath, batch, keys, tsCol, idCol, valueCol,
+              unit, batchId)
+            graft.sinks.AtomicReport.publish(
+              graft.Checkpoints.stabilize(ohlcStoreReport(spark, storePath, keys)),
+              reportPath, batchId)
+          }
         }
       }
       .start()
@@ -1246,8 +1245,8 @@ object StreamOps {
     // materialized once: the merged plan (scan + distinct + window)
     // feeds BOTH the per-group aggregate and the final join — lazy, it
     // would run twice per report; the state is ≤ k rows per group
-    val merged = graft.sinks.SketchStore.mergedBottomK(spark, storePath, keys, k)
-      .localCheckpoint(eager = true)
+    val merged = graft.Checkpoints.stabilize(
+      graft.sinks.SketchStore.mergedBottomK(spark, storePath, keys, k))
     val g = merged.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_kept"), max(col("h")).as("__hk"))
       .withColumn("__est",
@@ -1276,13 +1275,13 @@ object StreamOps {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          sampleTick(spark, storePath, batch, keys, valueCol, k, batchId)
-          val rep = sampleStoreReport(spark, storePath, keys, k)
-            .localCheckpoint(eager = true)
-          try graft.sinks.AtomicReport.publish(rep, reportPath, batchId)
-          finally graft.Checkpoints.free(rep)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            sampleTick(spark, storePath, batch, keys, valueCol, k, batchId)
+            graft.sinks.AtomicReport.publish(
+              graft.Checkpoints.stabilize(sampleStoreReport(spark, storePath, keys, k)),
+              reportPath, batchId)
+          }
         }
       }
       .start()
@@ -1477,8 +1476,7 @@ object StreamOps {
     * 0.0, spec-pinned). */
   def annAsgDrift(spark: SparkSession, storePath: String,
                   anchorMod: Int = 64): DataFrame = {
-    val live = graft.ops.SimOps.freshCheckpoint(
-      annLiveVectors(spark, storePath), eager = true)
+    val live = graft.Checkpoints.fresh(annLiveVectors(spark, storePath), eager = true)
     val fresh = freshAsgOf(live, anchorMod)
     val stored = mergedAsg(spark, storePath, Long.MaxValue)
       .join(live.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -1570,10 +1568,10 @@ object StreamOps {
     // both repair unions) — checkpoint once so the source scan (+ the
     // delete distinct's exchange) runs once, not per reference
     // (round-17, guide §1.2 step 1; values bit-identical)
-    val b = SimOps.freshCheckpoint(batch.select(col(idCol).as("vec_id"),
+    val b = graft.Checkpoints.fresh(batch.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("v")), eager = true)
     val delIds = if (deletes == null) null
-      else SimOps.freshCheckpoint(
+      else graft.Checkpoints.fresh(
         deletes.select(col(idCol).as("vec_id")).distinct(), eager = true)
     def anchorsOf(df: DataFrame): DataFrame =
       df.filter(pmod(col("vec_id"), lit(anchorMod.toLong)) === 0)
@@ -1597,7 +1595,7 @@ object StreamOps {
     // tick lands anything
     val priorLive0: DataFrame =
       if (priorLandings.isEmpty) null
-      else SimOps.freshCheckpoint(
+      else graft.Checkpoints.fresh(
         annLiveVectors(spark, storePath, landingId), eager = false)
     val nDeletes = if (delIds == null) 0L else delIds.count()
     val nBatch = b.count()
@@ -1633,7 +1631,7 @@ object StreamOps {
         val anc = anchorsOf(b)
         // assignment computed ONCE (landed + fed to the build — the
         // hierarchical ranking is the build's widest shuffle)
-        val asg0 = SimOps.freshCheckpoint(asgOf(b, anc), eager = true)
+        val asg0 = graft.Checkpoints.fresh(asgOf(b, anc), eager = true)
         landAsync(graft.sinks.AnnStore.land(spark, storePath, "asg", asg0,
           landingId, "vec_id"))
         SimOps.knnGraphOf(b, anc, "vec_id", "v", "vec_id", "v",
@@ -1643,7 +1641,7 @@ object StreamOps {
         // unions — checkpoint them once per tick so their window plans
         // don't re-execute per reference (the graphAnnOf contract)
         val priorLive = priorLive0
-        val priorEdges = SimOps.freshCheckpoint(
+        val priorEdges = graft.Checkpoints.fresh(
           annIndexReportWith(spark, storePath, landingId,
             liveVectors = priorLive0), eager = false)
         val (survivors, edgesAfterDel, changedDel) =
@@ -1658,7 +1656,7 @@ object StreamOps {
             // sidestepped composed two LAZY window plans; both union
             // children here hang off LogicalRDDs (checkpoint plans),
             // which is exactly the shape the insert path already runs.
-            val cd = SimOps.freshCheckpoint(
+            val cd = graft.Checkpoints.fresh(
               SimOps.graphDeleteDeltaOf(priorLive, delIds, priorEdges,
                 "vec_id", "v", r = r), eager = true)
             // LAZY checkpoint on the union view (round-17): the insert
@@ -1676,7 +1674,7 @@ object StreamOps {
             // joins sort-merge-shuffled the whole prior INDEX (and the
             // live corpus) per delete tick; hinted, both are scanned
             // against broadcast probes
-            val after = SimOps.freshCheckpoint(
+            val after = graft.Checkpoints.fresh(
               cd.unionByName(priorEdges
                 .join(broadcast(cd.select("src").distinct()), Seq("src"), "left_anti")
                 .join(broadcast(delIds.select(col("vec_id").as("src"))),
@@ -1705,15 +1703,14 @@ object StreamOps {
             // for the anti join) — un-checkpointed, the whole
             // insert-delta tree (top-r dedup over the post-delete
             // union) executed twice per tick (round-17; bit-identical)
-            val ci = SimOps.freshCheckpoint(ci0, eager = false)
+            val ci = graft.Checkpoints.fresh(ci0, eager = false)
             ci.unionByName(changedDel
               .join(broadcast(ci.select("src").distinct()), Seq("src"), "left_anti"))
           }
         }
       }
-    val changedOut = graft.Checkpoints.register(
-      changed.select(col("src"), col("dst"), col("cos"))
-        .localCheckpoint(eager = true))
+    val changedOut = graft.Checkpoints.stabilize(
+      changed.select(col("src"), col("dst"), col("cos")))
     val nChanged = changedOut.count()
     if (nChanged > 0L)
       landAsync(graft.sinks.AnnStore.land(spark, storePath, "edges", changedOut,
@@ -1774,14 +1771,13 @@ object StreamOps {
                       upTo: Long,
                       reassignAnchorMod: Int = 0): Unit = graft.Checkpoints.scoped {
     require(upTo >= 1L, s"upTo must be >= 1, got $upTo")
-    import graft.ops.SimOps
     import graft.sinks.SketchStore.land
     val base = upTo - 1
-    val live = SimOps.freshCheckpoint(
+    val live = graft.Checkpoints.fresh(
       annLiveVectors(spark, storePath, upTo), eager = true)
-    val edges = SimOps.freshCheckpoint(
+    val edges = graft.Checkpoints.fresh(
       annIndexReportWith(spark, storePath, upTo, liveVectors = live), eager = true)
-    val asg = SimOps.freshCheckpoint(
+    val asg = graft.Checkpoints.fresh(
       if (reassignAnchorMod > 0) freshAsgOf(live, reassignAnchorMod)
       else mergedAsg(spark, storePath, upTo)
         .join(live.select("vec_id"), Seq("vec_id"), "left_semi"), eager = true)
@@ -1818,10 +1814,10 @@ object StreamOps {
     vecs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          annIndexTick(spark, storePath, batch, "vec_id", "v",
-            r, beam, hops, batchId)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty)
+            annIndexTick(spark, storePath, batch, "vec_id", "v",
+              r, beam, hops, batchId)
         }
       }
       .start()
@@ -1833,7 +1829,7 @@ object StreamOps {
     * under java.io.tmpdir). The report is pinned to the block manager
     * first, so the returned frame never re-reads the store. */
   private def reportThenDrop(store: String)(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
+    val out = graft.Checkpoints.stabilize(df)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(); ()
@@ -1944,9 +1940,9 @@ object StreamOps {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          termSketchTick(spark, storePath, batch, textCol, rows, width, batchId)
-          ()
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty)
+            termSketchTick(spark, storePath, batch, textCol, rows, width, batchId)
         }
       }
       .start()
@@ -2182,15 +2178,13 @@ object StreamOps {
     * retried first batch heals itself. */
   private[graft] def ingestBatch(spark: SparkSession, batch: DataFrame, storePath: String,
                                  dedup: DataFrame => DataFrame, mergeKeys: Seq[String],
-                                 partitionCol: String): Unit = {
-    val delta = dedup(batch).localCheckpoint(eager = true)
-    try {
-      val impacted = graft.sinks.MergeWriter.merge(spark, storePath, delta, mergeKeys, partitionCol)
-      // small-file maintenance, bounded by the delta's partitions
-      // (the marketTick rule)
-      graft.sinks.MergeWriter.compact(spark, storePath, partitionCol,
-        onlyValues = Some(impacted))
-    } finally graft.Checkpoints.free(delta)
+                                 partitionCol: String): Unit = graft.Checkpoints.scoped {
+    val delta = graft.Checkpoints.stabilize(dedup(batch))
+    val impacted = graft.sinks.MergeWriter.merge(spark, storePath, delta, mergeKeys, partitionCol)
+    // small-file maintenance, bounded by the delta's partitions
+    // (the marketTick rule)
+    graft.sinks.MergeWriter.compact(spark, storePath, partitionCol,
+      onlyValues = Some(impacted))
   }
 
   /** The d13 incremental-dedup daily loop as a CONTINUOUS pipeline —
@@ -2235,24 +2229,21 @@ object StreamOps {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val bs = graft.ops.DedupOps
-            .sigsOf(batch, idCol, textCol, shingleN, k)
-            .localCheckpoint(eager = true)
-          try {
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            val bs = graft.Checkpoints.stabilize(graft.ops.DedupOps
+              .sigsOf(batch, idCol, textCol, shingleN, k))
             val histSchema =
               try Some(spark.read.parquet(historyPath).schema)
               catch { case _: org.apache.spark.sql.AnalysisException => None }
             if (histSchema.exists(sc => !sc.fieldNames.contains("batch_id"))) {
               // legacy raw-doc store: sign it once into batch_id=-1
               // (strictly before any replayable batch)
-              val legacy = graft.ops.DedupOps
+              graft.Checkpoints.stabilize(graft.ops.DedupOps
                 .sigsOf(spark.read.parquet(historyPath), idCol, textCol, shingleN, k)
-                .withColumn("batch_id", lit(-1L))
-                .localCheckpoint(eager = true)
-              try legacy.write.mode("overwrite")
+                .withColumn("batch_id", lit(-1L)))
+                .write.mode("overwrite")
                 .partitionBy("batch_id").parquet(historyPath)
-              finally graft.Checkpoints.free(legacy)
             }
             val hist =
               if (histSchema.isDefined)
@@ -2269,12 +2260,11 @@ object StreamOps {
             if (vfs.exists(vRoot) && vfs.listStatus(vRoot)
                 .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))) {
               val flat = spark.read.parquet(verdictPath)
-              val legacyV = (if (flat.columns.contains("batch_id")) flat
-                             else flat.withColumn("batch_id", lit(-1L)))
-                .localCheckpoint(eager = true)
-              try legacyV.write.mode("overwrite")
+              graft.Checkpoints.stabilize(
+                if (flat.columns.contains("batch_id")) flat
+                else flat.withColumn("batch_id", lit(-1L)))
+                .write.mode("overwrite")
                 .partitionBy("batch_id").parquet(verdictPath)
-              finally graft.Checkpoints.free(legacyV)
             }
             graft.ops.DedupOps
               .incrementalDedupProbeOf(hist, bs, k, bands, threshold)
@@ -2296,7 +2286,7 @@ object StreamOps {
             graft.sinks.MergeWriter.compact(spark, historyPath, "batch_id",
               onlyValues = Some(Seq(batchId)))
             ()
-          } finally graft.Checkpoints.free(bs)
+          }
         }
       }
       .start()
@@ -2380,12 +2370,12 @@ object StreamOps {
     guarded.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val healed = graft.sources.RatesJson
-            .dedupFundingKeepLastSeq(batch, "page_seq")
-            .localCheckpoint(eager = true)
-          try marketTick(spark, storePath, cands, reportPath, spot, healed)
-          finally graft.Checkpoints.free(healed)
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            val healed = graft.Checkpoints.stabilize(graft.sources.RatesJson
+              .dedupFundingKeepLastSeq(batch, "page_seq"))
+            marketTick(spark, storePath, cands, reportPath, spot, healed)
+          }
         }
       }
       .start()
@@ -2406,7 +2396,7 @@ object StreamOps {
     * store. */
   private[graft] def marketTick(spark: SparkSession, storePath: String,
                                 candPath: String, reportPath: String,
-                                spot: DataFrame, healed: DataFrame): Unit = {
+                                spot: DataFrame, healed: DataFrame): Unit = graft.Checkpoints.scoped {
     // the delta's symbol list: a driver-side list bounded by the
     // batch's symbol count, exactly the MergeWriter impacted-partition
     // budget; every store read below filters `isin` on it, so the scans
@@ -2450,39 +2440,34 @@ object StreamOps {
       .select(col("symbol"), col("fundingTime").as("ts"),
         col("fundingRate"), col("markPrice"))
     val wNewest = Window.partitionBy(col("symbol")).orderBy(col("ts_ms").desc)
-    val deltaCands = graft.ops.IngestOps
+    val deltaCands = graft.Checkpoints.stabilize(graft.ops.IngestOps
       .marketCandidatesOf(perpDelta, spot.filter(col("symbol").isin(deltaSyms: _*)))
       // newest 20 per symbol: a global top-20 row is necessarily within
       // its own symbol's newest 20, so the candidate table stays
       // ≤ 20·|symbols| rows while losing no report row ((symbol, ts)
       // is the healed PK — ts_ms is unique within a symbol)
       .withColumn("__rn", row_number().over(wNewest))
-      .filter(col("__rn") <= 20).drop("__rn")
-      .localCheckpoint(eager = true)
-    try {
-      val present = graft.sinks.MergeWriter.partitionValues(deltaCands, "symbol").toSet
-      if (present.nonEmpty)
-        deltaCands.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("symbol").parquet(candPath)
-      // a touched symbol with ZERO candidates left keeps its stale
-      // partition under dynamic overwrite — drop it explicitly
-      // (bounded by the delta's symbol count, like the merge)
-      val stale = deltaSyms.filterNot(present).toSet
-      if (stale.nonEmpty)
-        graft.sinks.PartitionDirs.drop(spark, candPath, "symbol")(stale.contains)
-      // ---- stage 4: global cut from the bounded candidate table ----
-      val stored =
-        try Some(spark.read.parquet(candPath)
-          .withColumn("symbol", col("symbol").cast("string"))
-          .select(reportCols.map(col): _*))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      val report = graft.ops.IngestOps
-        .reportFromCandidates(stored.getOrElse(deltaCands.select(reportCols.map(col): _*)))
-        .localCheckpoint(eager = true)
-      try report.write.mode("overwrite").parquet(reportPath)
-      finally graft.Checkpoints.free(report)
-    } finally graft.Checkpoints.free(deltaCands)
+      .filter(col("__rn") <= 20).drop("__rn"))
+    val present = graft.sinks.MergeWriter.partitionValues(deltaCands, "symbol").toSet
+    if (present.nonEmpty)
+      deltaCands.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("symbol").parquet(candPath)
+    // a touched symbol with ZERO candidates left keeps its stale
+    // partition under dynamic overwrite — drop it explicitly
+    // (bounded by the delta's symbol count, like the merge)
+    val stale = deltaSyms.filterNot(present).toSet
+    if (stale.nonEmpty)
+      graft.sinks.PartitionDirs.drop(spark, candPath, "symbol")(stale.contains)
+    // ---- stage 4: global cut from the bounded candidate table ----
+    val stored =
+      try Some(spark.read.parquet(candPath)
+        .withColumn("symbol", col("symbol").cast("string"))
+        .select(reportCols.map(col): _*))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    graft.Checkpoints.stabilize(graft.ops.IngestOps
+      .reportFromCandidates(stored.getOrElse(deltaCands.select(reportCols.map(col): _*))))
+      .write.mode("overwrite").parquet(reportPath)
   }
 
   /** t22's n-gram novelty as a CONTINUOUS pipeline — the curation twin
@@ -2527,16 +2512,15 @@ object StreamOps {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val grams = batch
-            .select(col(idCol).as("doc_id"), graft.F.words(col(textCol)).as("__ws"))
-            .filter(size(col("__ws")) >= n)
-            .select(col("doc_id"), explode(expr(
-              s"transform(sequence(0, size(__ws)-$n), i -> array_join(slice(__ws, i+1, $n), ' '))")).as("__g"))
-            .select(col("doc_id"), graft.F.hash60(col("__g")).as("__h"))
-            .distinct()
-            .localCheckpoint(eager = true)
-          try {
+        graft.Checkpoints.scoped {
+          if (!batch.isEmpty) {
+            val grams = graft.Checkpoints.stabilize(batch
+              .select(col(idCol).as("doc_id"), graft.F.words(col(textCol)).as("__ws"))
+              .filter(size(col("__ws")) >= n)
+              .select(col("doc_id"), explode(expr(
+                s"transform(sequence(0, size(__ws)-$n), i -> array_join(slice(__ws, i+1, $n), ' '))")).as("__g"))
+              .select(col("doc_id"), graft.F.hash60(col("__g")).as("__h"))
+              .distinct())
             val histSchema =
               try Some(spark.read.parquet(gramStorePath).schema)
               catch { case _: org.apache.spark.sql.AnalysisException => None }
@@ -2548,13 +2532,11 @@ object StreamOps {
             // legacy gram predates any replayable batch, so -1
             // preserves the "strictly before this batch" semantics.
             if (histSchema.exists(s => !s.fieldNames.contains("batch_id"))) {
-              val legacy = spark.read.parquet(gramStorePath)
+              graft.Checkpoints.stabilize(spark.read.parquet(gramStorePath)
                 .select(col("__h")).distinct()
-                .withColumn("batch_id", lit(-1L))
-                .localCheckpoint(eager = true)
-              try legacy.write.mode("overwrite")
+                .withColumn("batch_id", lit(-1L)))
+                .write.mode("overwrite")
                 .partitionBy("batch_id").parquet(gramStorePath)
-              finally graft.Checkpoints.free(legacy)
             }
             val histExists = histSchema.isDefined
             val hist =
@@ -2592,7 +2574,7 @@ object StreamOps {
             graft.sinks.MergeWriter.compact(spark, gramStorePath, "batch_id",
               onlyValues = Some(Seq(batchId)))
             ()
-          } finally graft.Checkpoints.free(grams)
+          }
         }
       }
       .start()

@@ -147,9 +147,9 @@ class Round17Spec extends SparkSpec {
     // a subsequent tick on the repaired store lands bit-identically to
     // the delta computed with a FRESH internal assignment (corpusAsg =
     // null) — the repaired store behaves like one that never drifted
-    val liveC = SimOps.freshCheckpoint(
+    val liveC = graft.Checkpoints.fresh(
       StreamOps.annLiveVectors(spark, store), eager = true)
-    val edgesC = SimOps.freshCheckpoint(
+    val edgesC = graft.Checkpoints.fresh(
       StreamOps.annIndexReport(spark, store), eager = true)
     val anc = liveC.filter(pmod(col("vec_id"), lit(64)) === 0)
     val b2 = all.filter(col("vec_id") >= 440 && col("vec_id") < 480)
