@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** BUCKETED landing store for the continuous ANN index
   * ([[graft.streaming.StreamOps.annIndexTick]]) — the [[BucketedStore]]
@@ -28,13 +29,29 @@ import org.apache.spark.sql.functions._
   * working set; keep it identical across sub-stores, co-location
   * requires equal bucket counts).
   *
+  * Replay idempotency lives in the TABLE: every sub-store is created
+  * with `OPTIONS (partitionOverwriteMode 'dynamic')`, so an overwriting
+  * `insertInto` replaces exactly the landings it writes under ANY
+  * session — the one the caller holds, a `foreachBatch` micro-batch
+  * clone, or a foreign writer on the same session — and no land touches
+  * a session conf. Measured on Spark 4.1.2 (`local[2]`, AQE on):
+  * a writer-level `.option("partitionOverwriteMode", "dynamic")` on
+  * `insertInto` is ignored (a static-session overwrite wiped the other
+  * landing); the table storage property overwrote only its own landing
+  * with the session explicitly `static`, for a table made by either a
+  * CTAS write carrying the option or `CREATE TABLE … OPTIONS`; and
+  * `CREATE TABLE … CLUSTERED BY … LOCATION` succeeds over a directory
+  * that holds only `_SUCCESS`, so a first landing is a plain
+  * `insertInto` too (1 job, bucket-id file names, a co-located join
+  * of two such tables planned 0 Exchanges).
+  *
   * The catalog entry is session-lifetime (in-memory catalog); the
   * FILES are the durable artifact. A fresh session re-registers the
-  * table over the existing files (`CREATE TABLE … LOCATION` + partition
-  * recovery) — bucketed file names carry their bucket id, so the spec
-  * survives re-registration. A legacy (pre-bucketing) store is
-  * detected by its file names and served as a plain parquet read —
-  * correct, just without the co-location. */
+  * table over the existing files (the same `CREATE TABLE … LOCATION`
+  * + partition recovery) — bucketed file names carry their bucket id,
+  * so the spec survives re-registration. A legacy (pre-bucketing)
+  * store is detected by its file names and served as a plain parquet
+  * read — correct, just without the co-location. */
 object AnnStore {
 
   /** Bucket count for every ANN sub-store (equal across stores — a
@@ -58,21 +75,6 @@ object AnnStore {
   private def hasLandings(spark: SparkSession, p: String): Boolean =
     PartitionDirs.list(spark, p, "__landing").nonEmpty
 
-  /** Run `body` with dynamic partition overwrite on, restoring the
-    * prior session value after (insertInto reads the SESSION conf, not
-    * writer options — a writer-level option is silently ignored and
-    * static overwrite would wipe the whole table). */
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** True when the landed files carry bucket ids in their names
     * (`part-NNNNN-uuid_BBBBB.c000…`) — the marker Spark itself uses to
     * map a file to its bucket, so it is exactly the "safe to declare
@@ -85,6 +87,19 @@ object AnnStore {
       }
     }
 
+  /** The one DDL of a sub-store: an external bucketed parquet table
+    * over `p`, partitioned by `__landing` and dynamic-overwrite by its
+    * own storage property (see the object doc). */
+  private def createTable(spark: SparkSession, t: String, p: String,
+                          dataSchema: StructType, bucketCol: String): Unit = {
+    val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+    spark.sql(s"""CREATE TABLE $t ($cols, `__landing` BIGINT)
+      |USING parquet PARTITIONED BY (__landing)
+      |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $Buckets BUCKETS
+      |OPTIONS (partitionOverwriteMode 'dynamic')
+      |LOCATION '$p'""".stripMargin)
+  }
+
   /** Register the catalog table over existing landed files (fresh
     * session reading a durable store). Returns false when the files
     * predate bucketing — the caller falls back to a plain path read. */
@@ -93,104 +108,93 @@ object AnnStore {
     val p = subPath(storePath, sub)
     if (!filesAreBucketed(spark, p)) return false
     val t = tableName(storePath, sub)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      spark.read.parquet(p).schema.filterNot(_.name == "__landing"))
-    val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-    spark.sql(s"""CREATE TABLE $t ($cols, `__landing` BIGINT)
-      |USING parquet PARTITIONED BY (__landing)
-      |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $Buckets BUCKETS
-      |LOCATION '$p'""".stripMargin)
+    createTable(spark, t, p,
+      StructType(spark.read.parquet(p).schema.filterNot(_.name == "__landing")), bucketCol)
     spark.sql(s"MSCK REPAIR TABLE $t")
     true
   }
 
   /** Land one landing of `df` into the `sub` store, bucketed by
-    * `bucketCol` (idempotent per landing id — dynamic overwrite). */
+    * `bucketCol` (idempotent per landing id — the table's dynamic
+    * overwrite). */
   def land(spark: SparkSession, storePath: String, sub: String,
            df: DataFrame, landingId: Long, bucketCol: String): Unit = {
     val t = tableName(storePath, sub)
     val p = subPath(storePath, sub)
-    val out = df.withColumn("__landing", lit(landingId))
-    val inCatalog = spark.catalog.tableExists(t)
-    if (!inCatalog && hasLandings(spark, p) &&
-        !registerOverFiles(spark, storePath, sub, bucketCol)) {
-      // legacy (non-bucketed) files under this path: refuse to mix —
-      // a bucketed table over unbucketed files mis-routes reads
-      throw new IllegalStateException(
-        s"store $p holds pre-bucketing landings; rebuild the store " +
-          "(AnnStore cannot append bucketed landings to legacy files)")
+    val landed = hasLandings(spark, p)
+    // a stale catalog entry whose files are gone (a dropped temp store,
+    // a crash before the first files landed, or a compaction that
+    // dropped every landing) is re-created over the empty directory
+    if (!landed) spark.sql(s"DROP TABLE IF EXISTS $t")
+    if (!spark.catalog.tableExists(t)) {
+      if (!landed) createTable(spark, t, p, df.schema, bucketCol)
+      else if (!registerOverFiles(spark, storePath, sub, bucketCol))
+        // legacy (non-bucketed) files under this path: refuse to mix —
+        // a bucketed table over unbucketed files mis-routes reads
+        throw new IllegalStateException(
+          s"store $p holds pre-bucketing landings; rebuild the store " +
+            "(AnnStore cannot append bucketed landings to legacy files)")
     }
-    if (!spark.catalog.tableExists(t) || !hasLandings(spark, p)) {
-      // fresh store — or a stale catalog entry whose files are gone (a
-      // dropped temp store, a crash before the first files landed, or a
-      // compaction that dropped every landing): (re)create table + files
-      // in one bucketed write. No landing is listed here (a listed one
-      // would have registered the table above), so clear what the
-      // directory still holds (`_SUCCESS`, `_temporary`): a CREATE TABLE
-      // AS SELECT refuses a non-empty location
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      fs(spark, p).delete(new org.apache.hadoop.fs.Path(p), true)
-      out.write
-        .partitionBy("__landing")
-        .bucketBy(Buckets, bucketCol).sortBy(bucketCol)
-        .option("path", p)
-        .saveAsTable(t)
-    } else {
-      val order = spark.table(t).schema.fieldNames
-      // the conf must be set on the session that EXECUTES the write —
-      // inside foreachBatch the batch frame belongs to a cloned
-      // micro-batch session whose conf the outer session's set() never
-      // reaches (static mode there would wipe every prior landing)
-      withDynamicOverwrite(out.sparkSession) {
-        out.select(order.map(col): _*).write.mode("overwrite").insertInto(t)
-      }
-    }
+    val order = spark.table(t).schema.fieldNames
+    df.withColumn("__landing", lit(landingId))
+      .select(order.map(col): _*).write.mode("overwrite").insertInto(t)
     spark.catalog.refreshTable(t)
   }
 
-  /** Run `body` while PINNING dynamic partition overwrite on every
-    * session in `sessions` — the guard that makes CONCURRENT [[land]]
-    * calls safe: each land's own [[withDynamicOverwrite]] then reads
-    * AND restores "dynamic" under every interleaving, so no write can
-    * observe the static mode mid-flight (a static insertInto would
-    * wipe every prior landing). Without this pin, two overlapping
-    * lands race their conf restores. */
-  private[graft] def landScope[T](sessions: Seq[SparkSession])(body: => T): T = {
-    def nest(rest: List[SparkSession]): T = rest match {
-      case Nil => body
-      case s :: tail => withDynamicOverwrite(s)(nest(tail))
+  /** Runs lands off the calling thread on `threads` threads, started in
+    * submission order — the tick's overlapped sinks (1 thread: FIFO, so
+    * its manifest still lands last) and [[landMany]]'s concurrent group
+    * (one thread per sub-store). One failure contract, for a failed
+    * land and for a failure of the submitting body alike: the lands not
+    * yet started are skipped, the running ones are WAITED for (never
+    * interrupted — a caller's `scoped` block must not free checkpoint
+    * blocks a running write still reads, and a retry must not overlap
+    * it), then the first failure is rethrown. */
+  private[graft] final class Lander private (threads: Int) {
+    private val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    private val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+
+    private def fail(e: Throwable): Unit = { failure.compareAndSet(null, e); () }
+
+    def submit(land: => Unit): Unit =
+      pool.execute(new Runnable {
+        override def run(): Unit =
+          if (failure.get == null) try land catch { case e: Throwable => fail(e) }
+      })
+
+    /** Wait for every submitted land to finish or be skipped, then
+      * rethrow the first failure. */
+    def drain(): Unit = {
+      pool.shutdown()
+      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)) ()
+      Option(failure.get).foreach(e => throw e)
     }
-    nest(sessions.distinct.toList)
   }
 
-  /** Land several sub-stores of ONE landing concurrently (guide §2.6:
-    * the lands are independent sinks — small write jobs whose task
-    * waves and commit constants otherwise serialize). Files, catalog
-    * state and crash behaviour are identical to sequential [[land]]
-    * calls (each sub-store is a distinct table; a failure propagates
-    * after every thread finishes, leaving the same
-    * some-landings-without-manifest state a sequential crash leaves). */
-  def landMany(spark: SparkSession, storePath: String, landingId: Long,
-               lands: Seq[(String, DataFrame, String)]): Unit = {
-    if (lands.isEmpty) return
-    if (lands.size == 1) {
-      val (sub, df, bc) = lands.head
-      land(spark, storePath, sub, df, landingId, bc)
-      return
-    }
-    landScope(spark +: lands.map(_._2.sparkSession)) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(lands.size)
-      try {
-        val futs = lands.map { case (sub, df, bc) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              land(spark, storePath, sub, df, landingId, bc)
-          })
-        }
-        futs.foreach(_.get()) // propagate the first failure
-      } finally { pool.shutdown(); () }
+  private[graft] object Lander {
+    /** Run `body` with a fresh lander, then drain it. */
+    def apply(threads: Int)(body: Lander => Unit): Unit = {
+      val lander = new Lander(threads)
+      try body(lander) catch { case e: Throwable => lander.fail(e) }
+      lander.drain()
     }
   }
+
+  /** Land several sub-stores of ONE landing concurrently, one thread
+    * per sub-store (guide §2.6: the lands are independent sinks — small
+    * write jobs whose task waves and commit constants otherwise
+    * serialize). Files, catalog state and crash behaviour are identical
+    * to sequential [[land]] calls: each sub-store is a distinct table,
+    * and a failure propagates only after every other land has finished
+    * ([[Lander]]), leaving the same some-landings-without-manifest state
+    * a sequential crash leaves. */
+  def landMany(spark: SparkSession, storePath: String, landingId: Long,
+               lands: Seq[(String, DataFrame, String)]): Unit =
+    if (lands.nonEmpty) Lander(lands.size) { lander =>
+      lands.foreach { case (sub, df, bc) =>
+        lander.submit(land(spark, storePath, sub, df, landingId, bc))
+      }
+    }
 
   /** The `sub` store as a DataFrame whose scan reports the bucketed
     * distribution. Falls back to a plain parquet read for a legacy

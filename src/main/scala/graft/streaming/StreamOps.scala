@@ -1545,24 +1545,16 @@ object StreamOps {
     // Lands are PURE SINKS within a tick: every view the tick reads is
     // bounded to landings STRICTLY BEFORE its own, so no compute below
     // depends on a land having happened. They therefore run on ONE
-    // background thread — serialized with each other (the dynamic-
-    // overwrite session conf is never touched by two writes at once)
-    // but OVERLAPPED with the tick's dominant compute, the
-    // delete/insert delta search (guide §2.6: independent jobs
-    // back-fill idle executors; round-18 TickProbe measured the 4–5
-    // lands at ~half the warm tick wall). FIFO submission order
-    // (deletes → vectors → asg → edges → manifest) preserves the
-    // manifest-lands-LAST crash contract exactly; the tick returns
-    // only after the queue drains, so later ticks (and the scoped
-    // checkpoint frees) never see a land in flight.
-    val lander = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val landFutures = scala.collection.mutable.ArrayBuffer
-      .empty[java.util.concurrent.Future[Unit]]
-    def landAsync(body: => Unit): Unit =
-      landFutures += lander.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = body
-      })
-    try {
+    // background thread — serialized with each other but OVERLAPPED
+    // with the tick's dominant compute, the delete/insert delta search
+    // (guide §2.6: independent jobs back-fill idle executors; round-18
+    // TickProbe measured the 4–5 lands at ~half the warm tick wall).
+    // FIFO submission order (deletes → vectors → asg → edges →
+    // manifest) preserves the manifest-lands-LAST crash contract
+    // exactly (a failure skips the lands still queued); the tick
+    // returns only after the queue drains, so later ticks (and the
+    // scoped checkpoint frees) never see a land in flight.
+    graft.sinks.AnnStore.Lander(threads = 1) { lander =>
     // the batch and delete sets are DELTA-sized and referenced ~5 times
     // each per tick (counts, the guard, their landings, the search and
     // both repair unions) — checkpoint once so the source scan (+ the
@@ -1620,10 +1612,10 @@ object StreamOps {
           "vector in the corpus the insert search scores against")
     }
     if (nDeletes > 0L)
-      landAsync(graft.sinks.AnnStore.land(spark, storePath, "deletes", delIds,
+      lander.submit(graft.sinks.AnnStore.land(spark, storePath, "deletes", delIds,
         landingId, "vec_id"))
     if (nBatch > 0L)
-      landAsync(graft.sinks.AnnStore.land(spark, storePath, "vectors", b,
+      lander.submit(graft.sinks.AnnStore.land(spark, storePath, "vectors", b,
         landingId, "vec_id"))
     val changed: DataFrame =
       if (priorLandings.isEmpty) {
@@ -1632,7 +1624,7 @@ object StreamOps {
         // assignment computed ONCE (landed + fed to the build — the
         // hierarchical ranking is the build's widest shuffle)
         val asg0 = graft.Checkpoints.fresh(asgOf(b, anc), eager = true)
-        landAsync(graft.sinks.AnnStore.land(spark, storePath, "asg", asg0,
+        lander.submit(graft.sinks.AnnStore.land(spark, storePath, "asg", asg0,
           landingId, "vec_id"))
         SimOps.knnGraphOf(b, anc, "vec_id", "v", "vec_id", "v",
           r = r, cellProbes = 2, descentRounds = 1, corpusAsg = asg0)
@@ -1690,7 +1682,7 @@ object StreamOps {
           // the asg COMPUTE (delta×anchor cosine rank) moves onto the
           // land thread too — it feeds nothing else in this tick
           // (survivorAsg below reads the STORE's landings < this one)
-          landAsync(graft.sinks.AnnStore.land(spark, storePath, "asg",
+          lander.submit(graft.sinks.AnnStore.land(spark, storePath, "asg",
             asgOf(b, anc), landingId, "vec_id"))
           val survivorAsg = mergedAsg(spark, storePath, landingId)
             .join(survivors.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -1713,21 +1705,12 @@ object StreamOps {
       changed.select(col("src"), col("dst"), col("cos")))
     val nChanged = changedOut.count()
     if (nChanged > 0L)
-      landAsync(graft.sinks.AnnStore.land(spark, storePath, "edges", changedOut,
+      lander.submit(graft.sinks.AnnStore.land(spark, storePath, "edges", changedOut,
         landingId, "src"))
     import spark.implicits._
-    landAsync(land(spark, s"$storePath/ticks",
+    lander.submit(land(spark, s"$storePath/ticks",
       Seq((nBatch, nDeletes, nChanged)).toDF("n_batch", "n_deletes", "n_changed"),
       landingId))
-    landFutures.foreach(_.get()) // surface the first land failure
-    } finally {
-      // success path: the queue is already drained (the get()s above);
-      // failure path: cancel pending lands and WAIT for any in-flight
-      // write to stop before the scoped block frees the checkpoint
-      // blocks it references
-      lander.shutdownNow()
-      lander.awaitTermination(300, java.util.concurrent.TimeUnit.SECONDS)
-      ()
     }
   }
 
@@ -1782,9 +1765,7 @@ object StreamOps {
       else mergedAsg(spark, storePath, upTo)
         .join(live.select("vec_id"), Seq("vec_id"), "left_semi"), eager = true)
     // the three baseline frames are eagerly checkpointed above, so the
-    // lands are independent sinks — run them concurrently (guide §2.6;
-    // landMany pins dynamic overwrite for the whole group, so the
-    // concurrent writes cannot race the conf restore)
+    // lands are independent sinks — run them concurrently (guide §2.6)
     graft.sinks.AnnStore.landMany(spark, storePath, base, Seq(
       ("vectors", live, "vec_id"),
       ("edges", edges, "src"),

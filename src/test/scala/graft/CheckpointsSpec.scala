@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * every `stabilize` registers with the enclosing `scoped` block (so a
   * scope leaves no pinned blocks behind), every site honours the
   * reliable key, and no other source file calls `localCheckpoint` or
-  * `checkpoint` itself. */
+  * `checkpoint` itself. In the same style: no source file mutates the
+  * session conf it is handed. */
 class CheckpointsSpec extends SparkSpec {
   import graft.streaming.StreamOps
 
@@ -115,5 +116,25 @@ class CheckpointsSpec extends SparkSpec {
     }
     if (hits.nonEmpty)
       fail("materialize through graft.Checkpoints.stabilize/fresh:\n" + hits.mkString("\n"))
+  }
+
+  test("no source file in src/main/scala mutates the session conf it is " +
+    "handed") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val call = """\.conf\.(set|unset)\(""".r
+    val hits = files(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}: ${line.trim}"
+      }.toList
+      finally src.close()
+    }
+    if (hits.nonEmpty)
+      fail("library code reads the session conf, never sets it (declare a " +
+        "per-table or per-write setting instead):\n" + hits.mkString("\n"))
   }
 }
