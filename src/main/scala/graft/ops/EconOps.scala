@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{F, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,20 +34,21 @@ object EconOps {
     * column (public operator behind [[graft.Graft.amihud]]):
     * illiq_t = |ret_t| / vol_t, rolling-mean'd over the last `n` bars
     * — the price-impact-per-unit-volume proxy. The first bar of each
-    * series has no return and contributes an explicit 0.0 to the
-    * cumulative fold (identical op sequence both engines); the rolling
-    * mean is a cumulative-sum difference over the last n BARS, null
-    * until rn ≥ n+1 — an undefined mid-series term (prev close 0/null)
-    * also contributes 0.0 while the divisor stays n, so the output is
+    * series has no return and contributes an explicit 0.0; the rolling
+    * mean sums the bounded frame of the last n BARS (the same
+    * oldest-first fold in both engines), null until rn ≥ n+1 (the
+    * first full window would hold that 0.0). An undefined mid-series
+    * term (prev close 0/null) also contributes 0.0 while the divisor
+    * stays n, so the output is
     * a mean over n bars with undefined terms counted as 0, not a mean
     * over defined terms only. Zero-volume bars are excluded by contract
     * (vol > 0 required — a bar exists because it traded). One window
-    * shuffle, O(1) per row. */
+    * shuffle. */
   def amihudOf(bars: DataFrame, key: String, ts: String, close: String,
                vol: String, n: Int = 20): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val ord = Window.partitionBy(col(key)).orderBy(col(ts))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     bars
       .withColumn("__pc", lag(col(close), 1).over(ord))
       .withColumn("__rn", row_number().over(ord))
@@ -55,10 +56,9 @@ object EconOps {
         when(col("__pc").isNotNull && col("__pc") =!= 0.0, col(close) / col("__pc") - 1.0))
       .withColumn("illiq",
         when(col("ret").isNotNull, abs(col("ret")) / col(vol).cast("double")))
-      .withColumn("__ci", sum(coalesce(col("illiq"), lit(0.0))).over(cum))
       .withColumn("amihud",
         when(col("__rn") >= n + 1,
-          (col("__ci") - coalesce(lag(col("__ci"), n).over(ord), lit(0.0))) / n))
+          sum(coalesce(col("illiq"), lit(0.0))).over(frame) / n))
       .select(col(key), col(ts), col(close), col("ret"), col("illiq"), col("amihud"))
   }
 
@@ -93,16 +93,12 @@ object EconOps {
       |  FROM c),
       |f AS (
       |  SELECT event_type, bucket, close, rn, ret, illiq,
-      |    sum(coalesce(illiq, 0.0)) OVER w AS ci
-      |  FROM d
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      |    list_reduce(list(coalesce(illiq, 0.0)) OVER (PARTITION BY event_type ORDER BY bucket
+      |      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW), (a, b) -> a + b) AS si
+      |  FROM d)
       |SELECT event_type, epoch_ms(bucket) AS bucket_ms, close,
       |  round(ret, 6) AS ret, round(illiq, 6) AS illiq,
-      |  round(CASE WHEN rn >= 21 THEN
-      |    (ci - coalesce(lag(ci, 20) OVER (PARTITION BY event_type ORDER BY bucket),
-      |                   CAST(0.0 AS DOUBLE))) / 20
-      |  END, 6) AS amihud
+      |  round(CASE WHEN rn >= 21 THEN si / 20 END, 6) AS amihud
       |FROM f
       |ORDER BY event_type, bucket_ms""".stripMargin
 
@@ -203,9 +199,9 @@ object EconOps {
     * exclusive-prefix-sum rule — buckets carry equal traded volume, so
     * toxicity is measured per unit of volume, not per wall-clock
     * tick), per bucket imbalance = |Σ signed vol| / Σ vol, and VPIN =
-    * the rolling mean of the last `n` bucket imbalances (cumsum-diff,
-    * null till n buckets) — the flow-toxicity alarm that spikes before
-    * liquidity events. Every float reduction is a defined-order
+    * the rolling mean of the last `n` bucket imbalances (a bounded
+    * n-bucket frame, null till n buckets) — the flow-toxicity alarm
+    * that spikes before liquidity events. Every float reduction is a defined-order
     * cumulative fold taken at the bucket's last row (q33 rule); one
     * shuffle on the series key serves the sign lag, the volume clock,
     * the bucket folds AND the rolling mean (`ClusteredDistribution`:
@@ -240,12 +236,10 @@ object EconOps {
         col("__tv").as("bucket_vol"),
         (abs(col("__sv")) / col("__tv")).as("imbalance"))
     val kOrd = Window.partitionBy(col(key)).orderBy(col("bar"))
-    val kCum = kOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val kFrame = kOrd.rowsBetween(1 - n, Window.currentRow)
     bars
       .withColumn("__brn", row_number().over(kOrd))
-      .withColumn("__ci", sum(col("imbalance")).over(kCum))
-      .withColumn("vpin", when(col("__brn") >= n,
-        (col("__ci") - coalesce(lag(col("__ci"), n).over(kOrd), lit(0.0))) / n))
+      .withColumn("vpin", when(col("__brn") >= n, sum(col("imbalance")).over(kFrame) / n))
       .select(col(key), col("bar"), col("n_fills"), col("bucket_vol"),
         col("imbalance"), col("vpin"))
   }
@@ -304,16 +298,13 @@ object EconOps {
       |r AS (
       |  SELECT series, bar, n_fills, tv, imbalance,
       |    row_number() OVER o AS brn,
-      |    sum(imbalance) OVER w AS ci
+      |    list_reduce(list(imbalance) OVER (PARTITION BY series ORDER BY bar
+      |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), (a, b) -> a + b) AS si
       |  FROM k
-      |  WINDOW o AS (PARTITION BY series ORDER BY bar),
-      |    w AS (PARTITION BY series ORDER BY bar
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      |  WINDOW o AS (PARTITION BY series ORDER BY bar))
       |SELECT series, bar, n_fills, round(tv, 4) AS bucket_vol,
       |  round(imbalance, 6) AS imbalance,
-      |  round(CASE WHEN brn >= 5 THEN
-      |    (ci - coalesce(lag(ci, 5) OVER (PARTITION BY series ORDER BY bar),
-      |                   CAST(0.0 AS DOUBLE))) / 5 END, 6) AS vpin
+      |  round(CASE WHEN brn >= 5 THEN si / 5 END, 6) AS vpin
       |FROM r
       |ORDER BY series, bar""".stripMargin
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * correlation, dimension history (SCD2), exponential smoothing.
   *
   * Scale stance: every windowed op is ONE shuffle on its series key with
-  * O(1)-per-row frames (cumulative-sum differences, running max, lag);
+  * window frames (bounded n-row sums, running folds and max, lag);
   * the pair-correlation reduces each series to its bucket grid FIRST, so
   * the pair join runs on bucket-grid-sized inputs, never raw ticks.
   */
@@ -24,11 +24,14 @@ object FinOps {
   /** #q30 VWAP vs TWAP per (brand, month) — the execution-quality
     * benchmark pair: volume-weighted mean unit price vs the unweighted
     * time-weighted mean. The dim join is broadcast; the sums run as
-    * CUMULATIVE window folds over the total (orderkey, linenumber)
-    * order with the group's last row kept — the q33/t08 sequential-fold
+    * CUMULATIVE window folds over the (orderkey, linenumber) order
+    * with the group's last row kept — the q33/t08 sequential-fold
     * pattern — so every double is the same defined-order fold in both
     * engines and the hash gate is immune to partition-order low-bit
-    * noise. (A plain hash-agg `groupBy.agg(sum…)` is the throughput
+    * noise. The oracle folds each group's ordered list with
+    * `list_reduce`: DuckDB's windowed running SUM combines segment-tree
+    * partials rather than folding row by row, which at sf0.1 moved a
+    * vwap across its r4 rounding. (A plain hash-agg `groupBy.agg(sum…)` is the throughput
     * form when bit-reproducibility across runs isn't required: it keeps
     * map-side partial aggregation but folds in partition order.) */
   private val q30: Q = (s, dir) => {
@@ -66,31 +69,30 @@ object FinOps {
       |  FROM lineitem JOIN part ON l_partkey = p_partkey
       |  WHERE l_quantity > 0),
       |c AS (
-      |  SELECT p_brand, month,
-      |    row_number() OVER o AS rn,
-      |    count(*) OVER (PARTITION BY p_brand, month) AS n,
-      |    sum(l_extendedprice) OVER w AS cnot,
-      |    sum(l_quantity) OVER w AS cqty,
-      |    sum(l_extendedprice / l_quantity) OVER w AS cunit
-      |  FROM j
-      |  WINDOW o AS (PARTITION BY p_brand, month ORDER BY l_orderkey, l_linenumber),
-      |    w AS (PARTITION BY p_brand, month ORDER BY l_orderkey, l_linenumber
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+      |  SELECT p_brand, month, count(*) AS n,
+      |    list_reduce(list(l_extendedprice ORDER BY l_orderkey, l_linenumber),
+      |      (a, b) -> a + b) AS cnot,
+      |    list_reduce(list(l_quantity ORDER BY l_orderkey, l_linenumber),
+      |      (a, b) -> a + b) AS cqty,
+      |    list_reduce(list(l_extendedprice / l_quantity ORDER BY l_orderkey, l_linenumber),
+      |      (a, b) -> a + b) AS cunit
+      |  FROM j GROUP BY 1, 2)
       |SELECT p_brand, epoch_ms(month) AS month_ms,
       |  round(cnot / cqty, 4) AS vwap,
       |  round(cunit / n, 4) AS twap,
       |  round(cnot, 4) AS notional,
       |  n AS n_fills
-      |FROM c WHERE rn = n
+      |FROM c
       |ORDER BY p_brand, month_ms""".stripMargin
 
   /** #q31 Bollinger bands: rolling mean ± 2σ over the 20 rows STRICTLY
     * BEFORE each row per series + breakout flags — the band form of the
     * reference's extreme-move detection, look-ahead-free (the current
     * row never contaminates its own band; see [[graft.Graft.bollinger]]).
-    * Same O(1)-per-row cumulative-sum-difference machinery as q11/q21;
-    * the oracle derives the sums identically so doubles are bit-exact.
-    * Population σ; null until 20 prior rows exist. */
+    * Both sums run over the bounded frame of the 20 prior rows; the
+    * oracle folds the same frame oldest-first (`list_reduce`), so the
+    * doubles are bit-exact. Population σ; null until 20 prior rows
+    * exist. */
   private val q31: Q = (s, dir) =>
     graft.Graft.bollinger(t(s, dir, "events"), "event_type", "ts", "event_id", "value",
         n = 20, width = 2.0)
@@ -100,23 +102,15 @@ object FinOps {
       .orderBy("event_type", "ts_ms", "event_id")
 
   private val q31Sql =
-    """WITH c AS (
+    """WITH f AS (
       |  SELECT event_type, event_id, ts, value,
       |    row_number() OVER o AS rn,
-      |    sum(value) OVER w AS cx,
-      |    sum(value * value) OVER w AS cx2
+      |    list_reduce(list(value) OVER w, (a, b) -> a + b) AS sx,
+      |    list_reduce(list(value * value) OVER w, (a, b) -> a + b) AS sx2
       |  FROM events
       |  WINDOW o AS (PARTITION BY event_type ORDER BY ts, event_id),
       |    w AS (PARTITION BY event_type ORDER BY ts, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-      |f AS (
-      |  SELECT *,
-      |    coalesce(lag(cx, 1) OVER o, CAST(0.0 AS DOUBLE))
-      |      - coalesce(lag(cx, 21) OVER o, CAST(0.0 AS DOUBLE)) AS sx,
-      |    coalesce(lag(cx2, 1) OVER o, CAST(0.0 AS DOUBLE))
-      |      - coalesce(lag(cx2, 21) OVER o, CAST(0.0 AS DOUBLE)) AS sx2
-      |  FROM c
-      |  WINDOW o AS (PARTITION BY event_type ORDER BY ts, event_id)),
+      |      ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)),
       |b AS (
       |  SELECT event_type, event_id, ts, value,
       |    CASE WHEN rn >= 21 THEN sx / 20.0 END AS mid,
@@ -285,9 +279,9 @@ object FinOps {
   }
 
   /** #q36 RSI(14) per series — Cutler's form (see [[graft.Graft.rsi]]).
-    * The oracle derives the same cumulative-sum differences over the
-    * same (ts, id) order, so every double is a sequential fold in a
-    * defined order: bit-exact across engines. */
+    * The oracle folds the same 14-row frames oldest-first over the same
+    * (ts, id) order, so every double is a sequential fold in a defined
+    * order: bit-exact across engines. */
   private val q36: Q = (s, dir) =>
     graft.Graft.rsi(t(s, dir, "events"), "event_type", "ts", "event_id", "value", n = 14)
       .select(col("event_type"), col("event_id"), epochMs(col("ts")).as("ts_ms"),
@@ -306,17 +300,13 @@ object FinOps {
       |    CASE WHEN dd IS NULL THEN NULL WHEN dd > 0 THEN dd ELSE 0.0 END AS gn,
       |    CASE WHEN dd IS NULL THEN NULL WHEN dd < 0 THEN -dd ELSE 0.0 END AS ls
       |  FROM d),
-      |c AS (
-      |  SELECT *, sum(gn) OVER w AS cg, sum(ls) OVER w AS cl
-      |  FROM g
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
       |f AS (
       |  SELECT event_type, event_id, ts, value, rn,
-      |    cg - coalesce(lag(cg, 14) OVER o, CAST(0.0 AS DOUBLE)) AS sg,
-      |    cl - coalesce(lag(cl, 14) OVER o, CAST(0.0 AS DOUBLE)) AS sl
-      |  FROM c
-      |  WINDOW o AS (PARTITION BY event_type ORDER BY ts, event_id))
+      |    list_reduce(list(gn) FILTER (WHERE gn IS NOT NULL) OVER w, (a, b) -> a + b) AS sg,
+      |    list_reduce(list(ls) FILTER (WHERE ls IS NOT NULL) OVER w, (a, b) -> a + b) AS sl
+      |  FROM g
+      |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
+      |    ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
       |SELECT event_type, event_id, epoch_ms(ts) AS ts_ms, value,
       |  round(CASE WHEN rn >= 15 THEN
       |    CASE WHEN sg + sl = 0 THEN 50.0 ELSE 100.0 * sg / (sg + sl) END
@@ -343,7 +333,8 @@ object FinOps {
 
   /** #q37 ATR(14) over hourly bars (see [[graft.Graft.atr]]): true
     * range needs only high/low/prev-close — all exact aggregates — so
-    * the rolling mean is bit-exact. */
+    * the rolling mean (the same oldest-first frame fold in both
+    * engines) is bit-exact. */
   private val q37: Q = (s, dir) =>
     graft.Graft.atr(hourBars(s, dir), "event_type", "bucket", "high", "low", "close", n = 14)
       .select(col("event_type"), epochMs(col("bucket")).as("bucket_ms"),
@@ -365,15 +356,12 @@ object FinOps {
        |  FROM c),
        |f AS (
        |  SELECT event_type, bucket, rn, tr,
-       |    sum(tr) OVER (PARTITION BY event_type ORDER BY bucket
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ct
+       |    list_reduce(list(tr) OVER (PARTITION BY event_type ORDER BY bucket
+       |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW), (a, b) -> a + b) AS st
        |  FROM r)
        |SELECT event_type, epoch_ms(bucket) AS bucket_ms,
        |  round(tr, 6) AS tr,
-       |  round(CASE WHEN rn >= 14 THEN
-       |    (ct - coalesce(lag(ct, 14) OVER (PARTITION BY event_type ORDER BY bucket),
-       |                   CAST(0.0 AS DOUBLE))) / 14
-       |  END, 6) AS atr
+       |  round(CASE WHEN rn >= 14 THEN st / 14 END, 6) AS atr
        |FROM f
        |ORDER BY event_type, bucket_ms""".stripMargin
 
@@ -537,7 +525,7 @@ object FinOps {
     * fold discipline — every sum a cumulative window fold taken at
     * the last row, broadcast back as ONE row), then
     * spread_t = a_t − (α + β·b_t) and its rolling n-bar z-score
-    * (mean/σ as cumulative-sum differences, O(1)/row; variance
+    * (mean/σ as sums over the bounded n-bar frame; variance
     * clamped at 0 before sqrt — the q85 cancellation rule — and σ=0 ⇒
     * null z), with the classic ±2σ entry signal.
     *
@@ -574,17 +562,14 @@ object FinOps {
             (nD * col("__sb2") - col("__sb") * col("__sb"))).as("beta"),
         (col("__sa") / nD).as("__ma"), (col("__sb") / nD).as("__mb"))
       .select(col("beta"), (col("__ma") - col("beta") * col("__mb")).as("alpha"))
-    val lagOr0 = (c: Column) => coalesce(lag(c, n).over(ord), lit(0.0))
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     j.crossJoin(broadcast(st)) // 1-row build side: documented BNLJ
       .withColumn("spread", col("a_close") - (col("alpha") + col("beta") * col("b_close")))
       .withColumn("__rn", row_number().over(ord))
-      .withColumn("__cs", sum(col("spread")).over(cum))
-      .withColumn("__cs2", sum(col("spread") * col("spread")).over(cum))
-      .withColumn("spread_mean", when(col("__rn") >= n,
-        (col("__cs") - lagOr0(col("__cs"))) / n))
+      .withColumn("spread_mean", when(col("__rn") >= n, sum(col("spread")).over(frame) / n))
       .withColumn("spread_sd", when(col("__rn") >= n,
         sqrt(greatest(lit(0.0),
-          (col("__cs2") - lagOr0(col("__cs2"))) / n -
+          sum(col("spread") * col("spread")).over(frame) / n -
             col("spread_mean") * col("spread_mean")))))
       .withColumn("z", when(col("spread_sd") > 0.0,
         (col("spread") - col("spread_mean")) / col("spread_sd")))
@@ -641,18 +626,17 @@ object FinOps {
       |  FROM j, st),
       |c AS (
       |  SELECT *, row_number() OVER o AS rn,
-      |    sum(spread) OVER w AS cs, sum(spread * spread) OVER w AS cs2
+      |    list_reduce(list(spread) OVER w, (a, b) -> a + b) AS ss,
+      |    list_reduce(list(spread * spread) OVER w, (a, b) -> a + b) AS ss2
       |  FROM sp
       |  WINDOW o AS (ORDER BY bucket),
-      |    w AS (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+      |    w AS (ORDER BY bucket ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
       |f AS (
-      |  SELECT *, CASE WHEN rn >= 24
-      |    THEN (cs - coalesce(lag(cs, 24) OVER (ORDER BY bucket), 0.0)) / 24 END AS m
+      |  SELECT *, CASE WHEN rn >= 24 THEN ss / 24 END AS m
       |  FROM c),
       |g AS (
       |  SELECT *, CASE WHEN rn >= 24
-      |    THEN sqrt(greatest(0.0,
-      |      (cs2 - coalesce(lag(cs2, 24) OVER (ORDER BY bucket), 0.0)) / 24 - m * m)) END AS sd
+      |    THEN sqrt(greatest(0.0, ss2 / 24 - m * m)) END AS sd
       |  FROM f),
       |h AS (
       |  SELECT *, CASE WHEN sd > 0.0 THEN (spread - m) / sd END AS z

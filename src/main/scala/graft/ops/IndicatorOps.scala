@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{F, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
   * here as one declarative plan.
   *
   * Scale stance (same contract as [[FinOps]]): every operator is ONE
-  * shuffle on its series key; rolling sums are cumulative-sum
-  * differences (never Spark's O(n)-per-row sliding re-aggregation);
-  * rolling extrema are exact value picks; the two list-window ops
-  * (CCI's mean absolute deviation, Aroon's argmax position) carry a
-  * bounded n-element array per row — n is the indicator period
-  * (20/25), so the per-row state is constant, not data-sized.
+  * shuffle on its series key; rolling sums run over bounded n-row
+  * frames (O(n) per row, an error bounded by the window rather than
+  * the history); rolling extrema are exact value picks; the two
+  * list-window ops (CCI's mean absolute deviation, Aroon's argmax
+  * position) carry a bounded n-element array per row — n is the
+  * indicator period (20/25), so the per-row state is constant, not
+  * data-sized.
   * Parity discipline (SURVEY §5): every double crossing the oracle
   * boundary is either an exact pick/comparison or the same
   * defined-order fold in both engines; outputs round via [[F.r6]].
@@ -52,11 +53,11 @@ object IndicatorOps {
     * cci = (tp − SMA_n(tp)) / (0.015 · MD_n), tp = (h+l+c)/3, where
     * MD_n is the mean absolute deviation of the window's tp values
     * about the window's OWN mean. MD is the one rolling statistic here
-    * that no cumulative-sum difference expresses (|tp_j − sma_i|
-    * couples every window element to the current row's mean), so the
-    * window's n tp values ride along as a bounded collect_list and MD
-    * folds them with `aggregate` — same left fold, same order, in the
-    * DuckDB twin (list_reduce over list_transform). Null until the
+    * that no frame sum expresses (|tp_j − sma_i| couples every window
+    * element to the current row's mean), so the window's n tp values
+    * ride along as a bounded collect_list and MD folds them with
+    * `aggregate` — same left fold, same order, in the DuckDB twin
+    * (list_reduce over list_transform). Null until the
     * window fills; MD = 0 (flat window) → cci = 0. One window shuffle;
     * per-row state is the n-element array (n = 20 default), constant
     * at any corpus size. */
@@ -64,15 +65,11 @@ object IndicatorOps {
             low: String, close: String, n: Int = 20): DataFrame = {
     require(n >= 2, s"n must be >= 2, got $n")
     val ord = Window.partitionBy(col(key)).orderBy(col(ts))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val frame = ord.rowsBetween(-(n - 1), Window.currentRow)
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     bars
       .withColumn("__tp", (col(high) + col(low) + col(close)) / 3.0)
       .withColumn("__rn", row_number().over(ord))
-      .withColumn("__ctp", sum(col("__tp")).over(cum))
-      .withColumn("__sma",
-        when(col("__rn") >= n,
-          (col("__ctp") - coalesce(lag(col("__ctp"), n).over(ord), lit(0.0))) / n))
+      .withColumn("__sma", when(col("__rn") >= n, sum(col("__tp")).over(frame) / n))
       .withColumn("__l", collect_list(col("__tp")).over(frame))
       .withColumn("__md",
         when(col("__rn") >= n,
@@ -102,19 +99,13 @@ object IndicatorOps {
        |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket)),
        |f AS (
        |  SELECT event_type, bucket, tp, rn,
-       |    sum(tp) OVER w AS ctp,
        |    list(tp) OVER (PARTITION BY event_type ORDER BY bucket
        |      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW) AS l
-       |  FROM c
-       |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+       |  FROM c),
        |g AS (
        |  SELECT event_type, bucket, tp, rn, l,
-       |    CASE WHEN rn >= 20 THEN
-       |      (ctp - coalesce(lag(ctp, 20) OVER o, CAST(0.0 AS DOUBLE))) / 20
-       |    END AS sma
-       |  FROM f
-       |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket)),
+       |    CASE WHEN rn >= 20 THEN list_reduce(l, (a, b) -> a + b) / 20 END AS sma
+       |  FROM f),
        |h AS (
        |  SELECT event_type, bucket, tp, sma,
        |    CASE WHEN rn >= 20 THEN
@@ -188,26 +179,20 @@ object IndicatorOps {
     * (The modern EMA±ATR variant is the composition of
     * [[ScanOps.ewmaExactOf]] with [[graft.Graft.atr]] — both exported;
     * the original form keeps the whole channel inside one window pass.)
-    * Both rolling means are cumulative-sum differences — the same
-    * defined-order fold in both engines. Null until the window fills.
+    * Both rolling means sum the bounded n-row frame — the same
+    * oldest-first fold in both engines. Null until the window fills.
     * One window shuffle. */
   def keltnerOf(bars: DataFrame, key: String, ts: String, high: String,
                 low: String, close: String, n: Int = 10): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val ord = Window.partitionBy(col(key)).orderBy(col(ts))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     bars
       .withColumn("__tp", (col(high) + col(low) + col(close)) / 3.0)
       .withColumn("__rg", col(high) - col(low))
       .withColumn("__rn", row_number().over(ord))
-      .withColumn("__ctp", sum(col("__tp")).over(cum))
-      .withColumn("__crg", sum(col("__rg")).over(cum))
-      .withColumn("center",
-        when(col("__rn") >= n,
-          (col("__ctp") - coalesce(lag(col("__ctp"), n).over(ord), lit(0.0))) / n))
-      .withColumn("band",
-        when(col("__rn") >= n,
-          (col("__crg") - coalesce(lag(col("__crg"), n).over(ord), lit(0.0))) / n))
+      .withColumn("center", when(col("__rn") >= n, sum(col("__tp")).over(frame) / n))
+      .withColumn("band", when(col("__rn") >= n, sum(col("__rg")).over(frame) / n))
       .select(col(key), col(ts), col(close), col("center"),
         (col("center") + col("band")).as("upper"),
         (col("center") - col("band")).as("lower"))
@@ -231,18 +216,16 @@ object IndicatorOps {
        |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket)),
        |f AS (
        |  SELECT event_type, bucket, close, rn,
-       |    sum(tp) OVER w AS ctp, sum(rg) OVER w AS crg
+       |    list_reduce(list(tp) OVER w, (a, b) -> a + b) AS stp,
+       |    list_reduce(list(rg) OVER w, (a, b) -> a + b) AS srg
        |  FROM c
        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+       |      ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)),
        |g AS (
        |  SELECT event_type, bucket, close,
-       |    CASE WHEN rn >= 10 THEN
-       |      (ctp - coalesce(lag(ctp, 10) OVER o, CAST(0.0 AS DOUBLE))) / 10 END AS center,
-       |    CASE WHEN rn >= 10 THEN
-       |      (crg - coalesce(lag(crg, 10) OVER o, CAST(0.0 AS DOUBLE))) / 10 END AS band
-       |  FROM f
-       |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket))
+       |    CASE WHEN rn >= 10 THEN stp / 10 END AS center,
+       |    CASE WHEN rn >= 10 THEN srg / 10 END AS band
+       |  FROM f)
        |SELECT event_type, epoch_ms(bucket) AS bucket_ms, close,
        |  round(center, 6) AS center,
        |  round(center + band, 6) AS upper,
@@ -256,15 +239,15 @@ object IndicatorOps {
     * operator behind [[graft.Graft.mfi]]): tp = (h+l+c)/3, raw money
     * flow = tp·vol signed by the tp change; MFI = 100·pos/(pos+neg)
     * over the last n flows. Flow terms are explicit 0.0 (not null)
-    * when undefined/flat so the cumulative fold is the identical op
-    * sequence in both engines; rolling sums are cumulative-sum
-    * differences. Null until n flow terms exist (rn ≥ n+1); both-zero
+    * when undefined/flat so the frame fold is the identical op
+    * sequence in both engines; rolling sums run over the bounded n-row
+    * frame. Null until n flow terms exist (rn ≥ n+1); both-zero
     * window → 50. One window shuffle. */
   def mfiOf(bars: DataFrame, key: String, ts: String, high: String,
             low: String, close: String, vol: String, n: Int = 14): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val ord = Window.partitionBy(col(key)).orderBy(col(ts))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     bars
       .withColumn("__tp", (col(high) + col(low) + col(close)) / 3.0)
       .withColumn("__mf", col("__tp") * col(vol).cast("double"))
@@ -276,10 +259,8 @@ object IndicatorOps {
       .withColumn("__neg",
         when(col("__ptp").isNotNull && col("__tp") < col("__ptp"), col("__mf"))
           .otherwise(lit(0.0)))
-      .withColumn("__cp", sum(col("__pos")).over(cum))
-      .withColumn("__cn", sum(col("__neg")).over(cum))
-      .withColumn("__sp", col("__cp") - coalesce(lag(col("__cp"), n).over(ord), lit(0.0)))
-      .withColumn("__sn", col("__cn") - coalesce(lag(col("__cn"), n).over(ord), lit(0.0)))
+      .withColumn("__sp", sum(col("__pos")).over(frame))
+      .withColumn("__sn", sum(col("__neg")).over(frame))
       .withColumn("mfi",
         when(col("__rn") >= n + 1,
           when(col("__sp") + col("__sn") === 0.0, lit(50.0))
@@ -306,19 +287,15 @@ object IndicatorOps {
        |    row_number() OVER o AS rn
        |  FROM b
        |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket)),
-       |f AS (
-       |  SELECT event_type, bucket, close, tp, rn,
-       |    sum(CASE WHEN ptp IS NOT NULL AND tp > ptp THEN mf ELSE 0.0 END) OVER w AS cp,
-       |    sum(CASE WHEN ptp IS NOT NULL AND tp < ptp THEN mf ELSE 0.0 END) OVER w AS cn
-       |  FROM c
-       |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
        |g AS (
        |  SELECT event_type, bucket, close, tp, rn,
-       |    cp - coalesce(lag(cp, 14) OVER o, CAST(0.0 AS DOUBLE)) AS sp,
-       |    cn - coalesce(lag(cn, 14) OVER o, CAST(0.0 AS DOUBLE)) AS sn
-       |  FROM f
-       |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket))
+       |    list_reduce(list(CASE WHEN ptp IS NOT NULL AND tp > ptp THEN mf ELSE 0.0 END)
+       |      OVER w, (a, b) -> a + b) AS sp,
+       |    list_reduce(list(CASE WHEN ptp IS NOT NULL AND tp < ptp THEN mf ELSE 0.0 END)
+       |      OVER w, (a, b) -> a + b) AS sn
+       |  FROM c
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+       |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
        |SELECT event_type, epoch_ms(bucket) AS bucket_ms, close,
        |  round(tp, 6) AS tp,
        |  round(CASE WHEN rn >= 15 THEN
@@ -336,12 +313,12 @@ object IndicatorOps {
     * by the n-bar true-range sum. First bar (no prev) contributes an
     * explicit 0.0 so both engines fold the same sequence; null until
     * n complete pairs exist (rn ≥ n+1); TR sum = 0 → null. One window
-    * shuffle, rolling sums as cumulative differences. */
+    * shuffle, rolling sums over the bounded n-row frame. */
   def vortexOf(bars: DataFrame, key: String, ts: String, high: String,
                low: String, close: String, n: Int = 14): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val ord = Window.partitionBy(col(key)).orderBy(col(ts))
-    val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val frame = ord.rowsBetween(1 - n, Window.currentRow)
     val ph = lag(col(high), 1).over(ord)
     val pl = lag(col(low), 1).over(ord)
     val pc = lag(col(close), 1).over(ord)
@@ -352,12 +329,9 @@ object IndicatorOps {
       .withColumn("__tr",
         when(pc.isNull, lit(0.0))
           .otherwise(greatest(col(high) - col(low), abs(col(high) - pc), abs(col(low) - pc))))
-      .withColumn("__cvp", sum(col("__vp")).over(cum))
-      .withColumn("__cvm", sum(col("__vm")).over(cum))
-      .withColumn("__ctr", sum(col("__tr")).over(cum))
-      .withColumn("__svp", col("__cvp") - coalesce(lag(col("__cvp"), n).over(ord), lit(0.0)))
-      .withColumn("__svm", col("__cvm") - coalesce(lag(col("__cvm"), n).over(ord), lit(0.0)))
-      .withColumn("__str", col("__ctr") - coalesce(lag(col("__ctr"), n).over(ord), lit(0.0)))
+      .withColumn("__svp", sum(col("__vp")).over(frame))
+      .withColumn("__svm", sum(col("__vm")).over(frame))
+      .withColumn("__str", sum(col("__tr")).over(frame))
       .withColumn("vi_plus",
         when(col("__rn") >= n + 1 && col("__str") > 0, col("__svp") / col("__str")))
       .withColumn("vi_minus",
@@ -388,19 +362,14 @@ object IndicatorOps {
        |    CASE WHEN pc IS NULL THEN 0.0
        |      ELSE greatest(high - low, abs(high - pc), abs(low - pc)) END AS tr
        |  FROM c),
-       |f AS (
-       |  SELECT event_type, bucket, close, rn,
-       |    sum(vp) OVER w AS cvp, sum(vm) OVER w AS cvm, sum(tr) OVER w AS ctr
-       |  FROM d
-       |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
        |g AS (
        |  SELECT event_type, bucket, close, rn,
-       |    cvp - coalesce(lag(cvp, 14) OVER o, CAST(0.0 AS DOUBLE)) AS svp,
-       |    cvm - coalesce(lag(cvm, 14) OVER o, CAST(0.0 AS DOUBLE)) AS svm,
-       |    ctr - coalesce(lag(ctr, 14) OVER o, CAST(0.0 AS DOUBLE)) AS str
-       |  FROM f
-       |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket))
+       |    list_reduce(list(vp) OVER w, (a, b) -> a + b) AS svp,
+       |    list_reduce(list(vm) OVER w, (a, b) -> a + b) AS svm,
+       |    list_reduce(list(tr) OVER w, (a, b) -> a + b) AS str
+       |  FROM d
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+       |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW))
        |SELECT event_type, epoch_ms(bucket) AS bucket_ms, close,
        |  round(CASE WHEN rn >= 15 AND str > 0 THEN svp / str END, 6) AS vi_plus,
        |  round(CASE WHEN rn >= 15 AND str > 0 THEN svm / str END, 6) AS vi_minus

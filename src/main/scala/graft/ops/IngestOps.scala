@@ -151,8 +151,9 @@ object IngestOps {
     * [[graft.Graft.asofJoin]] — the last spot print at-or-before each
     * funding row; premium = markPrice/spot − 1 (:1237).
     * Stage 3 (indicator): WMA(12) of the premium per symbol via
-    * [[graft.Graft.wma]] (the O(1)-per-row cumulative-sum form; the
-    * oracle replays the identical formulation so doubles match bitwise).
+    * [[graft.Graft.wma]] (bounded frames, error ~1e-15 relative; the
+    * oracle folds each row's 12-value frame by the definition, which
+    * agrees far inside the r6 rounding).
     * Stage 4 (report): LAG(5) premium change, |Δ| > 2 threshold, 1h
     * debounce, newest-first top-20 with the Asia/Shanghai wall clock —
     * the q12 extreme-case shape applied to the derived premium.
@@ -582,26 +583,16 @@ object IngestOps {
         |prem AS (
         |  SELECT *, markPrice / spot - 1.0 AS premium
         |  FROM al WHERE spot IS NOT NULL AND spot <> 0),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY symbol ORDER BY ts) AS rn
-        |  FROM prem),
-        |c AS (
-        |  SELECT *,
-        |    sum(premium * rn) OVER w AS cxw,
-        |    sum(premium) OVER w AS cx
-        |  FROM r
-        |  WINDOW w AS (PARTITION BY symbol ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
         |f AS (
-        |  SELECT *,
-        |    cxw - lag(cxw, 12, CAST(0.0 AS DOUBLE)) OVER o AS sxw,
-        |    cx - lag(cx, 12, CAST(0.0 AS DOUBLE)) OVER o AS sx
-        |  FROM c
-        |  WINDOW o AS (PARTITION BY symbol ORDER BY ts)),
+        |  SELECT *, row_number() OVER (PARTITION BY symbol ORDER BY ts) AS rn,
+        |    list(premium) OVER (PARTITION BY symbol ORDER BY ts
+        |      ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS l
+        |  FROM prem),
         |wm AS (
         |  SELECT symbol, ts, fundingRate, markPrice, spot, premium,
-        |    CASE WHEN least(rn, 12) = 12
-        |      THEN (sxw + (12 - rn) * sx) / 78.0 END AS wma12
+        |    CASE WHEN rn >= 12 THEN
+        |      list_reduce(list_transform(l, (x, i) -> x * CAST(i AS DOUBLE)), (a, b) -> a + b) / 78.0
+        |    END AS wma12
         |  FROM f),
         |chg AS (
         |  SELECT *, premium - lag(premium, 5)

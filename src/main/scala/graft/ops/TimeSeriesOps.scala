@@ -125,16 +125,15 @@ object TimeSeriesOps {
 
   /** #11 WMA(n) — pandas_ta-style linearly-weighted moving average
     * (crypto_data_pipeline_duckdb.py:1246-1263), null until the window is
-    * full. Reformulated as two rolling sums,
-    *   wma_t = (Σ rn·x over frame + (n − rn_t)·Σ x over frame) / (n(n+1)/2),
-    * and each rolling sum as a CUMULATIVE-sum difference
-    * (cum − lag(cum, n, 0)): Spark's sliding frames re-aggregate the
-    * whole O(n) frame on every row, while UNBOUNDED PRECEDING frames
-    * and lag update in O(1) — at 5M rows over 5 series this is the
-    * difference between 12s and ~2s, and the gap widens with window
-    * size. The oracle derives the sums the same way, so both engines
-    * produce bit-identical doubles (same sequential prefix sums, same
-    * subtraction); cnt over the sliding frame is just least(rn, n). */
+    * full. [[graft.Graft.wma]] sums over the bounded 12-row frame with
+    * frame-relative weights: on one key of 10^6 random-walk rows near 50
+    * it stays within 1.9e-15 relative of a direct convolution, where a
+    * running-sum difference (cum − lag(cum, 12)) drifts to 2.4e-5 and
+    * misses this oracle at sf0.1; the window step costs 1.6–2.9 s
+    * against the difference's 1.0–1.4 s at local[4]. The oracle is the direct definition — a left fold of
+    * x·i, i = 1..12, over each row's frame list — so it shares nothing
+    * with graft's algebra; the two agree to ~1e-15 relative, far inside
+    * the r6 rounding. */
   private val q11: Q = (s, dir) =>
     graft.Graft.wma(t(s, dir, "events"), "event_type", "ts", "event_id", "value", n = 12)
       .select(col("event_type"), col("event_id"), epochMs(col("ts")).as("ts_ms"), col("value"),
@@ -142,25 +141,17 @@ object TimeSeriesOps {
       .orderBy("event_type", "ts_ms", "event_id")
 
   private val q11Sql =
-    """WITH r AS (
+    """WITH f AS (
       |  SELECT event_type, event_id, ts, value,
-      |    row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS rn
-      |  FROM events),
-      |c AS (
-      |  SELECT *,
-      |    sum(value * rn) OVER w AS cxw,
-      |    sum(value) OVER w AS cx
-      |  FROM r
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-      |f AS (
-      |  SELECT *,
-      |    cxw - lag(cxw, 12, CAST(0.0 AS DOUBLE)) OVER o AS sxw,
-      |    cx - lag(cx, 12, CAST(0.0 AS DOUBLE)) OVER o AS sx
-      |  FROM c
+      |    row_number() OVER o AS rn,
+      |    list(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
+      |      ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS l
+      |  FROM events
       |  WINDOW o AS (PARTITION BY event_type ORDER BY ts, event_id))
       |SELECT event_type, event_id, epoch_ms(ts) AS ts_ms, value,
-      |  round(CASE WHEN least(rn, 12) = 12 THEN (sxw + (12 - rn) * sx) / 78.0 END, 6) AS wma12
+      |  round(CASE WHEN rn >= 12 THEN
+      |    list_reduce(list_transform(l, (x, i) -> x * CAST(i AS DOUBLE)), (a, b) -> a + b) / 78.0
+      |  END, 6) AS wma12
       |FROM f
       |ORDER BY event_type, ts_ms, event_id""".stripMargin
 
@@ -320,12 +311,13 @@ object TimeSeriesOps {
   /** #12b rolling correlation: Pearson corr between a series and its
     * 1-step lag over a 20-row window per key — the premium analytics'
     * natural next step (autocorrelation of the signal the reference
-    * computes WMAs over). Formulated as five rolling sums on one
-    * PARTITION BY key ORDER BY ts window chain — one shuffle, the sort
-    * reused by the lag and every frame; corr assembled from the sums in
-    * closed form (n·Σxy − ΣxΣy)/(√(n·Σx²−(Σx)²)·√(n·Σy²−(Σy)²)), the
-    * same arithmetic the oracle runs, so no covariance-algorithm
-    * divergence. Every input row appears in the output; corr is null
+    * computes WMAs over). Formulated as five sums over the bounded
+    * 20-row frame on one PARTITION BY key ORDER BY ts window chain —
+    * one shuffle, the sort reused by the lag and every frame; corr
+    * assembled from the sums in closed form
+    * (n·Σxy − ΣxΣy)/(√(n·Σx²−(Σx)²)·√(n·Σy²−(Σy)²)), the same
+    * arithmetic the oracle runs over the same oldest-first frame folds
+    * (`list_reduce`), so no covariance-algorithm divergence. Every input row appears in the output; corr is null
     * until the window is full (including the first row per key, which
     * has no lag pair) and on degenerate zero variance, guarded
     * identically on both sides. */
@@ -340,27 +332,21 @@ object TimeSeriesOps {
       |  SELECT event_type, event_id, ts, value,
       |    lag(value) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS y
       |  FROM events),
-      |c AS (
-      |  SELECT event_type, event_id, ts, value, y,
-      |    count(y) OVER w AS rn,
-      |    sum(CASE WHEN y IS NOT NULL THEN value END) OVER w AS cx,
-      |    sum(y) OVER w AS cy,
-      |    sum(CASE WHEN y IS NOT NULL THEN value END * y) OVER w AS cxy,
-      |    sum(CASE WHEN y IS NOT NULL THEN value END
-      |      * CASE WHEN y IS NOT NULL THEN value END) OVER w AS cx2,
-      |    sum(y * y) OVER w AS cy2
-      |  FROM l
-      |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+      |p AS (
+      |  SELECT *, CASE WHEN y IS NOT NULL THEN value END AS x FROM l),
       |w AS (
-      |  SELECT event_type, event_id, ts, rn,
-      |    cx - coalesce(lag(cx, 20) OVER o, CAST(0.0 AS DOUBLE)) AS sx,
-      |    cy - coalesce(lag(cy, 20) OVER o, CAST(0.0 AS DOUBLE)) AS sy,
-      |    cxy - coalesce(lag(cxy, 20) OVER o, CAST(0.0 AS DOUBLE)) AS sxy,
-      |    cx2 - coalesce(lag(cx2, 20) OVER o, CAST(0.0 AS DOUBLE)) AS sx2,
-      |    cy2 - coalesce(lag(cy2, 20) OVER o, CAST(0.0 AS DOUBLE)) AS sy2
-      |  FROM c
-      |  WINDOW o AS (PARTITION BY event_type ORDER BY ts, event_id))
+      |  SELECT event_type, event_id, ts,
+      |    count(y) OVER c AS rn,
+      |    list_reduce(list(x) FILTER (WHERE x IS NOT NULL) OVER f, (a, b) -> a + b) AS sx,
+      |    list_reduce(list(y) FILTER (WHERE y IS NOT NULL) OVER f, (a, b) -> a + b) AS sy,
+      |    list_reduce(list(x * y) FILTER (WHERE x IS NOT NULL) OVER f, (a, b) -> a + b) AS sxy,
+      |    list_reduce(list(x * x) FILTER (WHERE x IS NOT NULL) OVER f, (a, b) -> a + b) AS sx2,
+      |    list_reduce(list(y * y) FILTER (WHERE y IS NOT NULL) OVER f, (a, b) -> a + b) AS sy2
+      |  FROM p
+      |  WINDOW c AS (PARTITION BY event_type ORDER BY ts, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+      |    f AS (PARTITION BY event_type ORDER BY ts, event_id
+      |      ROWS BETWEEN 19 PRECEDING AND CURRENT ROW))
       |SELECT event_type, event_id, epoch_ms(ts) AS ts_ms,
       |  round(CASE WHEN rn >= 20 AND 20 * sx2 - sx * sx > 0 AND 20 * sy2 - sy * sy > 0
       |    THEN (20 * sxy - sx * sy) / (sqrt(20 * sx2 - sx * sx) * sqrt(20 * sy2 - sy * sy)) END, 6) AS corr20
@@ -807,12 +793,9 @@ object TimeSeriesOps {
 
   /** Classical additive seasonal decomposition (public operator behind
     * [[graft.Graft.decompose]]): per (series, bucket) —
-    *   trend     centered moving average over `window` buckets (odd),
-    *             computed as a CUMSUM DIFFERENCE (lead − lag of one
-    *             cumulative fold, O(1)/row — never a sliding frame,
-    *             whose add/remove float updates would diverge from the
-    *             oracle's frame sums), null within half a window of
-    *             either edge;
+    *   trend     centered moving average over `window` buckets (odd):
+    *             a sum over the bounded frame [t−h, t+h], null within
+    *             half a window of either edge;
     *   seasonal  the hour-of-day mean of the DETRENDED series (the
     *             q54 cumulative-fold-at-last-row rule — q61 subtracts
     *             raw hour means; detrending first is what separates a
@@ -827,15 +810,11 @@ object TimeSeriesOps {
     require(window >= 3 && window % 2 == 1,
       s"window must be odd and >= 3, got $window")
     val h = window / 2
-    val wOrd = Window.partitionBy(col("__k")).orderBy(col("__t"))
-    val cum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val centred = Window.partitionBy(col("__k")).orderBy(col("__t")).rowsBetween(-h, h)
     val base = df.select(col(keyCol).as("__k"), col(tsCol).as("__t"),
         col(valueCol).cast("double").as("__y"))
-      .withColumn("__cy", sum(col("__y")).over(cum))
       .withColumn("trend",
-        (lead(col("__cy"), h).over(wOrd) -
-          coalesce(lag(col("__cy"), h + 1).over(wOrd),
-            when(row_number().over(wOrd) === h + 1, lit(0.0)))) / window)
+        when(count(lit(1)).over(centred) === window, sum(col("__y")).over(centred) / window))
       .withColumn("__det", col("__y") - col("trend"))
       .withColumn("hod", hour(col("__t")))
     val wCell = Window.partitionBy(col("__k"), col("hod")).orderBy(col("__t"))
@@ -870,21 +849,14 @@ object TimeSeriesOps {
       |  SELECT event_type, date_trunc('hour', ts) AS bucket,
       |    last(value ORDER BY ts, event_id) AS close
       |  FROM events GROUP BY 1, 2),
-      |c AS (
-      |  SELECT event_type, bucket, close,
-      |    sum(close) OVER w AS cy,
-      |    row_number() OVER o AS rn
-      |  FROM b
-      |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket),
-      |    w AS (PARTITION BY event_type ORDER BY bucket
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
       |tr AS (
       |  SELECT event_type, bucket, close,
-      |    (lead(cy, 12) OVER o - coalesce(lag(cy, 13) OVER o,
-      |      CASE WHEN rn = 13 THEN 0.0 END)) / 25 AS trend,
+      |    CASE WHEN count(*) OVER f = 25
+      |      THEN list_reduce(list(close) OVER f, (a, b) -> a + b) / 25 END AS trend,
       |    hour(bucket) AS hod
-      |  FROM c
-      |  WINDOW o AS (PARTITION BY event_type ORDER BY bucket)),
+      |  FROM b
+      |  WINDOW f AS (PARTITION BY event_type ORDER BY bucket
+      |      ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
       |dt AS (SELECT *, close - trend AS det FROM tr),
       |cell AS (
       |  SELECT event_type, hod, sd / n AS seasonal FROM (

@@ -194,11 +194,10 @@ case class ExtremaOut(event_type: String, event_id: Long, ts_ms: Long, value: Do
 case class AtrEvent(event_type: String, event_id: Long, ts: java.sql.Timestamp,
                     high: Double, low: Double, close: Double)
 
-/** State for [[StreamOps.streamingAtr]]: previous close, the running
-  * cumulative true-range sum, the row count, and the cum values of the
-  * last n rows (so atr can subtract the cum EXACTLY n rows back — the
-  * same two prefix sums the batch window differences). O(n) per key. */
-case class AtrState(prevClose: Option[Double], cum: Double, rn: Long, cums: List[Double])
+/** State for [[StreamOps.streamingAtr]]: previous close and the true
+  * ranges of the last n bars, oldest first. O(n) per key, whatever the
+  * stream's length. */
+case class AtrState(prevClose: Option[Double], trs: List[Double])
 
 /** One ATR observation per input bar; `atr` is None until n bars. */
 case class AtrOut(event_type: String, event_id: Long, ts_ms: Long,
@@ -3066,13 +3065,12 @@ object StreamOps {
       }
   }
 
-  /** Batch [[graft.Graft.atr]] run CONTINUOUSLY. The batch plan is a
-    * prefix-sum difference — atr = (cum(tr) − cum(tr) n rows back)/n —
-    * so the state carries the SAME running cumulative sum plus the cum
-    * values of the last n rows, and every arrival performs the
-    * identical op sequence: streaming == batch BIT-FOR-BIT (the spec
-    * asserts exact equality, no tolerance). First bar's true range is
-    * high−low; gaps use |high/low − prevClose|; None until n bars. */
+  /** Batch [[graft.Graft.atr]] run CONTINUOUSLY. The batch plan sums
+    * the bounded n-bar frame oldest-first from 0.0, so the state keeps
+    * the last n true ranges and every arrival folds them in that same
+    * order: streaming == batch BIT-FOR-BIT (the spec asserts exact
+    * equality, no tolerance). First bar's true range is high−low; gaps
+    * use |high/low − prevClose|; None until n bars. */
   def streamingAtr(bars: Dataset[AtrEvent], n: Int): Dataset[AtrOut] = {
     require(n >= 1, s"n must be >= 1, got $n")
     import bars.sparkSession.implicits._
@@ -3081,22 +3079,16 @@ object StreamOps {
       .flatMapGroupsWithState[AtrState, AtrOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[AtrEvent], state: GroupState[AtrState]) =>
-          var st = state.getOption.getOrElse(AtrState(None, 0.0, 0L, Nil))
+          var st = state.getOption.getOrElse(AtrState(None, Nil))
           val out = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).map { e =>
             val tr = st.prevClose match {
               case None => e.high - e.low
               case Some(pc) =>
                 math.max(e.high - e.low, math.max(math.abs(e.high - pc), math.abs(e.low - pc)))
             }
-            val cum = st.cum + tr
-            val rn = st.rn + 1
-            // cum exactly n rows back: 0.0 at rn == n (batch's coalesce)
-            val atr =
-              if (rn >= n) Some((cum - (if (rn == n) 0.0 else st.cums.head)) / n)
-              else None
-            // keep the cums of the last n rows, oldest first
-            val kept = (st.cums :+ cum).takeRight(n)
-            st = AtrState(Some(e.close), cum, rn, kept)
+            val trs = (st.trs :+ tr).takeRight(n)
+            val atr = if (trs.size == n) Some(trs.foldLeft(0.0)(_ + _) / n) else None
+            st = AtrState(Some(e.close), trs)
             AtrOut(key, e.event_id, e.ts.getTime, e.close, tr, atr)
           }
           state.update(st)

@@ -158,6 +158,17 @@ class TvfSpec extends SparkSpec {
       s"expected pushed event_type filter in:\n$plan")
   }
 
+  test("graft_wma rejects a window length below 1") {
+    events.createOrReplaceTempView("tvf_events")
+    Seq(0, -3).foreach { n =>
+      intercept[IllegalArgumentException] {
+        spark.sql(
+          s"SELECT * FROM graft_wma('tvf_events', 'event_type', 'ts', 'event_id', 'value', $n)")
+          .collect()
+      }
+    }
+  }
+
   test("TVF argument validation fails loudly") {
     events.createOrReplaceTempView("tvf_events")
     val ex = intercept[Exception] {
