@@ -446,7 +446,10 @@ object Graft {
     * rounds with a `beam`-wide frontier, rank every scored candidate.
     * The scored set is the candidate budget — the recall-at-low-budget
     * frontier vs [[annIvf]]'s probed cells (GraphAnnSpec measures
-    * both). Returns (q_id, rank, <id>, cos_sim). */
+    * both). The search executes while it is built: the driver collects
+    * |q| entry rows plus ≤ beam·(r + in-degree)·|q| rows per hop, ids
+    * and cosines only, no vector beyond the queries. Returns
+    * (q_id, rank, <id>, cos_sim). */
   def annGraph(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                edges: DataFrame, id: String, vec: String, k: Int,
                beam: Int = 4, hops: Int = 3,
@@ -456,8 +459,10 @@ object Graft {
 
   /** FILTERED graph ANN (Filtered-DiskANN shape): top-k among vectors
     * in the `matching` id set, traversing the FULL graph for
-    * navigability and ranking only matching candidates. Full doc at
-    * [[ops.SimOps.filteredAnnOf]]. */
+    * navigability and ranking only matching candidates. The search
+    * executes while it is built: the driver collects |q| entry rows
+    * plus ≤ beam·(r + in-degree)·|q| rows per hop, no vector
+    * beyond the queries. Full doc at [[ops.SimOps.filteredAnnOf]]. */
   def annFiltered(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                   edges: DataFrame, id: String, vec: String,
                   matching: DataFrame, k: Int,

@@ -403,12 +403,16 @@ object ScaleProbe {
     * window (eagerly checkpointed edges — the same contract the s20
     * query and the tick give the search), then times graphAnnOf with
     * the SAME 5 queries/beam/hops on both and sums shuffle write bytes
-    * over exactly the search jobs. The claim under test: search shuffle
-    * volume is frontier/anchor-bounded — entry ranks |q|·(n/64) anchor
-    * rows and each hop shuffles only proposed-candidate rows — so
-    * shuffle bytes must grow like n/64 (the anchor term), never like
-    * the index; the edge list is READ per hop (broadcast frontier, no
-    * edge-side exchange), which the wall reflects honestly. */
+    * over exactly the search jobs (construction included: the search
+    * executes while it is built). The claim under test: only ids and
+    * cosines shuffle, on the query id — the entry's top-anchor window
+    * (at most one row per query and map partition, whatever n/64 is)
+    * and the final rank — while each hop's candidate and scored rows
+    * are collected to the driver and re-injected as local relations;
+    * so shuffle bytes are the |q|·budget scored rows plus at most
+    * |q|·partitions entry rows, and must not grow with the index (×1); the
+    * edge list and corpus are SCANNED per hop against a broadcast local
+    * side, never exchanged, which the wall reflects honestly. */
   private def annSearchProbe(factor: Int): Unit = {
     val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,9 @@ package graft.ops
 
 import graft.{F, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.functions._
@@ -449,11 +452,10 @@ object SimOps {
       .join(v.select(col("vec_id").as("dst"), col("v").as("dv")), "dst")
       .withColumn("cos", expr("graft_cosine(sv, dv)"))
       .select(col("src"), col("dst"), col("cos"))
-    // the same sharing rule as beamScoredByHop: scored0 (the widest
-    // compute of the build) is referenced by round-0's top-r, every
-    // round's anti join and the final top-r — checkpoint it and each
-    // round's fresh scores once instead of re-embedding the subtree
-    // per reference (values bit-identical)
+    // scored0 (the widest compute of the build) is referenced by
+    // round-0's top-r, every round's anti join and the final top-r —
+    // checkpoint it and each round's fresh scores once instead of
+    // re-embedding the subtree per reference (values bit-identical)
     def shared(df: DataFrame): DataFrame =
       graft.Checkpoints.stabilize(df, eager = false)
     var scored = if (descentRounds > 0) shared(scored0) else scored0
@@ -489,24 +491,22 @@ object SimOps {
     * on a balanced graph; GraphAnnSpec measures it against IVF's
     * probed-cell budget.
     *
-    * Scale shape: queries and anchors broadcast (the [[ivfAnnOf]]
-    * contract — queries ≪ corpus); each hop is one r-bounded edge
-    * join plus one query-sized corpus lookup join; the corpus itself
-    * never shuffles on anything but its own id. Pass `edges`
-    * localCheckpoint'd when the build is expensive — each hop's plan
-    * references it. */
+    * The search EXECUTES WHILE IT IS BUILT ([[beamScoredByHop]]): the
+    * driver collects |q| entry rows (each query's top anchor, picked in
+    * Spark), then per hop at most beam·(r + in-degree)·|q| candidate
+    * rows and as many scored rows — ids and cosines only, no vector
+    * beyond the queries' broadcast. The returned frame is the final
+    * rank over that local scored set, and the search pins no storage.
+    * The edge list and corpus are scanned per hop, never exchanged;
+    * pass `edges` localCheckpoint'd when the build is expensive. */
   def graphAnnOf(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                  edges: DataFrame, idCol: String, vecCol: String,
                  k: Int, beam: Int, hops: Int,
                  excludeSelf: Boolean = true): DataFrame = {
     require(k >= 1 && beam >= 1 && hops >= 0,
       s"need k >= 1, beam >= 1, hops >= 0; got k=$k beam=$beam hops=$hops")
-    // share = true even for a single search: hop h's fresh set is
-    // referenced by every later hop's already-scored anti join and by
-    // the final rank — without the checkpoint the tree re-embeds it
-    // per reference (hop 1 evaluated ~3x in a hops=3 search)
     rankScored(beamScoredByHop(corpus, queries, anchors, edges, idCol,
-      vecCol, beam, hops, share = true).last, k, excludeSelf)
+      vecCol, beam, hops).last, k, excludeSelf)
   }
 
   /** The rank tail of [[graphAnnOf]]: every scored candidate ranked
@@ -523,83 +523,72 @@ object SimOps {
   /** The beam chain of [[graphAnnOf]], one CUMULATIVE scored frame per
     * depth: element h is exactly the scored set a `hops = h` search
     * ends with (the chain is PREFIX-INVARIANT — hop h's frontier and
-    * fresh set never depend on later hops — the same rule the s21
-    * oracle exploits to serve three frontier points from one chain).
-    * With `share = true` the entry row and each hop's fresh set are
-    * lazily checkpointed, so a caller evaluating SEVERAL depths in one
-    * plan (s21's recall frontier) pays each hop once instead of
-    * re-running the shared prefix per depth (round-17: 6 hop
-    * expansions + 3 entry passes → 3 + 1 for the three-arm frontier);
-    * values are bit-identical either way. */
+    * fresh set never depend on later hops — so s21 serves three
+    * frontier points from one chain).
+    *
+    * The budget-bounded sets are collected and re-injected: one
+    * collect for each query's entry row (its top anchor by a
+    * `row_number` window, so |q| rows reach the driver and the only
+    * exchange carries ids and cosines), then per hop one for the
+    * frontier ⋈ symmetrized-edge candidates and one for the exact
+    * cosines of the proposed ids (deduped per (q_id, id) on the driver,
+    * minus the already-scored pairs). The next frontier is each query's
+    * top-`beam` fresh rows, ordered on the driver by Spark's own
+    * `InterpretedOrdering` over the window's sort keys, so NaN and NULL
+    * cosines, ties and any orderable id type rank as every window of
+    * this search ranks them. Every frame handed to Spark — frontier,
+    * proposed ids, each hop's scored rows — is a local relation (a
+    * depth's cumulative scored set is the union of them), so the
+    * planner sees exact sizes and broadcasts it: the edge list and
+    * corpus are scanned, never exchanged, and no lineage is cut. */
   private[graft] def beamScoredByHop(corpus: DataFrame, queries: DataFrame,
                                      anchors: DataFrame, edges: DataFrame,
                                      idCol: String, vecCol: String,
-                                     beam: Int, hops: Int,
-                                     share: Boolean = false): IndexedSeq[DataFrame] = {
+                                     beam: Int, hops: Int): IndexedSeq[DataFrame] = {
     val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     val q = broadcast(queries.select(col(idCol).as("q_id"),
       col(vecCol).cast("array<double>").as("qv")))
     val anc = broadcast(anchors.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("av")))
-    def shared(df: DataFrame): DataFrame =
-      if (share) graft.Checkpoints.stabilize(df, eager = false) else df
-    val wEnt = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    val entry = shared(q.crossJoin(anc)
-      .withColumn("cos", expr("graft_cosine(qv, av)"))
-      .withColumn("__rn", row_number().over(wEnt)).filter(col("__rn") === 1)
-      .select(col("q_id"), col("vec_id"), col("cos")))
-    // NO distinct on the symmetrized view: a bidirectional pair would
-    // appear twice here, but every hop's `proposed` already dedupes per
-    // (q_id, candidate) — the duplicate costs one extra frontier-join
-    // output row (frontier-bounded), where the distinct cost one
-    // INDEX-SIZED shuffle per search (round-17; values bit-identical).
-    // NO checkpoint on the view either (round-18, measured): the union
-    // is two PROJECTIONS of the caller's already-checkpointed edge RDD
-    // — no shuffle, no recomputation — so the per-hop "re-scan" costs
-    // only in-memory block reads, while materializing the 2×|edges|
-    // symmetrized rows as their own checkpoint added a serialization
-    // job per search and measured WORSE across the family (s20 3.7→6.9,
-    // s26 7.0→9.8, st16 10.1→14.1 solo at a steady canary). The p03
-    // rule again: checkpoints pay only when they avoid re-EXECUTION of
-    // expensive subtrees, and this subtree was already free.
+    // NO distinct on the symmetrized view: a bidirectional pair appears
+    // twice here, and the driver-side dedupe of each hop's candidates
+    // collapses it
     val ed = edges.select(col("src").as("vec_id"), col("dst"))
       .union(edges.select(col("dst").as("vec_id"), col("src").as("dst")))
-    val wBeam = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    val out = IndexedSeq.newBuilder[DataFrame]
-    var scored = entry
-    out += scored
-    var frontier = entry.select(col("q_id"), col("vec_id"))
-    var hop = 0
-    // EXPLICIT broadcasts on every query-budget-bounded join side
-    // (round-18, guide §3.1 — the ×50 annsearch probe caught search
-    // shuffle bytes growing ×46.8 with the index): the frontier and
-    // scored set hang off LogicalRDD checkpoints whose size Catalyst
-    // cannot estimate, so un-hinted the hop joins planned SortMergeJoin
-    // and SHUFFLED the symmetrized edge view AND the corpus vectors
-    // once per hop — index/corpus-sized exchanges for a frontier-sized
-    // probe. Broadcast sizes are the op's own budget bound: frontier ≤
-    // beam·|q| ids, proposed ≤ frontier·(r + in-degree) ids, scored ≤
-    // the search budget — all within the queries ≪ corpus contract that
-    // already broadcasts q and the anchors. The edge list and corpus
-    // are now only SCANNED per hop, never exchanged (values unchanged —
-    // broadcast is a strategy hint).
-    while (hop < hops) {
-      val proposed = broadcast(frontier).join(ed, "vec_id")
-        .select(col("q_id"), col("dst").as("vec_id")).distinct()
-        .join(broadcast(scored.select(col("q_id"), col("vec_id"))),
-          Seq("q_id", "vec_id"), "left_anti")
-      val fresh = shared(broadcast(proposed)
-        .join(v, "vec_id")
-        .join(q, "q_id")
-        .withColumn("cos", expr("graft_cosine(qv, v)"))
-        .select(col("q_id"), col("vec_id"), col("cos")))
-      scored = scored.union(fresh)
-      out += scored
-      frontier = fresh.withColumn("__rn", row_number().over(wBeam))
-        .filter(col("__rn") <= beam).select(col("q_id"), col("vec_id"))
-      hop += 1
-    }
-    out.result()
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
+    val entry = q.crossJoin(anc)
+      .select(col("q_id"), col("vec_id"), expr("graft_cosine(qv, av)").as("cos"))
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    val schema = entry.schema
+    val pairs = StructType(schema.fields.take(2).map(_.copy(nullable = true)))
+    def local(rows: Seq[Row], s: StructType): DataFrame =
+      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), s)
+    def key(r: Row): (Any, Any) = (r.get(0), r.get(1))
+    // each query's top-`beam` fresh rows in `w`'s order, compared by
+    // Spark's own row ordering — the windows' NaN, NULL, -0.0 and
+    // id-type rules, with no exchange per hop
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val byCosThenId = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(2, schema("cos").dataType, nullable = true), Descending),
+      SortOrder(BoundReference(1, schema("vec_id").dataType, nullable = true), Ascending)))
+    def top(rows: Seq[Row], n: Int): Seq[Row] = rows.groupBy(_.get(0)).values.flatMap { g =>
+      g.map(r => r -> toInternal(r).asInstanceOf[InternalRow]).sortBy(_._2)(byCosThenId).take(n).map(_._1)
+    }.toSeq
+    val entryRows = entry.collect().toSeq
+    // (cumulative scored frame, its (q_id, id) keys, frontier) after
+    // each hop: every scored row is held once, in its hop's local
+    // relation, and the depth frames are unions of those
+    (1 to hops).scanLeft((local(entryRows, schema), entryRows.map(key).toSet, entryRows)) {
+      case ((scored, seen, frontier), _) =>
+        // an empty local side plans to an empty relation: no job
+        val proposed = local(frontier.map(r => Row(r.get(0), r.get(1))), pairs)
+          .join(ed, "vec_id").select(col("q_id"), col("dst").cast(pairs("vec_id").dataType).as("vec_id"))
+          .collect().toSeq.distinct.filterNot(r => seen(key(r)))
+        val fresh = local(proposed, pairs).join(v, "vec_id").join(q, "q_id")
+          .select(col("q_id"), col("vec_id"), expr("graft_cosine(qv, v)").as("cos"))
+          .collect().toSeq
+        (scored.union(local(fresh, schema)), seen ++ proposed.map(key), top(fresh, beam))
+    }.map(_._1)
   }
 
   /** INCREMENTAL k-NN-graph maintenance (public operator behind
@@ -647,7 +636,7 @@ object SimOps {
     * replays build AND insert verbatim; cosine symmetry makes
     * reversed scores bit-identical (the sequential dot kernel is
     * term-commutative), so the distinct collapses both directions of
-    * a delta↔delta pair. Scale shape: search shuffles the r-bounded
+    * a delta↔delta pair. Scale shape: search scans the r-bounded
     * edge list per hop and looks up only scored candidates; connect
     * pairs ≤ |delta|·probes·cap; repair challenges ≤ r·|delta| reverse
     * edges + cap²·(cells touched by the delta) corpus↔delta rep pairs
@@ -656,7 +645,12 @@ object SimOps {
     * cell assignment (a scan + broadcast-centroid rank, no corpus
     * shuffle of vectors beyond it); the streaming tick persists
     * assignments in its store precisely to avoid repaying it
-    * ([[graft.streaming.StreamOps.annIndexTick]]). */
+    * ([[graft.streaming.StreamOps.annIndexTick]]).
+    *
+    * The search step executes while this frame is built
+    * ([[graphAnnOf]]): the driver collects |delta| entry rows plus
+    * ≤ beam·(r + in-degree)·|delta| rows per hop, no vector beyond the
+    * delta's. */
   def graphInsertOf(corpus: DataFrame, delta: DataFrame, edges: DataFrame,
                     centroids: DataFrame, anchors: DataFrame,
                     idCol: String, vecCol: String,
@@ -744,17 +738,10 @@ object SimOps {
     val cents = broadcast(centroids
       .select(col(idCol).as("c_id"), col(vecCol).cast("array<double>").as("cv")))
     // search: delta vectors as queries over the EXISTING graph; the
-    // whole scored set (entry + every hop) is the candidate pool.
-    // share = true: each hop's fresh set is checkpointed, so the plan
-    // UNDER every later hop is a shallow LogicalRDD leaf instead of a
-    // tree that embeds the previous hop twice (proposed ∪ anti-join) —
-    // at hops=3 over the tick's lazy post-delete union view, Catalyst
-    // re-planning of that multiplicative tree measured ~6 s of
-    // DRIVER-side construction per tick (round-17 TickProbe;
-    // values bit-identical, the s21 sharing rule)
-    val deltaOld = rankScored(beamScoredByHop(corpus, delta, anchors, edges,
-        idCol, vecCol, beam = beam, hops = hops, share = true).last,
-        k = Int.MaxValue, excludeSelf = false)
+    // whole scored set (entry + every hop) is the candidate pool — a
+    // local relation, so nothing below re-plans the search
+    val deltaOld = beamScoredByHop(corpus, delta, anchors, edges,
+        idCol, vecCol, beam = beam, hops = hops).last
       .select(col("q_id").as("src"), col("vec_id").as("dst"), col("cos"))
     // connect: the full build's cell-proposal rule restricted to the
     // delta — combined (corpus ∪ delta) per-cell rep pool, same
@@ -1010,7 +997,11 @@ object SimOps {
     * unfiltered top-78 budget). The budget is selectivity-dependent
     * but corpus-INDEPENDENT (the s21 frontier argument survives
     * filtering); very low selectivities belong on a label-partitioned
-    * index instead — the d14-style honest boundary. */
+    * index instead — the d14-style honest boundary.
+    *
+    * The search executes while it is built ([[graphAnnOf]]): the
+    * driver collects |q| entry rows plus ≤ beam·(r + in-degree)·|q|
+    * rows per hop, no vector beyond the queries. */
   def filteredAnnOf(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                     edges: DataFrame, idCol: String, vecCol: String,
                     matching: DataFrame, k: Int, beam: Int, hops: Int): DataFrame = {
@@ -1247,13 +1238,12 @@ ORDER BY q_id, rank"""
     val q = all.filter(col("vec_id") < 5)
     val brute = graft.Checkpoints.stabilize(graft.Graft.knnBrute(all, q, "vec_id", "v", K)
       .select(col("q_id"), col("vec_id")), eager = false)
-    // ONE shared beam chain serves all three frontier points (the
+    // ONE beam chain serves all three frontier points (the
     // prefix-invariance the oracle already exploits): element h of
     // [[beamScoredByHop]] IS the `hops = h` search's scored set, so the
     // three arms pay 3 hop expansions + 1 entry pass instead of 6 + 3
-    // (round-17; per-arm values bit-identical to the per-arm searches).
     val byHop = beamScoredByHop(all, q, anchors, edges, "vec_id", "v",
-      beam = 4, hops = 3, share = true)
+      beam = 4, hops = 3)
     (1 to 3).map { h =>
       val scored = rankScored(byHop(h), k = Int.MaxValue, excludeSelf = true)
       val bud = scored.groupBy(col("q_id")).agg(count(lit(1)).as("__scored"))
