@@ -446,10 +446,12 @@ object Graft {
     * rounds with a `beam`-wide frontier, rank every scored candidate.
     * The scored set is the candidate budget — the recall-at-low-budget
     * frontier vs [[annIvf]]'s probed cells (GraphAnnSpec measures
-    * both). The search executes while it is built: the driver collects
-    * |q| entry rows plus ≤ beam·(r + in-degree)·|q| rows per hop, ids
-    * and cosines only, no vector beyond the queries. Returns
-    * (q_id, rank, <id>, cos_sim). */
+    * both). The search executes while it is built, in 3 + 2·hops jobs,
+    * and returns a local relation: collecting it runs no job. The
+    * driver holds the queries, then ids and cosines only — |q| entry
+    * rows plus ≤ beam·(r + in-degree)·|q| scored rows per hop — and,
+    * during one hop, the vectors of its ≤ min(corpus, beam·(r + in-degree)·|q|)
+    * proposed ids. Returns (q_id, rank, <id>, cos_sim). */
   def annGraph(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                edges: DataFrame, id: String, vec: String, k: Int,
                beam: Int = 4, hops: Int = 3,
@@ -460,9 +462,11 @@ object Graft {
   /** FILTERED graph ANN (Filtered-DiskANN shape): top-k among vectors
     * in the `matching` id set, traversing the FULL graph for
     * navigability and ranking only matching candidates. The search
-    * executes while it is built: the driver collects |q| entry rows
-    * plus ≤ beam·(r + in-degree)·|q| rows per hop, no vector
-    * beyond the queries. Full doc at [[ops.SimOps.filteredAnnOf]]. */
+    * executes while it is built, in 3 + 2·hops jobs: the driver holds
+    * the queries, then ids and cosines only — |q| entry rows plus
+    * ≤ beam·(r + in-degree)·|q| scored rows per hop — and, during one
+    * hop, the vectors of its proposed ids. Full doc at
+    * [[ops.SimOps.filteredAnnOf]]. */
   def annFiltered(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                   edges: DataFrame, id: String, vec: String,
                   matching: DataFrame, k: Int,

@@ -1,12 +1,16 @@
 package graft.ops
 
 import graft.{F, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import graft.functions.CosineSim
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
-  InterpretedOrdering, SortOrder}
+  InSet, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 
 /** Similarity search (SURVEY.md §2 #25-26) over the `embeddings` table.
@@ -491,14 +495,15 @@ object SimOps {
     * on a balanced graph; GraphAnnSpec measures it against IVF's
     * probed-cell budget.
     *
-    * The search EXECUTES WHILE IT IS BUILT ([[beamScoredByHop]]): the
-    * driver collects |q| entry rows (each query's top anchor, picked in
-    * Spark), then per hop at most beam·(r + in-degree)·|q| candidate
-    * rows and as many scored rows — ids and cosines only, no vector
-    * beyond the queries' broadcast. The returned frame is the final
-    * rank over that local scored set, and the search pins no storage.
-    * The edge list and corpus are scanned per hop, never exchanged;
-    * pass `edges` localCheckpoint'd when the build is expensive. */
+    * The search EXECUTES WHILE IT IS BUILT ([[beamScoredByHop]]) and
+    * returns a local relation: 3 + 2·hops jobs, none for the final
+    * rank or the caller's collect. The driver holds the queries, ids
+    * and cosines only — |q| entry rows, ≤ beam·(r + in-degree)·|q|
+    * scored rows per hop — and no vector beyond the queries except,
+    * during one hop, those of its ≤ min(corpus, beam·(r + in-degree)·|q|)
+    * proposed ids. The edge list and corpus are scanned per hop under
+    * an id-set filter, never joined or exchanged; pass `edges`
+    * localCheckpoint'd when the build is expensive. */
   def graphAnnOf(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                  edges: DataFrame, idCol: String, vecCol: String,
                  k: Int, beam: Int, hops: Int,
@@ -509,15 +514,54 @@ object SimOps {
       vecCol, beam, hops).last, k, excludeSelf)
   }
 
-  /** The rank tail of [[graphAnnOf]]: every scored candidate ranked
-    * (cos desc, ties → smaller id), top `k` kept. */
+  /** The rank tail of [[graphAnnOf]] over a local scored set, on the
+    * driver: every scored candidate ranked (cos desc, ties → smaller
+    * id), top `k` kept, as one local relation. The self-exclusion
+    * filter folds into the local relation, so the rank runs no job. */
   private def rankScored(scored: DataFrame, k: Int,
                          excludeSelf: Boolean): DataFrame = {
-    val wBeam = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.filter(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-      .withColumn("rank", row_number().over(wBeam).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
+    val kept = if (excludeSelf) scored.filter(col("vec_id") =!= col("q_id")) else scored
+    val s = kept.schema
+    val ranked = topPerQuery(collectInternal(kept).toSeq, s, k).flatMap(_.zipWithIndex.map {
+      case (r, i) => InternalRow(r.get(0, s("q_id").dataType), i + 1L,
+        r.get(1, s("vec_id").dataType), r.get(2, DoubleType))
+    }).toSeq
+    localOf(scored.sparkSession, StructType(Seq(s("q_id"),
+      StructField("rank", LongType, nullable = false), s("vec_id"), s("cos"))), ranked)
+  }
+
+  /** Each query's first `n` (q_id, vec_id, cos) rows in
+    * `Window.partitionBy(q_id).orderBy(cos.desc, vec_id)` order,
+    * compared by Spark's own row ordering: the windows' NaN, NULL,
+    * -0.0 and id-type rules. */
+  private def topPerQuery(rows: Seq[InternalRow], s: StructType, n: Int): Iterable[Seq[InternalRow]] = {
+    val order = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(2, s("cos").dataType, nullable = true), Descending),
+      SortOrder(BoundReference(1, s("vec_id").dataType, nullable = true), Ascending)))
+    rows.groupBy(_.get(0, s("q_id").dataType)).values.map(_.sorted(order).take(n))
+  }
+
+  /** `df`'s rows as Catalyst rows, in one SQL execution (`collect()`
+    * without the conversion to external rows). A local relation
+    * collects without a job. */
+  private def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  private def localOf(s: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftSqlBridge.ofRows(s, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df`'s rows whose first column is in `ids`: one scan under an
+    * `InSet` filter (pushed below projections and unions), whatever the
+    * set's size. */
+  private def firstColIn(df: DataFrame, ids: Iterable[Any]): Array[InternalRow] = {
+    val set = ids.iterator.filter(_ != null).toSet
+    if (set.isEmpty) Array.empty
+    else {
+      val p = df.queryExecution.analyzed
+      collectInternal(GraftSqlBridge.ofRows(df.sparkSession, Filter(InSet(p.output.head, set), p)))
+    }
   }
 
   /** The beam chain of [[graphAnnOf]], one CUMULATIVE scored frame per
@@ -526,69 +570,72 @@ object SimOps {
     * fresh set never depend on later hops — so s21 serves three
     * frontier points from one chain).
     *
-    * The budget-bounded sets are collected and re-injected: one
-    * collect for each query's entry row (its top anchor by a
-    * `row_number` window, so |q| rows reach the driver and the only
-    * exchange carries ids and cosines), then per hop one for the
-    * frontier ⋈ symmetrized-edge candidates and one for the exact
-    * cosines of the proposed ids (deduped per (q_id, id) on the driver,
-    * minus the already-scored pairs). The next frontier is each query's
-    * top-`beam` fresh rows, ordered on the driver by Spark's own
-    * `InterpretedOrdering` over the window's sort keys, so NaN and NULL
-    * cosines, ties and any orderable id type rank as every window of
-    * this search ranks them. Every frame handed to Spark — frontier,
-    * proposed ids, each hop's scored rows — is a local relation (a
-    * depth's cumulative scored set is the union of them), so the
-    * planner sees exact sizes and broadcasts it: the edge list and
-    * corpus are scanned, never exchanged, and no lineage is cut. */
+    * The queries are collected once. The entry broadcasts that local
+    * copy against the anchors and picks each query's top anchor with a
+    * `row_number` window (one exchange of ids and cosines, at most one
+    * row per query and map partition), so |q| rows reach the driver.
+    * Each hop is then two scans, and everything else runs on the
+    * driver:
+    *   1. the symmetrized edges of the frontier's ids, collected under
+    *      an `InSet` filter; paired with the frontier's q_ids, deduped
+    *      per (q_id, id), minus the already-scored pairs;
+    *   2. the vectors of the proposed ids, collected as Catalyst rows
+    *      under an `InSet` filter; each proposed pair is scored by the
+    *      [[graft.functions.CosineSim]] expression's own `eval`, so NaN,
+    *      NULL and ragged vectors score exactly as `graft_cosine`. Only
+    *      the ids and cosines outlive the hop.
+    * The next frontier is each query's top-`beam` fresh rows in the
+    * window order ([[topPerQuery]]). Each depth is one local relation
+    * over the rows held so far (the depths share those rows), so the
+    * search cuts no lineage, pins nothing, and its callers' ranks and
+    * collects run no job. */
   private[graft] def beamScoredByHop(corpus: DataFrame, queries: DataFrame,
                                      anchors: DataFrame, edges: DataFrame,
                                      idCol: String, vecCol: String,
                                      beam: Int, hops: Int): IndexedSeq[DataFrame] = {
-    val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-    val q = broadcast(queries.select(col(idCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("qv")))
+    val spark = corpus.sparkSession
+    val qDf = queries.select(col(idCol).as("q_id"), col(vecCol).cast("array<double>").as("qv"))
+    val qRows = collectInternal(qDf)
     val anc = broadcast(anchors.select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("av")))
-    // NO distinct on the symmetrized view: a bidirectional pair appears
-    // twice here, and the driver-side dedupe of each hop's candidates
-    // collapses it
-    val ed = edges.select(col("src").as("vec_id"), col("dst"))
-      .union(edges.select(col("dst").as("vec_id"), col("src").as("dst")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    val entry = q.crossJoin(anc)
+    val entry = broadcast(localOf(spark, qDf.schema, qRows.toSeq)).crossJoin(anc)
       .select(col("q_id"), col("vec_id"), expr("graft_cosine(qv, av)").as("cos"))
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
     val schema = entry.schema
-    val pairs = StructType(schema.fields.take(2).map(_.copy(nullable = true)))
-    def local(rows: Seq[Row], s: StructType): DataFrame =
-      corpus.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), s)
-    def key(r: Row): (Any, Any) = (r.get(0), r.get(1))
-    // each query's top-`beam` fresh rows in `w`'s order, compared by
-    // Spark's own row ordering — the windows' NaN, NULL, -0.0 and
-    // id-type rules, with no exchange per hop
-    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
-    val byCosThenId = new InterpretedOrdering(Seq(
-      SortOrder(BoundReference(2, schema("cos").dataType, nullable = true), Descending),
-      SortOrder(BoundReference(1, schema("vec_id").dataType, nullable = true), Ascending)))
-    def top(rows: Seq[Row], n: Int): Seq[Row] = rows.groupBy(_.get(0)).values.flatMap { g =>
-      g.map(r => r -> toInternal(r).asInstanceOf[InternalRow]).sortBy(_._2)(byCosThenId).take(n).map(_._1)
-    }.toSeq
-    val entryRows = entry.collect().toSeq
-    // (cumulative scored frame, its (q_id, id) keys, frontier) after
-    // each hop: every scored row is held once, in its hop's local
-    // relation, and the depth frames are unions of those
-    (1 to hops).scanLeft((local(entryRows, schema), entryRows.map(key).toSet, entryRows)) {
+    val (qType, idType) = (schema("q_id").dataType, schema("vec_id").dataType)
+    // NO distinct on the symmetrized view: a bidirectional pair appears
+    // twice here, and the driver-side dedupe of each hop's candidates
+    // collapses it
+    val ed = edges.select(col("src").cast(idType).as("vec_id"), col("dst").cast(idType).as("dst"))
+      .union(edges.select(col("dst").cast(idType).as("vec_id"), col("src").cast(idType).as("dst")))
+    val v = corpus.select(col(idCol).cast(idType).as("vec_id"),
+      col(vecCol).cast("array<double>").as("v"))
+    val vecType = v.schema("v").dataType
+    // a NULL q_id or id is proposed but never scored, as a NULL join key
+    // matches nothing in the relational beam
+    val qv = qRows.toSeq.filterNot(_.isNullAt(0)).groupBy(_.get(0, qType))
+      .map { case (id, rs) => id -> rs.map(_.get(1, vecType)) }
+    val cosine = CosineSim(BoundReference(0, vecType, nullable = true),
+      BoundReference(1, vecType, nullable = true))
+    def key(r: InternalRow): (Any, Any) = (r.get(0, qType), r.get(1, idType))
+    val entryRows = collectInternal(entry).toVector
+    // (cumulative scored rows, their (q_id, id) keys, frontier) after
+    // each hop
+    (1 to hops).scanLeft((entryRows, entryRows.map(key).toSet, entryRows: Seq[InternalRow])) {
       case ((scored, seen, frontier), _) =>
-        // an empty local side plans to an empty relation: no job
-        val proposed = local(frontier.map(r => Row(r.get(0), r.get(1))), pairs)
-          .join(ed, "vec_id").select(col("q_id"), col("dst").cast(pairs("vec_id").dataType).as("vec_id"))
-          .collect().toSeq.distinct.filterNot(r => seen(key(r)))
-        val fresh = local(proposed, pairs).join(v, "vec_id").join(q, "q_id")
-          .select(col("q_id"), col("vec_id"), expr("graft_cosine(qv, v)").as("cos"))
-          .collect().toSeq
-        (scored.union(local(fresh, schema)), seen ++ proposed.map(key), top(fresh, beam))
-    }.map(_._1)
+        val adj = firstColIn(ed, frontier.map(_.get(1, idType))).groupBy(_.get(0, idType))
+        val proposed = frontier.flatMap { f =>
+          adj.getOrElse(f.get(1, idType), Array.empty[InternalRow]).map(e => (f.get(0, qType), e.get(1, idType)))
+        }.distinct.filterNot(seen)
+        val vecs = firstColIn(v, proposed.map(_._2)).groupBy(_.get(0, idType))
+        val fresh = for {
+          (qId, id) <- proposed
+          a <- qv.getOrElse(qId, Nil)
+          b <- vecs.getOrElse(id, Array.empty[InternalRow])
+        } yield InternalRow(qId, id, cosine.eval(InternalRow(a, b.get(1, vecType))))
+        (scored ++ fresh, seen ++ proposed, topPerQuery(fresh, schema, beam).flatten.toSeq)
+    }.map { case (scored, _, _) => localOf(spark, schema, scored) }
   }
 
   /** INCREMENTAL k-NN-graph maintenance (public operator behind
@@ -648,9 +695,11 @@ object SimOps {
     * ([[graft.streaming.StreamOps.annIndexTick]]).
     *
     * The search step executes while this frame is built
-    * ([[graphAnnOf]]): the driver collects |delta| entry rows plus
-    * ≤ beam·(r + in-degree)·|delta| rows per hop, no vector beyond the
-    * delta's. */
+    * ([[graphAnnOf]], 3 + 2·hops jobs): the driver holds the delta's
+    * vectors, then ids and cosines only — |delta| entry rows plus
+    * ≤ beam·(r + in-degree)·|delta| scored rows per hop — and, during
+    * one hop, the vectors of its ≤ min(corpus, beam·(r + in-degree)·|delta|)
+    * proposed ids. */
   def graphInsertOf(corpus: DataFrame, delta: DataFrame, edges: DataFrame,
                     centroids: DataFrame, anchors: DataFrame,
                     idCol: String, vecCol: String,
@@ -738,7 +787,7 @@ object SimOps {
     val cents = broadcast(centroids
       .select(col(idCol).as("c_id"), col(vecCol).cast("array<double>").as("cv")))
     // search: delta vectors as queries over the EXISTING graph; the
-    // whole scored set (entry + every hop) is the candidate pool — a
+    // whole scored set (entry + every hop) is the candidate pool — one
     // local relation, so nothing below re-plans the search
     val deltaOld = beamScoredByHop(corpus, delta, anchors, edges,
         idCol, vecCol, beam = beam, hops = hops).last
@@ -999,9 +1048,12 @@ object SimOps {
     * filtering); very low selectivities belong on a label-partitioned
     * index instead — the d14-style honest boundary.
     *
-    * The search executes while it is built ([[graphAnnOf]]): the
-    * driver collects |q| entry rows plus ≤ beam·(r + in-degree)·|q|
-    * rows per hop, no vector beyond the queries. */
+    * The search executes while it is built ([[graphAnnOf]], 3 + 2·hops
+    * jobs): the driver holds the queries, then ids and cosines only —
+    * |q| entry rows plus ≤ beam·(r + in-degree)·|q| scored rows per hop —
+    * and, during one hop, the vectors of its
+    * ≤ min(corpus, beam·(r + in-degree)·|q|) proposed ids. The matching
+    * filter and rank run in Spark over that local scored set. */
   def filteredAnnOf(corpus: DataFrame, queries: DataFrame, anchors: DataFrame,
                     edges: DataFrame, idCol: String, vecCol: String,
                     matching: DataFrame, k: Int, beam: Int, hops: Int): DataFrame = {

@@ -5,10 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,13 +18,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.ops.SimOps
 
 /** The graph search's execution contract ([[SimOps.beamScoredByHop]]):
-  * each hop's budget-bounded set is collected and re-injected as a
-  * local relation, so a search pins no storage, stays within a job
-  * budget, shuffles before its final rank only the entry's top-anchor
-  * window (ids and cosines, at most one row per query and map
-  * partition), and ranks exactly as the relational beam does — NaN
-  * cosines first, NULL cosines last, ties to the smaller id, for any
-  * orderable id type. */
+  * the queries are read once, each hop is two scans under an id-set
+  * filter, and the driver scores and ranks what they return, so a
+  * search pins no storage, stays within a job budget, shuffles only the
+  * entry's top-anchor window (ids and cosines, at most one row per query
+  * and map partition), and ranks exactly as the relational beam does —
+  * NaN cosines first, NULL cosines last, ties to the smaller id, for
+  * any orderable id type. */
 class GraphSearchSpec extends SparkSpec {
 
   /** 2000 seeded Gaussian 16-dim vectors (fixed partitioning, so the
@@ -54,10 +55,15 @@ class GraphSearchSpec extends SparkSpec {
         (spark.sparkContext.getPersistentRDDs.keySet -- before).mkString(", "))
   }
 
-  test("a 5-query beam-4 3-hop search runs <= 20 jobs, shuffles nothing but the entry's " +
-    "top-anchor window before the final rank, and its hop joins broadcast the local side") {
+  test("a 5-query beam-4 3-hop search runs <= 9 jobs and its queries' plan once, shuffles " +
+    "only the entry's top-anchor window, and each hop collect is one scan under an InSet filter") {
     edges.count()
-    search().collect() // warm: codegen
+    // the queries as a local relation, as a serving loop holds them
+    val local = spark.createDataFrame(corpus.filter(col("vec_id") < 5).collect().toSeq.asJava,
+      corpus.schema)
+    def searchOf(queries: DataFrame): DataFrame = SimOps.graphAnnOf(corpus, queries,
+      anchors, edges, "vec_id", "v", k = 10, beam = 4, hops = 3)
+    searchOf(local).collect() // warm: codegen
     val build = "graph-search-build"
     val rank = "graph-search-rank"
     val jobs = new ConcurrentLinkedQueue[String]()
@@ -78,43 +84,62 @@ class GraphSearchSpec extends SparkSpec {
     spark.listenerManager.register(qel)
     try {
       sc.setJobGroup(build, "graph search construction")
-      val df = try search() finally sc.clearJobGroup()
+      val df = try searchOf(local) finally sc.clearJobGroup()
       settle(plans.size)
       val buildPlans = plans.asScala.toList
       spark.listenerManager.unregister(qel)
       sc.setJobGroup(rank, "graph search final rank")
-      try df.collect() finally sc.clearJobGroup()
+      try assert(df.collect().length == 50) finally sc.clearJobGroup()
       settle(jobs.size)
       val report = s"${jobs.size} jobs (${jobs.asScala.count(_ == build)} at construction)"
       info(report)
-      assert(jobs.size <= 20, s"the search ran $report, budget 20")
-      // entry + 2 collects per hop
-      assert(buildPlans.size == 7, s"expected 7 collects, saw ${buildPlans.size}")
+      // entry 3 (a broadcast, the window's map and result stages) +
+      // 2 scans per hop; the rank runs none
+      assert(jobs.size <= 9, s"the search ran $report, budget 9")
+      assert(!jobs.contains(rank), s"the final rank or the collect ran a job: $report")
       // the helper's collect descends into AQE query stages
       object stages extends AdaptiveSparkPlanHelper
-      val exchanges = buildPlans.map { p =>
-        assert(stages.collect(p) { case j: SortMergeJoinExec => j }.isEmpty, s"sort-merge join in\n$p")
-        stages.collect(p) { case x: ShuffleExchangeExec => x }
-      }
-      // only the entry's top-anchor window exchanges; the hops rank
-      // their fresh rows on the driver
-      assert(exchanges.map(_.size) == Seq(1, 0, 0, 0, 0, 0, 0),
-        "exchanges per collect:\n" + buildPlans.mkString("\n----\n"))
+      def exchanges(p: SparkPlan) = stages.collect(p) { case x: ShuffleExchangeExec => x }
+      val (entry, rest) = buildPlans.partition(exchanges(_).nonEmpty)
+      assert(entry.size == 1, "one collect must exchange, the entry's:\n" + buildPlans.mkString("\n----\n"))
+      val xs = exchanges(entry.head)
+      assert(xs.size == 1, s"the entry exchanges more than once:\n${entry.head}")
       // the entry ships at most one row per query and map partition
-      assert(stages.collect(exchanges.head.head) {
+      assert(stages.collect(xs.head) {
         case g: WindowGroupLimitExec if g.mode == Partial && g.limit == 1 => g }.nonEmpty,
-        s"no partial top-1 below the entry's exchange:\n${buildPlans.head}")
-      exchanges.flatten.foreach { x =>
-        assert(x.outputPartitioning.asInstanceOf[HashPartitioning].expressions
-          .map(_.references.map(_.name).toSeq) == Seq(Seq("q_id")), s"not on q_id:\n$x")
-        assert(!x.child.output.exists(_.dataType.isInstanceOf[ArrayType]), s"shuffles a vector:\n$x")
+        s"no partial top-1 below the entry's exchange:\n${entry.head}")
+      assert(xs.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+        .map(_.references.map(_.name).toSeq) == Seq(Seq("q_id")), s"not on q_id:\n${xs.head}")
+      assert(!xs.head.child.output.exists(_.dataType.isInstanceOf[ArrayType]), s"shuffles a vector:\n${xs.head}")
+      // the queries' collect and the ranks read local relations only
+      val hopPlans = rest.filterNot(_.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]))
+      assert(hopPlans.size == 6, s"expected 2 scans per hop, saw ${hopPlans.size}:\n" +
+        hopPlans.mkString("\n----\n"))
+      hopPlans.foreach { p =>
+        assert(stages.collect(p) {
+          case j: BaseJoinExec => j; case b: BroadcastExchangeExec => b }.isEmpty, s"a join or broadcast in\n$p")
+        // every scan sits under an id-set filter
+        def filtered(n: SparkPlan, inSet: Boolean): Boolean = n match {
+          case f: FilterExec => f.children.forall(filtered(_, inSet ||
+            f.condition.exists(_.isInstanceOf[InSet])))
+          case leaf if leaf.children.isEmpty => inSet
+          case other => other.children.forall(filtered(_, inSet))
+        }
+        assert(filtered(p, inSet = false), s"a scan without an InSet filter in\n$p")
       }
-      assert(buildPlans.count(p => stages.collect(p) { case j: BroadcastHashJoinExec => j }.nonEmpty) == 6,
-        "every hop collect must be a broadcast hash join:\n" + buildPlans.mkString("\n----\n"))
     } finally {
       spark.listenerManager.unregister(qel)
       sc.removeSparkListener(listener)
     }
+    // a queries plan the search must read exactly once: each of its 5
+    // rows passes the counting UDF once per run of the plan
+    val counted = udf { (id: Long) => GraphSearchSpec.queryRowReads.incrementAndGet(); id }
+      .asNondeterministic()
+    GraphSearchSpec.queryRowReads.set(0L)
+    assert(searchOf(corpus.filter(col("vec_id") < 5).withColumn("vec_id", counted(col("vec_id"))))
+      .collect().length == 50)
+    assert(GraphSearchSpec.queryRowReads.get == 5L,
+      s"the queries' plan read ${GraphSearchSpec.queryRowReads.get} rows, not 5 once")
   }
 
   // ---- ranking vs the relational beam: ties, NaN and NULL cosines
@@ -203,4 +228,9 @@ class GraphSearchSpec extends SparkSpec {
       }
     }
   }
+}
+
+object GraphSearchSpec {
+  /** Rows the counting queries' plan has read, across runs. */
+  val queryRowReads = new java.util.concurrent.atomic.AtomicLong(0L)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.F._
 
@@ -65,6 +66,53 @@ class VectorExprsSpec extends SparkSpec {
     }
     assert(rows.count(_.isNullAt(2)) == 3, "3 malformed pairs must be NULL")
     assert(rows.count(_.isNullAt(4)) == 3, "graft_cosine shares the null contract")
+  }
+
+  test("driver-side CosineSim.eval == codegen graft_cosine, bit for bit") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(17)
+    def gauss(n: Int): Seq[Any] = Seq.fill(n)(rnd.nextGaussian())
+    val pairs: Seq[(Seq[Any], Seq[Any])] = Seq.fill(1000)((gauss(64), gauss(64))) ++ Seq(
+      (Seq.fill(64)(0.0), gauss(64)), // zero vector: NaN
+      (gauss(63), gauss(64)), // length mismatch: NULL
+      (gauss(10) ++ Seq(null) ++ gauss(53), gauss(64)), // null element: NULL
+      (null, gauss(64))) // null array: NULL
+    val arr = ArrayType(DoubleType, containsNull = true)
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("a", arr),
+      StructField("b", arr)))
+    // the exchange keeps the projection out of the optimizer's local
+    // relation folding, so the cosine runs in generated code
+    val df = spark.createDataFrame(pairs.zipWithIndex.map { case ((a, b), i) => Row(i, a, b) }.asJava,
+      schema).repartition(2).withColumn("c", expr("graft_cosine(a, b)"))
+    val conf = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val rows = try df.queryExecution.executedPlan.executeCollect()
+      finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    object stages extends AdaptiveSparkPlanHelper
+    assert(stages.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec if w.child.isInstanceOf[ProjectExec] => w }.nonEmpty,
+      s"the cosine is not in generated code:\n${df.queryExecution.executedPlan}")
+    assert(rows.length == pairs.length)
+    // the expression as the graph search evaluates it on the driver
+    val cosine = graft.functions.CosineSim(BoundReference(0, arr, nullable = true),
+      BoundReference(1, arr, nullable = true))
+    val byId = rows.map { r =>
+      val driver = cosine.eval(InternalRow(r.get(1, arr), r.get(2, arr)))
+      r.getInt(0) -> (if (r.isNullAt(3)) None else Some(r.getDouble(3)),
+        Option(driver).map(_.asInstanceOf[Double]))
+    }.toMap
+    byId.foreach { case (i, (gen, drv)) =>
+      assert(gen.map(java.lang.Double.doubleToRawLongBits) == drv.map(java.lang.Double.doubleToRawLongBits),
+        s"pair $i: codegen $gen, driver $drv")
+    }
+    assert(byId(1000)._1.exists(_.isNaN), "a zero vector scores NaN")
+    assert((1001 to 1003).forall(byId(_)._1.isEmpty), "mismatch, null element and null array score NULL")
   }
 
   test("graft_signsketch equals the composed per-plane CASE folds bit-for-bit") {
