@@ -14,6 +14,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * constraints (see its doc). No other code in `src/main` calls
   * `localCheckpoint` or `checkpoint` — CheckpointsSpec enforces it.
   *
+  * Both calls EXECUTE the frame before they return: every job of the
+  * frame runs, and its rows are in storage, when the call returns. An
+  * operator that stabilizes an intermediate therefore executes while
+  * it is built, not when its result is first read. Stabilize a frame
+  * only on the paths that read it: a frame stabilized on a path that
+  * never reads it is computed for nothing.
+  *
   * Storage release: `Dataset.unpersist()` only clears CacheManager
   * entries; a local checkpoint's blocks live on the underlying RDD and
   * otherwise stay pinned in executor storage until the session ends.
@@ -45,21 +52,21 @@ object Checkpoints {
     * preempted executor would fail the whole computation. */
   val ReliableKey = "spark.graft.checkpoint.reliable"
 
-  /** Materialize `ds` and truncate its lineage: `localCheckpoint` by
-    * default, reliable `checkpoint` when [[ReliableKey]] is set, and
+  /** Materialize `ds` now and truncate its lineage: `localCheckpoint`
+    * by default, reliable `checkpoint` when [[ReliableKey]] is set, and
     * registered with the enclosing [[scoped]] block (none active: the
     * blocks stay until GC). The result is plan-identical either way (a
     * LogicalRDD leaf), so operator output does not depend on the mode
     * — only failure recovery does (spec-pinned in Round9Spec). */
-  def stabilize[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+  def stabilize[T](ds: Dataset[T]): Dataset[T] = {
     val s = ds.sparkSession
     val ck =
       if (s.conf.get(ReliableKey, "false").toBoolean) {
         require(s.sparkContext.getCheckpointDir.isDefined,
           s"$ReliableKey=true requires SparkContext.setCheckpointDir " +
             "(a DFS path on a cluster) before running iterative operators")
-        ds.checkpoint(eager)
-      } else ds.localCheckpoint(eager)
+        ds.checkpoint()
+      } else ds.localCheckpoint()
     val b = scope.get()
     if (b != null) b += ck
     ck
@@ -77,8 +84,8 @@ object Checkpoints {
     * function, not a flag of [[stabilize]]: the round trip also drops
     * the statistics and output partitioning, which would change the
     * plans of every other site. */
-  def fresh(df: DataFrame, eager: Boolean): DataFrame = {
-    val ck = stabilize(df, eager)
+  def fresh(df: DataFrame): DataFrame = {
+    val ck = stabilize(df)
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Volume-probe main (the SURVEY §6 scale evidence, reproducible in one
@@ -26,6 +30,63 @@ object ScaleProbe {
     "ds12_weighted_sample", "ds13_quality_prune", "q49_quantile_bins",
     "ds10_profile", "ds11_checks", "st05_stream_quality")
 
+  /** The probe session: `SPARK_GRAFT_CPUS` local cores (default 32),
+    * WARN logging. */
+  private def session(): SparkSession = {
+    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Wall seconds of one run of `f`. */
+  private def time(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Seconds rounded to the millisecond, for the JSON line. */
+  private def ms(v: Double): Double = math.rint(v * 1000) / 1000
+
+  /** Bytes as megabytes with two decimals, for the JSON line. */
+  private def mb(v: Long): Double = math.rint(v / 1e4) / 100
+
+  /** GC hint, then a 2 s sleep. Local mode keeps every job's shuffle
+    * files until the driver GCs the RDD references; at 600k+ corpora a
+    * probe's ~40 jobs otherwise fill the machine's scratch disk before
+    * the cleaner runs (probe-only concern: a cluster has per-executor
+    * scratch and spark.cleaner.periodicGC). The sleep also drains the
+    * listener bus before [[Counters]] are read. */
+  private def reap(): Unit = { System.gc(); Thread.sleep(2000) }
+
+  /** `n` synthetic 16-dim (vec_id, v) vectors with ids from `off`: a
+    * pure function of the id, so every probe run builds the same
+    * corpus. */
+  private def vecsOf(spark: SparkSession, n: Long, off: Long): DataFrame = spark.range(n)
+    .select((col("id") + off).as("vec_id"),
+      array((0 until 16).map(d =>
+        sin((col("id") + off) * (0.37 + d * 0.11))): _*).as("v"))
+
+  /** The probes' one listener: shuffle write bytes of completed stages
+    * and started jobs, summed since the last [[measure]]. */
+  private final class Counters(spark: SparkSession) {
+    private val shuffleBytes = new AtomicLong(0L)
+    private val jobs = new AtomicLong(0L)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    })
+
+    /** (wall seconds, shuffle write bytes, jobs) of one run of `f`;
+      * [[reap]] drains the listener bus before the counters are read. */
+    def measure(f: => Unit): (Double, Long, Long) = {
+      shuffleBytes.set(0L); jobs.set(0L)
+      val t = time(f)
+      reap()
+      (t, shuffleBytes.get, jobs.get)
+    }
+  }
+
   /** `runMain graft.ScaleProbe hotbucket [H]` — the d02/d05 hot-bucket
     * probe: plant H copies of one boilerplate doc on top of the sf0.1
     * documents table (the pathological bucket d01 would normally kill,
@@ -35,28 +96,28 @@ object ScaleProbe {
     * Emits one JSON line with both times and pair counts. */
   private def hotBucketProbe(h: Int): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val boiler = "click here to accept cookies and continue to the site " +
       "all rights reserved terms of service privacy policy"
     val docs = Tables.t(spark, src, "documents").select(col("doc_id"), col("text"))
       .union(spark.range(h).select((col("id") + 50000000L).as("doc_id"),
         lit(boiler).as("text")))
-    def time(maxBucket: Int): (Double, Long) = {
+    def pairs(maxBucket: Int): (Double, Long) = {
       // warm pass then timed pass (the Bench protocol): JIT/codegen and
       // parquet-footer warmup would otherwise bias whichever mode runs
       // first, and the guard's win must not hide behind it
       def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = ops.DedupOps.minhashPairsOf(docs, "doc_id", "text",
-          shingleN = 3, k = 8, bands = 4, maxBucket = maxBucket).count()
-        ((System.nanoTime() - t0) / 1e9, n)
+        var n = 0L
+        val t = time {
+          n = ops.DedupOps.minhashPairsOf(docs, "doc_id", "text",
+            shingleN = 3, k = 8, bands = 4, maxBucket = maxBucket).count()
+        }
+        (t, n)
       }
       once(); once()
     }
-    val (tCap, nCap) = time(1000)
-    val (tRaw, nRaw) = time(Int.MaxValue)
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
+    val (tCap, nCap) = pairs(1000)
+    val (tRaw, nRaw) = pairs(Int.MaxValue)
     println(s"""{"probe":"hotbucket","planted":$h,"src":"$src","capped_sec":${ms(tCap)},"capped_pairs":$nCap,"uncapped_sec":${ms(tRaw)},"uncapped_pairs":$nRaw,"metric":"hotbucket_ratio","value":${ms(tRaw / math.max(tCap, 1e-9))},"unit":"x"}""")
     spark.stop()
   }
@@ -69,8 +130,7 @@ object ScaleProbe {
     * slices, and cross-checks max |Δ| on a deterministic row sample so
     * the speed claim can't silently trade away correctness. */
   private def monsterProbe(n: Long): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val df = spark.range(n).selectExpr(
       "'HOT' AS sym",
       "timestamp_millis(1700000000000 + id * 100) AS t",
@@ -79,9 +139,6 @@ object ScaleProbe {
       .repartition(32) // arrive unsorted/spread, as a real scan would
     df.write.mode("overwrite").parquet("/tmp/graft_monster.parquet")
     val in = spark.read.parquet("/tmp/graft_monster.parquet")
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def noop(d: org.apache.spark.sql.DataFrame): Unit =
       d.write.format("noop").mode("overwrite").save()
     // warm + timed (the Bench protocol). seq_* MUST go through the
@@ -116,7 +173,6 @@ object ScaleProbe {
       .filter(col("seq") % 1000 === 0)
     val maxDelta = s.as("s").join(p.as("p"), Seq("sym", "ts_ms", "seq"))
       .agg(max(abs(col("s.ewma") - col("p.ewma")))).collect()(0).getDouble(0)
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"monster","rows":$n,"slices":32,"seq_ewma_sec":${ms(seqEwma)},"par_ewma_sec":${ms(parEwma)},"auto_ewma_sec":${ms(autoEwma)},"auto_par_dispatches":$autoPar,"auto_seq_dispatches":$autoSeq,"seq_macd_sec":${ms(seqMacd)},"par_macd_sec":${ms(parMacd)},"seq_kalman_sec":${ms(seqKal)},"par_kalman_sec":${ms(parKal)},"seq_trix_sec":${ms(seqTrix)},"par_trix_sec":${ms(parTrix)},"seq_holt_sec":${ms(seqHolt)},"par_holt_sec":${ms(parHolt)},"max_delta_ewma":$maxDelta,"metric":"monster_speedup","value":${ms(seqEwma / math.max(parEwma, 1e-9))},"unit":"x"}""")
     spark.stop()
   }
@@ -130,23 +186,20 @@ object ScaleProbe {
     * Emits rounds + wall seconds for both, plus a label checksum
     * proving the star labels are the chain minimum. */
   private def chainProbe(n: Long): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val chain = spark.range(n - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val t0 = System.nanoTime()
-    val bad = ops.DedupOps.componentsStar(chain, "doc_a", "doc_b")
-      .filter(col("label") =!= 0L || col("cluster_size") =!= n).count()
-    val starSec = (System.nanoTime() - t0) / 1e9
+    var bad = 0L
+    val starSec = time {
+      bad = ops.DedupOps.componentsStar(chain, "doc_a", "doc_b")
+        .filter(col("label") =!= 0L || col("cluster_size") =!= n).count()
+    }
     val starRounds = ops.DedupOps.ccRounds.get()
     val m = 200L
     val chainSmall = spark.range(m - 1)
       .select(col("id").as("doc_a"), (col("id") + 1).as("doc_b"))
-    val t1 = System.nanoTime()
-    ops.DedupOps.components(chainSmall, "doc_a", "doc_b").count()
-    val lpSec = (System.nanoTime() - t1) / 1e9
+    val lpSec = time(ops.DedupOps.components(chainSmall, "doc_a", "doc_b").count())
     val lpRounds = ops.DedupOps.ccRounds.get()
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"chain","n":$n,"star_rounds":$starRounds,"star_sec":${ms(starSec)},"bad_labels":$bad,"labelprop_n":$m,"labelprop_rounds":$lpRounds,"labelprop_sec":${ms(lpSec)},"metric":"chain_star_rounds","value":$starRounds,"unit":"rounds"}""")
     spark.stop()
   }
@@ -164,8 +217,7 @@ object ScaleProbe {
     * prunes), z-ordered ~1/256 + boundary — the claim the writer's
     * scaladoc makes, measured. */
   private def zorderProbe(n: Long): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val base = "/tmp/graft_zorder_probe"
     val df = spark.range(n).select(
       col("id"),
@@ -182,9 +234,7 @@ object ScaleProbe {
         val q = spark.read.parquet(path)
           .filter(col("x").between(0.50, 0.5625) && col("y").between(0.25, 0.3125))
           .agg(count(lit(1)), sum(col("id")))
-        val t0 = System.nanoTime()
-        q.collect()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = time(q.collect())
         // AQE query stages have no children — unwrap them explicitly or
         // collect() never reaches the scan node
         def scans(p: org.apache.spark.sql.execution.SparkPlan):
@@ -205,7 +255,6 @@ object ScaleProbe {
     val (tn, rn, fn, _) = probe(s"$base/natural")
     val (tx, rx, fx, _) = probe(s"$base/xsorted")
     val (tz, rz, fz, _) = probe(s"$base/zorder")
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"zorder","rows":$n,"files":$nFiles,"natural_scan_rows":$rn,"natural_files":$fn,"natural_sec":${ms(tn)},"xsorted_scan_rows":$rx,"xsorted_files":$fx,"xsorted_sec":${ms(tx)},"zorder_scan_rows":$rz,"zorder_files":$fz,"zorder_sec":${ms(tz)},"metric":"zorder_scan_reduction","value":${ms(rn.toDouble / math.max(rz, 1L))},"unit":"x"}""")
     spark.stop()
   }
@@ -221,8 +270,7 @@ object ScaleProbe {
     * full recompute is the linear-growth control the delta-bounding
     * replaced. */
   private def p05TickProbe(factor: Int): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val t0ms = 1704067200000L // 2024-01-01T00:00:00Z
     def symbols(n: Int) = spark.range(n)
       .select(concat(lit("SYM"), col("id"), lit("USDT")).as("symbol"))
@@ -249,9 +297,6 @@ object ScaleProbe {
         timestamp_millis(lit(t0ms) + (lit(240L) + col("h") + (lit(seq) - 2L) * 6L) * 3600000L)
           .as("fundingTime"),
         lit(1e-4).as("fundingRate"), lit(5.2).as("markPrice"), lit(seq).as("page_seq"))
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def run(n: Int, tag: String): (Double, Double) = {
       val base = s"/tmp/graft_p05tick_${tag}_$n"
       store(n, s"$base/store")
@@ -270,7 +315,6 @@ object ScaleProbe {
     }
     val (tickS, fullS) = run(200, "s")
     val (tickB, fullB) = run(200 * factor, "b")
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"p05tick","factor":$factor,"symbols_small":200,"symbols_big":${200 * factor},"tick_small_sec":${ms(tickS)},"tick_big_sec":${ms(tickB)},"full_small_sec":${ms(fullS)},"full_big_sec":${ms(fullB)},"metric":"p05tick_growth","value":${ms(tickB / math.max(tickS, 1e-9))},"unit":"x"}""")
     spark.stop()
   }
@@ -286,8 +330,7 @@ object ScaleProbe {
     * landings, NEVER raw-history-sized; this probe names that curve. */
   private def landingsProbe(n: Int): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val keys = Seq("event_type")
     val ev = Checkpoints.stabilize(Tables.t(spark, src, "events")
       .select(col("event_type"), col("user_id")))
@@ -298,13 +341,9 @@ object ScaleProbe {
         else if (f.getName.endsWith(".parquet")) 1 else 0
       walk(new java.io.File(store))
     }
-    def mergedSec(): Double = {
-      val t0 = System.nanoTime()
-      graft.sinks.SketchStore.hllEstimate(
-        graft.sinks.SketchStore.mergedHll(spark, store, keys), keys)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def mergedSec(): Double = time(graft.sinks.SketchStore.hllEstimate(
+      graft.sinks.SketchStore.mergedHll(spark, store, keys), keys)
+      .write.format("noop").mode("overwrite").save())
     var low = (0.0, 0)
     (0 until n).foreach { l =>
       graft.sinks.SketchStore.land(spark, store,
@@ -315,7 +354,6 @@ object ScaleProbe {
       if (l + 1 == math.max(1, n / 10)) low = (mergedSec(), fileCount())
     }
     val (secN, filesN) = (mergedSec(), fileCount())
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"landings","landings":$n,"merged_sec_at_${math.max(1, n / 10)}":${ms(low._1)},"files_at_${math.max(1, n / 10)}":${low._2},"merged_sec_at_$n":${ms(secN)},"files_at_$n":$filesN,"metric":"landings_growth","value":${ms(secN / math.max(low._1, 1e-9))},"unit":"x"}""")
     spark.stop()
   }
@@ -333,55 +371,27 @@ object ScaleProbe {
     * searching an index means — so the ratio to watch is landed rows,
     * with the wall reported honestly alongside. */
   private def annTickProbe(factor: Int): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.streaming.StreamOps
-    def vecsOf(n: Long, off: Long) = spark.range(n)
-      .select((col("id") + off).as("vec_id"),
-        array((0 until 16).map(d =>
-          sin((col("id") + off) * (0.37 + d * 0.11))): _*).as("v"))
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def tick(base: String, b: org.apache.spark.sql.DataFrame, l: Long,
              del: org.apache.spark.sql.DataFrame = null): Unit =
       StreamOps.annIndexTick(spark, base, b, "vec_id", "v",
         r = 8, beam = 4, hops = 3, landingId = l, deletes = del)
     // round-17 ask: prove the tick's SHUFFLE BYTES delta-bounded, not
-    // just its wall flat — a stage-completion listener sums shuffle
-    // write bytes; reap()'s 2 s sleep doubles as the listener-bus drain
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-      })
-    // local mode keeps every job's shuffle files until the driver GCs
-    // the RDD references; at 600k+ corpora the probe's ~40 jobs
-    // otherwise fill the machine's scratch disk before the cleaner
-    // runs — hint a GC between phases (probe-only concern: a cluster
-    // has per-executor scratch and spark.cleaner.periodicGC)
-    def reap(): Unit = { System.gc(); Thread.sleep(2000) }
-    def measured(f: => Unit): (Double, Long) = {
-      shuffleBytes.set(0L)
-      val t = time(f)
-      reap() // drains the listener bus before the counter is read
-      (t, shuffleBytes.get)
-    }
+    // just its wall flat
+    val counters = new Counters(spark)
     def run(n: Long, tag: String): (Double, Double, Long, Long, Long, Long) = {
       // _bk suffix: the bucketed AnnStore format cannot append to a
       // pre-round-17 path-format store, so probe stores get a new root
       val base = s"/tmp/graft_anntick_bk_${tag}_$n"
-      if (!new java.io.File(base).exists()) tick(base, vecsOf(n, 0L), 0L)
+      if (!new java.io.File(base).exists()) tick(base, vecsOf(spark, n, 0L), 0L)
       reap()
-      tick(base, vecsOf(200, n), 1L) // warm (JIT + listing)
+      tick(base, vecsOf(spark, 200, n), 1L) // warm (JIT + listing)
       reap()
-      val (tIns, shIns) = measured(tick(base, vecsOf(200, n + 1000000L), 2L))
-      val (tDel, shDel) = measured(tick(base, vecsOf(200, n + 2000000L), 3L,
-        del = vecsOf(200, n)))
+      val (tIns, shIns, _) = counters.measure(
+        tick(base, vecsOf(spark, 200, n + 1000000L), 2L))
+      val (tDel, shDel, _) = counters.measure(
+        tick(base, vecsOf(spark, 200, n + 2000000L), 3L, del = vecsOf(spark, 200, n)))
       val landed = spark.read.parquet(s"$base/edges")
         .filter(col("__landing").cast("long") === 2L).count()
       val index = StreamOps.annIndexReport(spark, base).count()
@@ -389,8 +399,6 @@ object ScaleProbe {
     }
     val (insS, delS, landS, idxS, shInsS, shDelS) = run(12000L, "s")
     val (insB, delB, landB, idxB, shInsB, shDelB) = run(12000L * factor, "b")
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    def mb(v: Long): Double = math.rint(v / 1e4) / 100
     println(s"""{"probe":"anntick","factor":$factor,"vectors_small":12000,"vectors_big":${12000L * factor},"insert_small_sec":${ms(insS)},"insert_big_sec":${ms(insB)},"delins_small_sec":${ms(delS)},"delins_big_sec":${ms(delB)},"landed_small":$landS,"landed_big":$landB,"index_small":$idxS,"index_big":$idxB,"insert_small_shuffle_mb":${mb(shInsS)},"insert_big_shuffle_mb":${mb(shInsB)},"delins_small_shuffle_mb":${mb(shDelS)},"delins_big_shuffle_mb":${mb(shDelB)},"metric":"anntick_landed_share","value":${ms(landB.toDouble / math.max(idxB, 1L))},"unit":"share"}""")
     spark.stop()
   }
@@ -400,7 +408,7 @@ object ScaleProbe {
     * bound and structurally cannot show whether graphAnnOf's §2 claims
     * hold, so the shuffle-bytes evidence lives here). Builds two
     * knnGraphOf indexes (12k and 12k·F vectors) OUTSIDE the measured
-    * window (eagerly checkpointed edges — the same contract the s20
+    * window (stabilized edges — the same contract the s20
     * query and the tick give the search), then runs graphAnnOf with the
     * SAME 5 local queries/beam/hops on both: one warm-up, then 5 timed
     * searches, reporting the median wall and, from the median search,
@@ -414,57 +422,30 @@ object ScaleProbe {
     * ranks what they return, so the job count is 3 + 2·hops at both
     * sizes and the wall grows only with the two scans. */
   private def annSearchProbe(factor: Int): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.ops.SimOps
-    def vecsOf(n: Long, off: Long) = spark.range(n)
-      .select((col("id") + off).as("vec_id"),
-        array((0 until 16).map(d =>
-          sin((col("id") + off) * (0.37 + d * 0.11))): _*).as("v"))
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-        }
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
-    def reap(): Unit = { System.gc(); Thread.sleep(2000) }
+    val counters = new Counters(spark)
     // (median wall, its search's shuffle bytes, its search's jobs, edges)
     def run(n: Long): (Double, Long, Long, Long) = {
-      val corpus = Checkpoints.stabilize(vecsOf(n, 0L))
+      val corpus = Checkpoints.stabilize(vecsOf(spark, n, 0L))
       val anchors = corpus.filter(pmod(col("vec_id"), lit(64L)) === 0)
       val edges = Checkpoints.stabilize(SimOps.knnGraphOf(corpus, anchors, "vec_id", "v",
         "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1))
       val nEdges = edges.count()
       // the same 5 query vectors at both sizes, held as a local
       // relation as a serving loop holds them
-      val q = vecsOf(5L, 0L)
+      val q = vecsOf(spark, 5L, 0L)
       val queries = spark.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
       def search(): Unit = SimOps.graphAnnOf(corpus, queries, anchors, edges,
         "vec_id", "v", k = 10, beam = 4, hops = 3).collect()
       search() // warm (JIT + codegen)
       reap()
-      val timed = (1 to 5).map { _ =>
-        shuffleBytes.set(0L); jobs.set(0L)
-        val t0 = System.nanoTime()
-        search()
-        val t = (System.nanoTime() - t0) / 1e9
-        reap() // drains the listener bus before the counters are read
-        (t, shuffleBytes.get, jobs.get)
-      }.sortBy(_._1)
+      val timed = (1 to 5).map(_ => counters.measure(search())).sortBy(_._1)
       val (t, sh, nj) = timed(timed.size / 2)
       (t, sh, nj, nEdges)
     }
     val (tS, shS, jS, eS) = run(12000L)
     val (tB, shB, jB, eB) = run(12000L * factor)
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
-    def mb(v: Long): Double = math.rint(v / 1e4) / 100
     println(s"""{"probe":"annsearch","factor":$factor,"vectors_small":12000,"vectors_big":${12000L * factor},"edges_small":$eS,"edges_big":$eB,"search_small_sec":${ms(tS)},"search_big_sec":${ms(tB)},"search_small_jobs":$jS,"search_big_jobs":$jB,"search_small_shuffle_mb":${mb(shS)},"search_big_shuffle_mb":${mb(shB)},"metric":"annsearch_shuffle_growth","value":${ms(shB.toDouble / math.max(shS, 1L))},"unit":"x"}""")
     spark.stop()
   }
@@ -477,17 +458,8 @@ object ScaleProbe {
     * one baseline landing, so the post-compaction read must fall back
     * to baseline-sized cost and the store to a single landing. */
   private def annCompactProbe(n: Int): Unit = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.streaming.StreamOps
-    def vecsOf(cnt: Long, off: Long) = spark.range(cnt)
-      .select((col("id") + off).as("vec_id"),
-        array((0 until 16).map(d =>
-          sin((col("id") + off) * (0.37 + d * 0.11))): _*).as("v"))
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def reap(): Unit = { System.gc(); Thread.sleep(2000) }
     val base = s"/tmp/graft_anncompact_$n"
     // Always rebuild: a leftover store from a COMPLETED probe run is
     // already compacted (landings_before = 1), so reusing it silently
@@ -502,10 +474,10 @@ object ScaleProbe {
       if (d.exists()) rm(d)
     }
     if (!new java.io.File(base).exists()) {
-      StreamOps.annIndexTick(spark, base, vecsOf(12000L, 0L), "vec_id", "v",
+      StreamOps.annIndexTick(spark, base, vecsOf(spark, 12000L, 0L), "vec_id", "v",
         r = 8, beam = 4, hops = 3, landingId = 0L)
       (1 to n).foreach { i =>
-        StreamOps.annIndexTick(spark, base, vecsOf(200L, 12000L + i * 1000L),
+        StreamOps.annIndexTick(spark, base, vecsOf(spark, 200L, 12000L + i * 1000L),
           "vec_id", "v", r = 8, beam = 4, hops = 3, landingId = i.toLong)
         if (i % 10 == 0) reap()
       }
@@ -526,7 +498,6 @@ object ScaleProbe {
     val tAfter = time(readAll())
     val landingsAfter = spark.read.parquet(s"$base/edges")
       .select(col("__landing")).distinct().count()
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"anncompact","ticks":$n,"index_rows":$idx,"landings_before":$landingsBefore,"landings_after":$landingsAfter,"read_before_sec":${ms(tBefore)},"read_after_sec":${ms(tAfter)},"compact_sec":${ms(tCompact)},"metric":"anncompact_read_ratio","value":${ms(tBefore / math.max(tAfter, 0.001))},"unit":"x"}""")
     spark.stop()
   }
@@ -541,20 +512,15 @@ object ScaleProbe {
     * volume, so the merged read must stay state-sized × landings. */
   private def logHistLandingsProbe(n: Int): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val keys = Seq("event_type")
     val ev = Checkpoints.stabilize(Tables.t(spark, src, "events")
       .select(col("event_type"), col("value")))
     val store = java.nio.file.Files.createTempDirectory("graft_loghist_land_").toString
-    def mergedSec(): Double = {
-      val t0 = System.nanoTime()
-      graft.sinks.SketchStore.logHistQuantiles(
-        graft.sinks.SketchStore.mergedLogHist(spark, store, keys),
-        keys, Seq(0.5 -> "p50", 0.95 -> "p95", 0.99 -> "p99"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def mergedSec(): Double = time(graft.sinks.SketchStore.logHistQuantiles(
+      graft.sinks.SketchStore.mergedLogHist(spark, store, keys),
+      keys, Seq(0.5 -> "p50", 0.95 -> "p95", 0.99 -> "p99"))
+      .write.format("noop").mode("overwrite").save())
     var low = 0.0
     (0 until n).foreach { l =>
       graft.sinks.SketchStore.land(spark, store,
@@ -565,7 +531,6 @@ object ScaleProbe {
       if (l + 1 == math.max(1, n / 10)) low = mergedSec()
     }
     val secN = mergedSec()
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     println(s"""{"probe":"loghist_landings","landings":$n,"merged_sec_at_${math.max(1, n / 10)}":${ms(low)},"merged_sec_at_$n":${ms(secN)},"metric":"loghist_landings_growth","value":${ms(secN / math.max(low, 1e-9))},"unit":"x"}""")
     spark.stop()
   }
@@ -615,8 +580,7 @@ object ScaleProbe {
     val queries = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = s"/tmp/graft_x${factor}_${src.replaceAll("[^A-Za-z0-9.]", "_")}"
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     if (!new java.io.File(out).exists()) {
       val r = spark.range(factor).toDF("r")
@@ -647,18 +611,17 @@ object ScaleProbe {
     }
 
     val results = queries.map { q =>
-      val t0 = System.nanoTime()
-      val ok = try {
-        SparkEntry.queries(q)(spark, out).write.format("noop").mode("overwrite").save()
-        true
-      } catch { case e: Throwable =>
-        // a silent -1 cost round 14 a diagnosis round-trip: name the failure
-        System.err.println(s"[probe] $q failed: ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}")
-        false
+      var ok = true
+      val t = time {
+        try SparkEntry.queries(q)(spark, out).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          // a silent -1 cost round 14 a diagnosis round-trip: name the failure
+          System.err.println(s"[probe] $q failed: ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}")
+          ok = false
+        }
       }
-      q -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      q -> (if (ok) t else -1.0)
     }
-    def ms(v: Double): Double = math.rint(v * 1000) / 1000
     val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     println(s"""{"probe":$qs,"factor":$factor,"src":"$src","metric":"probe_total","value":${ms(total)},"unit":"sec"}""")

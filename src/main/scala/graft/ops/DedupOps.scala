@@ -1160,7 +1160,7 @@ object DedupOps {
     val d = graft.Checkpoints.stabilize(docs
       .select(col(idCol).as("doc_id"), words(col(textCol)).as("ws"))
       .filter(size(col("ws")) >= w)
-      .withColumn("n_tokens", size(col("ws")).cast("long")), eager = false)
+      .withColumn("n_tokens", size(col("ws")).cast("long")))
     val wins = d
       .withColumn("p", explode(sequence(lit(0), (col("n_tokens") - w).cast("int"))))
       .withColumn("h", hash60(concat_ws(" ", slice(col("ws"), col("p") + 1, lit(w)))))
@@ -1506,7 +1506,7 @@ object DedupOps {
       minhashPairsOf(surv1, "doc_id", "text", shingleN = 3, k = 8, bands = 4)
         .filter(col("est_sim") >= 0.5)
         .select(col("doc_b").as("doc_id")).distinct()
-        .withColumn("__near", lit(1)), eager = false)
+        .withColumn("__near", lit(1)))
     val surv2 = surv1.join(dropNear, Seq("doc_id"), "left")
       .filter(col("__near").isNull)
       .select(col("doc_id"), col("text"))

@@ -89,11 +89,10 @@ object ScanOps {
     *
     * Cost discipline (round-12 verdict #2): when the stat must be
     * measured, the scan's pruned input (only `needed` columns) is
-    * `localCheckpoint`ed lazily FIRST, so the upstream lineage —
-    * possibly joins/windows far more expensive than the scan — runs
-    * exactly once: the measuring count materializes the checkpoint and
-    * the chosen path replays the checkpointed blocks, never the
-    * lineage. With the `maxSeriesRows` hint set, no job fires at all
+    * stabilized FIRST, so the upstream lineage — possibly joins/windows
+    * far more expensive than the scan — runs exactly once, in the
+    * stabilize itself: the measuring count and the chosen path read the
+    * checkpointed blocks, never the lineage. With the `maxSeriesRows` hint set, no job fires at all
     * and the plan composes lazily. Parameter validation happens before
     * any job: the sequential plan is constructed (pure, no action)
     * up front so each wrapper's `require`s fire first.
@@ -128,7 +127,7 @@ object ScanOps {
         val pruned = df.select(needed.distinct.map(col): _*)
         val snap =
           if (lineageIsCheap(pruned)) pruned
-          else graft.Checkpoints.stabilize(pruned, eager = false)
+          else graft.Checkpoints.stabilize(pruned)
         val longest = snap.groupBy(col(key)).count()
           .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
         if (longest <= thr) { seqDispatches.incrementAndGet(); seq(snap) }

@@ -261,7 +261,9 @@ object SimOps {
     * [[graphInsertOf]]: each node of `v` → its `cellProbes` nearest
     * centroid cells (exact brute rank under [[HierAsgThreshold]]
     * centroids, the √|C| hierarchical route above it). Returns
-    * (vec_id, cell) rows. */
+    * (vec_id, cell) rows. `cents` comes in unhinted: the brute route
+    * broadcasts it into its cross join, and the count below reads it
+    * outside any join. */
   private[graft] def cellAsgOf(v: DataFrame, cents: DataFrame,
                                cellProbes: Int): DataFrame = {
     // one count action, bounded by the centroid table (k·dims driver
@@ -270,7 +272,7 @@ object SimOps {
     val wAsg = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c_id"))
     if (nCents <= HierAsgThreshold) {
       graphBruteAsg.incrementAndGet()
-      v.crossJoin(cents)
+      v.crossJoin(broadcast(cents))
         .withColumn("ccos", expr("graft_cosine(v, cv)"))
         .withColumn("__rn", row_number().over(wAsg))
         .filter(col("__rn") <= cellProbes)
@@ -384,7 +386,9 @@ object SimOps {
   /** `corpusAsg`, when given as (vec_id, cell) rows, replaces the cell
     * assignment the build would otherwise compute — the tick computes
     * the assignment ONCE, lands it, and passes it here, instead of
-    * paying the n·√|C| hierarchical ranking twice per build. */
+    * paying the n·√|C| hierarchical ranking twice per build. The
+    * build stabilizes its intermediates, so it executes while it is
+    * built (see [[graft.Checkpoints]]). */
   def knnGraphOf(corpus: DataFrame, centroids: DataFrame, idCol: String,
                  vecCol: String, cidCol: String, cvecCol: String,
                  r: Int, cellProbes: Int = 2, descentRounds: Int = 1,
@@ -394,8 +398,8 @@ object SimOps {
     require(descentRounds >= 0, s"descentRounds must be >= 0, got $descentRounds")
     require(maxCellOcc >= 1, s"maxCellOcc must be >= 1, got $maxCellOcc")
     val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-    val cents = broadcast(centroids
-      .select(col(cidCol).as("c_id"), col(cvecCol).cast("array<double>").as("cv")))
+    val cents = centroids
+      .select(col(cidCol).as("c_id"), col(cvecCol).cast("array<double>").as("cv"))
     val asg =
       if (corpusAsg != null) corpusAsg.select(col("vec_id"), col("cell"))
       else cellAsgOf(v, cents, cellProbes)
@@ -428,7 +432,7 @@ object SimOps {
     // withV feeds both self-join sides (the a-side scan AND the capped
     // rep window) — checkpoint so the asg⋈vector join runs once
     // (round-17; bit-identical)
-    val withV = graft.Checkpoints.stabilize(asg.join(v, "vec_id"), eager = false)
+    val withV = graft.Checkpoints.stabilize(asg.join(v, "vec_id"))
     val wCell = Window.partitionBy(col("cell"))
       .orderBy(graft.F.hash60(concat(lit("s20cap:"), col("vec_id").cast("string"))),
         col("vec_id"))
@@ -446,7 +450,6 @@ object SimOps {
       .filter(col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
         expr("graft_cosine(a.v, b.v)").as("cos"))
-    def topR(scored: DataFrame): DataFrame = topRDedup(scored, r)
     // Descent rounds score only the FRESH neighbor-of-neighbor pairs
     // (anti-joined against everything already scored — the old shape
     // re-scored the ENTIRE candidate set every round): the vector
@@ -458,23 +461,23 @@ object SimOps {
       .select(col("src"), col("dst"), col("cos"))
     // scored0 (the widest compute of the build) is referenced by
     // round-0's top-r, every round's anti join and the final top-r —
-    // checkpoint it and each round's fresh scores once instead of
-    // re-embedding the subtree per reference (values bit-identical)
-    def shared(df: DataFrame): DataFrame =
-      graft.Checkpoints.stabilize(df, eager = false)
-    var scored = if (descentRounds > 0) shared(scored0) else scored0
-    var edges = topR(scored)
+    // stabilize it, each round's edges and each round's fresh scores
+    // once instead of re-embedding the subtree per reference (values
+    // bit-identical); each executes here, while the build is built
+    var scored =
+      if (descentRounds > 0) graft.Checkpoints.stabilize(scored0) else scored0
+    var edges = topRDedup(scored, r)
     var round = 0
     while (round < descentRounds) {
-      val ed = shared(edges)
+      val ed = graft.Checkpoints.stabilize(edges)
       val non = ed.select(col("src"), col("dst").as("mid"))
         .join(ed.select(col("src").as("mid"), col("dst")), "mid")
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
         .distinct()
         .join(scored.select(col("src"), col("dst")), Seq("src", "dst"), "left_anti")
-      scored = scored.union(shared(scoreFresh(non)))
-      edges = topR(scored)
+      scored = scored.union(graft.Checkpoints.stabilize(scoreFresh(non)))
+      edges = topRDedup(scored, r)
       round += 1
     }
     edges
@@ -699,7 +702,8 @@ object SimOps {
     * vectors, then ids and cosines only — |delta| entry rows plus
     * ≤ beam·(r + in-degree)·|delta| scored rows per hop — and, during
     * one hop, the vectors of its ≤ min(corpus, beam·(r + in-degree)·|delta|)
-    * proposed ids. */
+    * proposed ids. The search and the stabilized delta-side sets
+    * execute while the result is built. */
   def graphInsertOf(corpus: DataFrame, delta: DataFrame, edges: DataFrame,
                     centroids: DataFrame, anchors: DataFrame,
                     idCol: String, vecCol: String,
@@ -777,15 +781,11 @@ object SimOps {
       s"need r >= 1, beam >= 1, hops >= 0; got r=$r beam=$beam hops=$hops")
     require(cellProbes >= 1 && maxCellOcc >= 1,
       s"need cellProbes >= 1, maxCellOcc >= 1; got $cellProbes, $maxCellOcc")
-    val wTop = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    def topR(scored: DataFrame): DataFrame = scored
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= r).drop("__rn")
     val e = edges.select(col("src"), col("dst"), col("cos"))
     val vC = corpus.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     val vD = delta.select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-    val cents = broadcast(centroids
-      .select(col(idCol).as("c_id"), col(vecCol).cast("array<double>").as("cv")))
+    val cents = centroids
+      .select(col(idCol).as("c_id"), col(vecCol).cast("array<double>").as("cv"))
     // search: delta vectors as queries over the EXISTING graph; the
     // whole scored set (entry + every hop) is the candidate pool — one
     // local relation, so nothing below re-plans the search
@@ -802,7 +802,7 @@ object SimOps {
     // the cellPairs x-side) — un-checkpointed, the delta×centroid
     // cosine rank re-ran per reference (round-17; bit-identical)
     val asgD = graft.Checkpoints.fresh(
-      cellAsgOf(vD, cents, cellProbes).join(vD, "vec_id"), eager = false)
+      cellAsgOf(vD, cents, cellProbes).join(vD, "vec_id"))
     val deltaCells = asgD.select(col("cell")).distinct()
     val asgCFull =
       if (corpusAsg != null) corpusAsg.select(col("vec_id"), col("cell"))
@@ -820,7 +820,7 @@ object SimOps {
     val repsAll = graft.Checkpoints.fresh(
       asgC.unionByName(asgD.select(col("vec_id"), col("cell"), col("v")))
         .withColumn("__crn", row_number().over(wCell))
-        .filter(col("__crn") <= maxCellOcc).drop("__crn"), eager = false)
+        .filter(col("__crn") <= maxCellOcc).drop("__crn"))
     // no inner distinct: newOut's dedup collapses duplicate pairs
     // (identical bits) — the extra (src,dst,cos) exchange bought nothing
     val cellPairs = asgD.as("x").join(repsAll.as("y"), "cell")
@@ -831,7 +831,7 @@ object SimOps {
     // affected-src set AND the final union — checkpoint once so the
     // deep beam-search plan underneath isn't replanned per reference
     val newOut = graft.Checkpoints.fresh(
-      topRDedup(deltaOld.union(cellPairs), r), eager = false)
+      topRDedup(deltaOld.union(cellPairs), r))
     // repair (a): reversed new edges challenge their targets' lists
     val rev = newOut.select(col("dst").as("src"), col("src").as("dst"), col("cos"))
     // repair (b): corpus reps sharing a cell with a delta rep score
@@ -849,9 +849,9 @@ object SimOps {
       .filter(col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"),
         expr("graft_cosine(x.v, y.v)").as("cos"))
-    val challenges = graft.Checkpoints.fresh(rev.union(abPairs), eager = false)
+    val challenges = graft.Checkpoints.fresh(rev.union(abPairs))
     val affected = graft.Checkpoints.fresh(newOut.select(col("src"))
-      .union(challenges.select(col("src"))).distinct(), eager = false)
+      .union(challenges.select(col("src"))).distinct())
     // broadcast the delta-bounded affected set into the re-rank base's
     // semi join — the edge list is scanned, never exchanged (§3.1)
     val changed = topRDedup(e.join(broadcast(affected), Seq("src"), "left_semi")
@@ -885,7 +885,9 @@ object SimOps {
     * function of (corpus, deleted, edges) with total-order ranks — the
     * DuckDB oracle replays build AND delete verbatim. Scale shape: the
     * delete set joins as a normal table (broadcast when small, shuffle
-    * when not); vectors are touched only for the stitch pairs. */
+    * when not); vectors are touched only for the stitch pairs. The
+    * delete set, the tagged edge list and the severed srcs' live lists
+    * are stabilized, so those steps execute while the result is built. */
   def graphDeleteOf(corpus: DataFrame, deleted: DataFrame, edges: DataFrame,
                     idCol: String, vecCol: String, r: Int): DataFrame = {
     val (changed, sevSrcs, live) =
@@ -920,7 +922,7 @@ object SimOps {
     // the delete set feeds six anti/semi joins below — checkpoint so
     // its distinct's exchange runs once (round-17; bit-identical)
     val del = graft.Checkpoints.fresh(
-      deleted.select(col(idCol).as("vec_id")).distinct(), eager = false)
+      deleted.select(col(idCol).as("vec_id")).distinct())
     val e = edges.select(col("src"), col("dst"), col("cos"))
     // ONE tagged pass over the edge list (round-18, guide §1.2 step 1):
     // live / severed / outgoing are the four quadrants of (src deleted?,
@@ -936,7 +938,7 @@ object SimOps {
       .join(del.select(col("vec_id").as("src"), lit(true).as("__sdel")),
         Seq("src"), "left")
       .join(del.select(col("vec_id").as("dst"), lit(true).as("__ddel")),
-        Seq("dst"), "left"), eager = false)
+        Seq("dst"), "left"))
     val live = tagged
       .filter(col("__sdel").isNull && col("__ddel").isNull)
       .select(col("src"), col("dst"), col("cos"))
@@ -969,7 +971,7 @@ object SimOps {
     // scoring (values unchanged — broadcast is a strategy hint).
     val sevSrcs = severed.select(col("p").as("src")).distinct()
     val liveSev = graft.Checkpoints.fresh(
-      live.join(broadcast(sevSrcs), Seq("src"), "left_semi"), eager = false)
+      live.join(broadcast(sevSrcs), Seq("src"), "left_semi"))
     val stitch = severed.join(outgoing, "d")
       .filter(col("p") =!= col("x"))
       .select(col("p").as("src"), col("x").as("dst"))
@@ -1007,14 +1009,14 @@ object SimOps {
     * without a quadratic seed. Measured at this corpus
     * (GraphAnnSpec): recall@10 ≥ the IVF 2-probe path while scoring
     * well under its candidate count — the graph trade stated as
-    * numbers. The edge list is lazily localCheckpoint'd — every hop's
-    * plan references it, and the checkpoint keeps the build from
-    * re-running per hop. */
+    * numbers. The edge list is stabilized, so the build executes
+    * where the query is built; every hop reads its rows, never the
+    * build's plan. */
   private val s20: Q = (s, dir) => {
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
     val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v",
-      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1), eager = false)
+      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1))
     graphAnnOf(all, all.filter(col("vec_id") < 5), anchors,
         edges, "vec_id", "v", k = K, beam = 4, hops = 3)
       .select(col("q_id"), col("rank"), col("vec_id"), r6(col("cos")).as("cos_sim"))
@@ -1078,7 +1080,7 @@ object SimOps {
     val corpus = all.select(col("vec_id"), col("v"))
     val anchors = corpus.filter(pmod(col("vec_id"), lit(64)) === 0)
     val edges = graft.Checkpoints.stabilize(knnGraphOf(corpus, anchors, "vec_id", "v",
-      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1), eager = false)
+      "vec_id", "v", r = 8, cellProbes = 2, descentRounds = 1))
     filteredAnnOf(corpus, corpus.filter(col("vec_id") < 5), anchors, edges,
         "vec_id", "v", all.filter(col("label") === 1), k = K, beam = 40, hops = 3)
       .join(all.select(col("vec_id"), col("label")), "vec_id")
@@ -1110,7 +1112,7 @@ FROM fr WHERE rank <= $K ORDER BY q_id, rank"""
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
     val edges = graft.Checkpoints.stabilize(labeledGraphOf(all, "vec_id", "v", "label", r = 8,
       cellProbes = 2, descentRounds = 1)
-      .filter(col("label") === 1).select(col("src"), col("dst"), col("cos")), eager = false)
+      .filter(col("label") === 1).select(col("src"), col("dst"), col("cos")))
     val slice = all.filter(col("label") === 1)
       .select(col("vec_id"), col("v"), col("label").as("__lbl"))
     val anchors = labelAnchorsOf(slice, 64).select(col("vec_id"), col("v"))
@@ -1286,10 +1288,10 @@ ORDER BY q_id, rank"""
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
     val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
+      r = 8, cellProbes = 2, descentRounds = 1))
     val q = all.filter(col("vec_id") < 5)
     val brute = graft.Checkpoints.stabilize(graft.Graft.knnBrute(all, q, "vec_id", "v", K)
-      .select(col("q_id"), col("vec_id")), eager = false)
+      .select(col("q_id"), col("vec_id")))
     // ONE beam chain serves all three frontier points (the
     // prefix-invariance the oracle already exploits): element h of
     // [[beamScoredByHop]] IS the `hops = h` search's scored set, so the
@@ -1355,7 +1357,7 @@ ORDER BY q_id, rank"""
     val b = all.filter(pmod(col("vec_id"), lit(10)) === 9)
     val anchors = a.filter(pmod(col("vec_id"), lit(64)) === 0)
     val edges = graft.Checkpoints.stabilize(knnGraphOf(a, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
+      r = 8, cellProbes = 2, descentRounds = 1))
     graphInsertOf(a, b, edges, anchors, anchors, "vec_id", "v",
       r = 8, beam = 4, hops = 3)
       .select(col("src"), col("dst"), r6(col("cos")).as("cos_sim"))
@@ -1434,7 +1436,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin ORDER BY src, dst"""
     val all = vecs(s, dir)
     val anchors = all.filter(pmod(col("vec_id"), lit(64)) === 0)
     val edges = graft.Checkpoints.stabilize(knnGraphOf(all, anchors, "vec_id", "v", "vec_id", "v",
-      r = 8, cellProbes = 2, descentRounds = 1), eager = false)
+      r = 8, cellProbes = 2, descentRounds = 1))
     val del = all.filter(pmod(col("vec_id"), lit(10)) === 9)
     graphDeleteOf(all, del, edges, "vec_id", "v", r = 8)
       .select(col("src"), col("dst"), r6(col("cos")).as("cos_sim"))
@@ -1518,7 +1520,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
       graft.Graft.knnBrute(all, all.filter(col("vec_id") < 5), "vec_id", "v", n)
         .select(col("q_id"), col("vec_id"), col("cos_sim").as("rel"))
         .join(all, Seq("vec_id"))
-        .select(col("q_id"), col("vec_id"), col("rel"), col("v")), eager = false)
+        .select(col("q_id"), col("vec_id"), col("rel"), col("v")))
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("__score").desc, col("vec_id"))
     def pick(scored: DataFrame, round: Int): DataFrame =
@@ -1527,7 +1529,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         .select(col("q_id"), lit(round.toLong).as("round"), col("vec_id"),
           col("rel"), col("__score").as("mmr_score"), col("v"))
     var acc = graft.Checkpoints.stabilize(
-      pick(cand.withColumn("__score", lit(0.7) * col("rel")), 1), eager = false)
+      pick(cand.withColumn("__score", lit(0.7) * col("rel")), 1))
     for (t <- 2 to K) {
       val rem = cand.join(acc.select(col("q_id"), col("vec_id")),
         Seq("q_id", "vec_id"), "left_anti")
@@ -1537,7 +1539,7 @@ SELECT src, dst, round(cos, 6) AS cos_sim FROM fin2 ORDER BY src, dst""")
         .groupBy(col("q_id"), col("vec_id")).agg(max(col("__sim")).as("__maxsim"))
       val scored = rem.join(ms, Seq("q_id", "vec_id"))
         .withColumn("__score", lit(0.7) * col("rel") - lit(0.3) * col("__maxsim"))
-      acc = graft.Checkpoints.stabilize(acc.unionByName(pick(scored, t)), eager = false)
+      acc = graft.Checkpoints.stabilize(acc.unionByName(pick(scored, t)))
     }
     acc.select(col("q_id"), col("round"), col("vec_id"),
         r6(col("mmr_score")).as("mmr_score"), r6(col("rel")).as("rel"))

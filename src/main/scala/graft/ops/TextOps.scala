@@ -512,18 +512,19 @@ object TextOps {
     * (doc_id, term, tf) at the first map-side-combined shuffle — raw
     * text never shuffles — and the doc-frequency side is the DISTINCT
     * vocabulary, shuffle-joined back on the term key. N rides a
-    * broadcast 1-row cross join (never a driver collect), so the whole
-    * op is one lazy distributed plan: at 100 TB the cost is token
-    * cardinality into the first combine, vocabulary after it. */
+    * broadcast 1-row cross join (never a driver collect): at 100 TB
+    * the cost is token cardinality into the first combine, vocabulary
+    * after it. The k-row-per-doc result is stabilized before the call
+    * returns, so the op executes where it is called. */
   def tfidfTopTermsOf(docs: DataFrame, idCol: String, textCol: String,
                       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // barrier: (doc_id, term, tf) feeds BOTH the df counts and the
     // scoring join — persist (not localCheckpoint) so both join sides
-    // read one materialization of the tokenize+explode while the plan
-    // stays lazy, the blocks stay evictable under memory pressure, and
-    // lineage survives executor loss (localCheckpoint pins
-    // unrecomputable blocks for the session)
+    // read one materialization of the tokenize+explode, the blocks stay
+    // evictable under memory pressure, and lineage survives executor
+    // loss. rakeKeywordsOf's leak rule: the top-k result is stabilized
+    // and tf unpersisted before returning, so no call leaves it cached
     val tf = docs
       .select(col(idCol).as("doc_id"), explode(words(col(textCol))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -532,14 +533,15 @@ object TextOps {
     val dfTbl = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val rank = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term"))
-    tf.join(dfTbl, Seq("term"))
+    try graft.Checkpoints.stabilize(tf.join(dfTbl, Seq("term"))
       .crossJoin(broadcast(nDocs))
       .withColumn("score",
         col("tf") * (log((lit(1.0) + col("__n")) / (lit(1.0) + col("df"))) + lit(1.0)))
       .withColumn("rnk", row_number().over(rank).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
-        col("score"), col("rnk"))
+        col("score"), col("rnk")))
+    finally tf.unpersist()
   }
 
   /** #27e top-5 TF-IDF terms per document. */
@@ -1012,10 +1014,10 @@ object TextOps {
           .withColumn("syms", expr(s"graft_bpe_merge(syms, '${q(l)}', '${q(r)}')"))
         // truncate lineage every few rounds, not every round (the
         // un-checkpointed tail is ≤3 map-only kernel passes over the
-        // vocab table, cheaper to replay than to materialize), and
-        // LAZILY — materialization folds into the next round's
-        // pair-count job instead of scheduling its own
-        if (rank % 4 == 0) vocab = graft.Checkpoints.stabilize(vocab, eager = false)
+        // vocab table, cheaper to replay than to materialize); the
+        // stabilize runs its own job here, and the next round's
+        // pair-count job reads the stored rows
+        if (rank % 4 == 0) vocab = graft.Checkpoints.stabilize(vocab)
         rank += 1
       }
     }

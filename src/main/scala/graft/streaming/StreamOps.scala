@@ -1460,8 +1460,8 @@ object StreamOps {
     * reference). */
   private def freshAsgOf(live: DataFrame, anchorMod: Int): DataFrame =
     graft.ops.SimOps.cellAsgOf(live,
-      broadcast(live.filter(pmod(col("vec_id"), lit(anchorMod.toLong)) === 0)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"))),
+      live.filter(pmod(col("vec_id"), lit(anchorMod.toLong)) === 0)
+        .select(col("vec_id").as("c_id"), col("v").as("cv")),
       cellProbes = 2)
 
   /** ANCHOR-DRIFT gauge for an [[annIndexTick]] store (round-17): one
@@ -1475,7 +1475,7 @@ object StreamOps {
     * 0.0, spec-pinned). */
   def annAsgDrift(spark: SparkSession, storePath: String,
                   anchorMod: Int = 64): DataFrame = {
-    val live = graft.Checkpoints.fresh(annLiveVectors(spark, storePath), eager = true)
+    val live = graft.Checkpoints.fresh(annLiveVectors(spark, storePath))
     val fresh = freshAsgOf(live, anchorMod)
     val stored = mergedAsg(spark, storePath, Long.MaxValue)
       .join(live.select("vec_id"), Seq("vec_id"), "left_semi")
@@ -1560,15 +1560,15 @@ object StreamOps {
     // delete distinct's exchange) runs once, not per reference
     // (round-17, guide §1.2 step 1; values bit-identical)
     val b = graft.Checkpoints.fresh(batch.select(col(idCol).as("vec_id"),
-      col(vecCol).cast("array<double>").as("v")), eager = true)
+      col(vecCol).cast("array<double>").as("v")))
     val delIds = if (deletes == null) null
       else graft.Checkpoints.fresh(
-        deletes.select(col(idCol).as("vec_id")).distinct(), eager = true)
+        deletes.select(col(idCol).as("vec_id")).distinct())
     def anchorsOf(df: DataFrame): DataFrame =
       df.filter(pmod(col("vec_id"), lit(anchorMod.toLong)) === 0)
     def asgOf(vs: DataFrame, anc: DataFrame): DataFrame =
-      SimOps.cellAsgOf(vs, broadcast(anc.select(col("vec_id").as("c_id"),
-        col("v").as("cv"))), cellProbes = 2)
+      SimOps.cellAsgOf(vs, anc.select(col("vec_id").as("c_id"),
+        col("v").as("cv")), cellProbes = 2)
     // completed-tick guard: every prior landing must have its manifest
     // (the manifest lands LAST inside a tick — its absence means that
     // tick crashed between landings and must be re-run)
@@ -1587,7 +1587,7 @@ object StreamOps {
     val priorLive0: DataFrame =
       if (priorLandings.isEmpty) null
       else graft.Checkpoints.fresh(
-        annLiveVectors(spark, storePath, landingId), eager = false)
+        annLiveVectors(spark, storePath, landingId))
     val nDeletes = if (delIds == null) 0L else delIds.count()
     val nBatch = b.count()
     // UPDATE-form guard (fails BEFORE any landing): a live id arriving
@@ -1622,7 +1622,7 @@ object StreamOps {
         val anc = anchorsOf(b)
         // assignment computed ONCE (landed + fed to the build — the
         // hierarchical ranking is the build's widest shuffle)
-        val asg0 = graft.Checkpoints.fresh(asgOf(b, anc), eager = true)
+        val asg0 = graft.Checkpoints.fresh(asgOf(b, anc))
         lander.submit(graft.sinks.AnnStore.land(spark, storePath, "asg", asg0,
           landingId, "vec_id"))
         SimOps.knnGraphOf(b, anc, "vec_id", "v", "vec_id", "v",
@@ -1634,49 +1634,45 @@ object StreamOps {
         val priorLive = priorLive0
         val priorEdges = graft.Checkpoints.fresh(
           annIndexReportWith(spark, storePath, landingId,
-            liveVectors = priorLive0), eager = false)
-        val (survivors, edgesAfterDel, changedDel) =
-          if (nDeletes == 0L) (priorLive, priorEdges, null)
+            liveVectors = priorLive0))
+        val (survivors, changedDel) =
+          if (nDeletes == 0L) (priorLive, null)
           else {
-            // the post-delete view = checkpointed DELTA ∪ two anti
-            // joins off the checkpointed prior index — round 17 keeps
-            // the checkpoint on the DELTA only (small) and serves the
-            // union LAZILY: the round-16 eager form paid an
-            // index-sized localCheckpoint write per delete tick. The
-            // Catalyst Union constraint-rewrite crash the eager form
-            // sidestepped composed two LAZY window plans; both union
-            // children here hang off LogicalRDDs (checkpoint plans),
-            // which is exactly the shape the insert path already runs.
+            // the changed lists of the delete step are stabilized on
+            // their own (delete-bounded); the post-delete index view is
+            // built below, only when an insert reads it
             val cd = graft.Checkpoints.fresh(
               SimOps.graphDeleteDeltaOf(priorLive, delIds, priorEdges,
-                "vec_id", "v", r = r), eager = true)
-            // LAZY checkpoint on the union view (round-17): the insert
-            // search references it per beam hop (2·hops via the
-            // symmetrized view) plus the repair semi join and the final
-            // union — un-checkpointed, each reference re-ran the two
-            // index-sized anti joins; the checkpoint evaluates them ONCE
-            // on first use. Both union children hang off LogicalRDDs
-            // (the Catalyst Union constraint-rewrite crash guard), and
-            // the materialization is block-manager-resident, not the
-            // round-16 per-tick durable write.
-            // broadcast hints on the delete/changed-bounded anti sides
-            // (round-18, §3.1): priorEdges/priorLive are checkpoint
-            // leaves Catalyst cannot size, so un-hinted these anti
-            // joins sort-merge-shuffled the whole prior INDEX (and the
-            // live corpus) per delete tick; hinted, both are scanned
-            // against broadcast probes
-            val after = graft.Checkpoints.fresh(
-              cd.unionByName(priorEdges
-                .join(broadcast(cd.select("src").distinct()), Seq("src"), "left_anti")
-                .join(broadcast(delIds.select(col("vec_id").as("src"))),
-                  Seq("src"), "left_anti")),
-              eager = false)
-            (priorLive.join(broadcast(delIds), Seq("vec_id"), "left_anti"), after, cd)
+                "vec_id", "v", r = r))
+            // broadcast the delete set: priorLive is a checkpoint leaf
+            // Catalyst cannot size (round-18, §3.1)
+            (priorLive.join(broadcast(delIds), Seq("vec_id"), "left_anti"), cd)
           }
         if (nBatch == 0L) {
           require(nDeletes > 0L, "a tick needs a batch, deletes, or both")
           changedDel
         } else {
+          // the post-delete view = the delete's changed lists ∪ the
+          // prior index minus the changed and deleted srcs. The insert
+          // search reads it per beam hop (2·hops via the symmetrized
+          // view), plus the repair semi join and the final union, so it
+          // is stabilized once here: the two index-sized anti joins run
+          // where it is built, once per delete+insert tick; a
+          // delete-only tick never reads it and never builds it. Both
+          // union children hang off `fresh` leaves (the Catalyst Union
+          // constraint-rewrite crash guard). Broadcast hints on the
+          // delete/changed-bounded anti sides (round-18, §3.1):
+          // priorEdges is a checkpoint leaf Catalyst cannot size, so
+          // un-hinted these anti joins sort-merge-shuffled the whole
+          // prior INDEX per tick; hinted, it is scanned against
+          // broadcast probes
+          val edgesAfterDel =
+            if (changedDel == null) priorEdges
+            else graft.Checkpoints.fresh(
+              changedDel.unionByName(priorEdges
+                .join(broadcast(changedDel.select("src").distinct()), Seq("src"), "left_anti")
+                .join(broadcast(delIds.select(col("vec_id").as("src"))),
+                  Seq("src"), "left_anti")))
           val anc = anchorsOf(survivors)
           // the asg COMPUTE (delta×anchor cosine rank) moves onto the
           // land thread too — it feeds nothing else in this tick
@@ -1694,7 +1690,7 @@ object StreamOps {
             // for the anti join) — un-checkpointed, the whole
             // insert-delta tree (top-r dedup over the post-delete
             // union) executed twice per tick (round-17; bit-identical)
-            val ci = graft.Checkpoints.fresh(ci0, eager = false)
+            val ci = graft.Checkpoints.fresh(ci0)
             ci.unionByName(changedDel
               .join(broadcast(ci.select("src").distinct()), Seq("src"), "left_anti"))
           }
@@ -1756,13 +1752,13 @@ object StreamOps {
     import graft.sinks.SketchStore.land
     val base = upTo - 1
     val live = graft.Checkpoints.fresh(
-      annLiveVectors(spark, storePath, upTo), eager = true)
+      annLiveVectors(spark, storePath, upTo))
     val edges = graft.Checkpoints.fresh(
-      annIndexReportWith(spark, storePath, upTo, liveVectors = live), eager = true)
+      annIndexReportWith(spark, storePath, upTo, liveVectors = live))
     val asg = graft.Checkpoints.fresh(
       if (reassignAnchorMod > 0) freshAsgOf(live, reassignAnchorMod)
       else mergedAsg(spark, storePath, upTo)
-        .join(live.select("vec_id"), Seq("vec_id"), "left_semi"), eager = true)
+        .join(live.select("vec_id"), Seq("vec_id"), "left_semi"))
     // the three baseline frames are eagerly checkpointed above, so the
     // lands are independent sinks — run them concurrently (guide §2.6)
     graft.sinks.AnnStore.landMany(spark, storePath, base, Seq(

@@ -58,8 +58,38 @@ class CheckpointsSpec extends SparkSpec {
       val all = vecsOf(sfDir)
       graft.ops.SimOps.knnGraphOf(all, all.filter(pmod(col("vec_id"), lit(64)) === 0),
         "vec_id", "v", "vec_id", "v", r = 8).collect()
+      // and tfidfTopTerms' persisted (doc_id, term, tf) frame
+      Graft.tfidfTopTerms(Tables.t(spark, sfDir, "documents"), "doc_id", "text", 5).collect()
     }
     assert(left.isEmpty, s"persistent RDDs left pinned after the scope: $left")
+  }
+
+  test("`stabilize` and `fresh` return a frame that has already run") {
+    val n = 50L
+    def check(mode: String): Unit = {
+      val rows = spark.sparkContext.longAccumulator(s"rows_$mode")
+      val counted = udf { (id: Long) => rows.add(1L); id * 2L }.asNondeterministic()
+      def frame: DataFrame =
+        spark.range(0L, n, 1L, 4).select(col("id"), counted(col("id")).as("x"))
+      Seq[(String, DataFrame => DataFrame)](
+        "stabilize" -> (df => Checkpoints.stabilize(df)),
+        "fresh" -> (df => Checkpoints.fresh(df))).foreach { case (name, materialize) =>
+        rows.reset()
+        Checkpoints.scoped {
+          val ck = materialize(frame)
+          assert(rows.sum == n,
+            s"$mode $name: ${rows.sum} of $n rows ran before the call returned")
+          assert(ck.collect().length == n && ck.collect().map(_.getLong(1)).sum == n * (n - 1))
+          assert(rows.sum == n, s"$mode $name: collecting the result re-ran the frame")
+        }
+      }
+    }
+    check("local")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ck_ran_").toFile
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(Checkpoints.ReliableKey, "true")
+    try check("reliable")
+    finally spark.conf.set(Checkpoints.ReliableKey, "false")
   }
 
   test("reliable mode reaches the ANN tick and compaction: the same " +

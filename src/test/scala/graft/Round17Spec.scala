@@ -148,9 +148,9 @@ class Round17Spec extends SparkSpec {
     // the delta computed with a FRESH internal assignment (corpusAsg =
     // null) — the repaired store behaves like one that never drifted
     val liveC = graft.Checkpoints.fresh(
-      StreamOps.annLiveVectors(spark, store), eager = true)
+      StreamOps.annLiveVectors(spark, store))
     val edgesC = graft.Checkpoints.fresh(
-      StreamOps.annIndexReport(spark, store), eager = true)
+      StreamOps.annIndexReport(spark, store))
     val anc = liveC.filter(pmod(col("vec_id"), lit(64)) === 0)
     val b2 = all.filter(col("vec_id") >= 440 && col("vec_id") < 480)
     val expect = SimOps.graphInsertDeltaOf(liveC, b2, edgesC, anc, anc,
