@@ -16,7 +16,7 @@ package graft
 object Audit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val only = args.toSet
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -75,8 +75,7 @@ object Bench {
     * back JSON-safe (control chars, quotes and backslashes stripped). */
   private def benchInProcess(names: Seq[String]): (Seq[(String, Double)], Map[String, String]) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(cpus).getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def run(name: String, record: Boolean): Double = {

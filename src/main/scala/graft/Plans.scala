@@ -15,8 +15,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, tag) = (args(0), args(1), args(2))
     val only = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(cpus).getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -30,10 +30,9 @@ object ScaleProbe {
     "ds12_weighted_sample", "ds13_quality_prune", "q49_quantile_bins",
     "ds10_profile", "ds11_checks", "st05_stream_quality")
 
-  /** The probe session: `SPARK_GRAFT_CPUS` local cores (default 32),
-    * WARN logging. */
+  /** The probe session: [[Sessions.cpus]] local cores, WARN logging. */
   private def session(): SparkSession = {
-    val spark = Sessions.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = Sessions.builder(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -7,6 +7,13 @@ import org.apache.spark.sql.SparkSession
   * (native vector expressions) and the engine configs are always on.
   * On a cluster the same settings apply minus `master`. */
 object Sessions {
+  /** Local cores of an entry point's session: `SPARK_GRAFT_CPUS`, else
+    * the host's available processors. The session's shuffle parallelism
+    * is this value, and through it the bucket count of every ANN store
+    * the session first lands ([[graft.sinks.AnnStore]]). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 object TickProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = Sessions.builder(cpus).getOrCreate()
+    val s = Sessions.builder(Sessions.cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     def t[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()

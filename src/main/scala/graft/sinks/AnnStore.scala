@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * (`vectors`/`edges`/`asg`/`deletes`), PARTITIONED BY `__landing`
   * (dynamic overwrite per tick — replaying a landing replaces exactly
   * its partition, the SketchStore idempotency contract) and CLUSTERED
-  * BY the row key (`vec_id`, `src`) into [[Buckets]] buckets. The
+  * BY the row key (`vec_id`, `src`) into the store's bucket count. The
   * bucketed scan reports its hash distribution to Catalyst, so the
   * merged-view reads that serve the index — latest-landing-per-src
   * over `edges`, latest-op-wins over `vectors`⋈`deletes`,
@@ -24,10 +24,26 @@ import org.apache.spark.sql.types.StructType
   *
   * At 100 TB the windows' input is always index-sized (that is what
   * serving an index means) — bucketing makes the cost one LOCAL sort
-  * per bucket with no network movement, and the bucket count is the
-  * deployment's parallelism knob (size so one bucket ≈ one task's
-  * working set; keep it identical across sub-stores, co-location
-  * requires equal bucket counts).
+  * per bucket with no network movement.
+  *
+  * Bucket count: ONE per store, shared by its four sub-stores (a
+  * co-located join requires equal counts). The store's first landing
+  * fixes it at the writing session's `spark.sql.shuffle.partitions` and
+  * records it in the store's `_buckets` file; every later
+  * (re)registration — a fresh session, [[dropTables]] then [[read]], or
+  * [[land]] re-creating a sub-store a compaction emptied — declares the
+  * recorded count, the one the files were written with, whatever the
+  * current session's parallelism. The record is read through the Hadoop
+  * FileSystem only when a table is (re)registered: no Spark job, and
+  * nothing per view read. Why the session's parallelism: every bucketed
+  * scan runs one task per bucket, and a join of a store with a side
+  * that needs an exchange keeps the bucketed side and has
+  * EnsureRequirements re-shuffle the other side into the bucket count
+  * (into `spark.sql.shuffle.partitions`, re-shuffling the store side
+  * too, when the count is below it). A count equal to the exchange
+  * parallelism keeps the co-location and sizes the tick, its compaction
+  * and the serve views by the session that runs them; a fixed count
+  * above it runs them all in more, smaller task waves.
   *
   * Replay idempotency lives in the TABLE: every sub-store is created
   * with `OPTIONS (partitionOverwriteMode 'dynamic')`, so an overwriting
@@ -46,18 +62,16 @@ import org.apache.spark.sql.types.StructType
   * of two such tables planned 0 Exchanges).
   *
   * The catalog entry is session-lifetime (in-memory catalog); the
-  * FILES are the durable artifact. A fresh session re-registers the
-  * table over the existing files (the same `CREATE TABLE … LOCATION`
-  * + partition recovery) — bucketed file names carry their bucket id,
-  * so the spec survives re-registration. A legacy (pre-bucketing)
-  * store is detected by its file names and served as a plain parquet
-  * read — correct, just without the co-location. */
+  * FILES and the bucket record are the durable artifact. A fresh
+  * session re-registers the table over the existing files (the same
+  * `CREATE TABLE … LOCATION` at the recorded count + partition
+  * recovery). A store with landings but no record predates the record
+  * (unbucketed files, or files bucketed by a count nobody wrote down):
+  * it is served as a plain parquet read — correct, just without the
+  * co-location — and [[land]] refuses it. */
 object AnnStore {
 
-  /** Bucket count for every ANN sub-store (equal across stores — a
-    * co-located join requires it). 32 = the local session's shuffle
-    * parallelism; a cluster deployment sizes this to corpus/task. */
-  val Buckets = 32
+  private val Subs = Seq("vectors", "edges", "asg", "deletes")
 
   private def tableName(storePath: String, sub: String): String = {
     val h = java.security.MessageDigest.getInstance("MD5")
@@ -75,15 +89,42 @@ object AnnStore {
   private def hasLandings(spark: SparkSession, p: String): Boolean =
     PartitionDirs.list(spark, p, "__landing").nonEmpty
 
-  /** True when the landed files carry bucket ids in their names
-    * (`part-NNNNN-uuid_BBBBB.c000…`) — the marker Spark itself uses to
-    * map a file to its bucket, so it is exactly the "safe to declare
-    * CLUSTERED BY over these files" test. */
-  private def filesAreBucketed(spark: SparkSession, p: String): Boolean =
-    PartitionDirs.list(spark, p, "__landing").headOption.exists { case (_, dir) =>
-      fs(spark, p).listStatus(dir).exists { st =>
-        val nm = st.getPath.getName
-        nm.startsWith("part-") && nm.matches(""".*_\d{5}\.c000.*""")
+  /** The store's bucket record (see the object doc). */
+  private def recordPath(storePath: String) =
+    new org.apache.hadoop.fs.Path(s"$storePath/_buckets")
+
+  /** The recorded bucket count, or None for a store with no record. */
+  private def recordedBuckets(spark: SparkSession, storePath: String): Option[Int] = {
+    val (f, rec) = (fs(spark, storePath), recordPath(storePath))
+    if (!f.exists(rec)) None
+    else {
+      val in = f.open(rec)
+      try Some(new String(in.readAllBytes(), "UTF-8").trim.toInt) finally in.close()
+    }
+  }
+
+  private def legacy(p: String) = new IllegalStateException(
+    s"store $p holds landings but the store has no bucket record (a " +
+      "pre-bucketing store, or one bucketed before the record); rebuild " +
+      "the store (AnnStore cannot append bucketed landings to it)")
+
+  /** The bucket count of a sub-store created over no landings: the
+    * recorded one, else — the store's first landing — the writing
+    * session's shuffle parallelism, recorded first (written aside and
+    * renamed into place, so a crash leaves no partial record). A store
+    * that has landings but no record predates the record: refused. */
+  private def bucketsForLanding(spark: SparkSession, storePath: String): Int =
+    synchronized { // landMany's first landing: one record for all its threads
+      recordedBuckets(spark, storePath).getOrElse {
+        Subs.find(sub => hasLandings(spark, subPath(storePath, sub)))
+          .foreach(sub => throw legacy(subPath(storePath, sub)))
+        val (f, rec) = (fs(spark, storePath), recordPath(storePath))
+        val tmp = rec.suffix(s".${java.util.UUID.randomUUID}")
+        val out = f.create(tmp, false)
+        try out.write(spark.conf.get("spark.sql.shuffle.partitions").getBytes("UTF-8"))
+        finally out.close()
+        if (!f.rename(tmp, rec)) f.delete(tmp, false)
+        recordedBuckets(spark, storePath).get
       }
     }
 
@@ -91,28 +132,29 @@ object AnnStore {
     * over `p`, partitioned by `__landing` and dynamic-overwrite by its
     * own storage property (see the object doc). */
   private def createTable(spark: SparkSession, t: String, p: String,
-                          dataSchema: StructType, bucketCol: String): Unit = {
+                          dataSchema: StructType, bucketCol: String, buckets: Int): Unit = {
     val cols = dataSchema.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
     spark.sql(s"""CREATE TABLE $t ($cols, `__landing` BIGINT)
       |USING parquet PARTITIONED BY (__landing)
-      |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $Buckets BUCKETS
+      |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $buckets BUCKETS
       |OPTIONS (partitionOverwriteMode 'dynamic')
       |LOCATION '$p'""".stripMargin)
   }
 
   /** Register the catalog table over existing landed files (fresh
-    * session reading a durable store). Returns false when the files
-    * predate bucketing — the caller falls back to a plain path read. */
+    * session reading a durable store) at the recorded bucket count.
+    * Returns false when the store has no record — the caller falls
+    * back to a plain path read. */
   private def registerOverFiles(spark: SparkSession, storePath: String,
-                                sub: String, bucketCol: String): Boolean = {
-    val p = subPath(storePath, sub)
-    if (!filesAreBucketed(spark, p)) return false
-    val t = tableName(storePath, sub)
-    createTable(spark, t, p,
-      StructType(spark.read.parquet(p).schema.filterNot(_.name == "__landing")), bucketCol)
-    spark.sql(s"MSCK REPAIR TABLE $t")
-    true
-  }
+                                sub: String, bucketCol: String): Boolean =
+    recordedBuckets(spark, storePath).exists { buckets =>
+      val (t, p) = (tableName(storePath, sub), subPath(storePath, sub))
+      createTable(spark, t, p,
+        StructType(spark.read.parquet(p).schema.filterNot(_.name == "__landing")),
+        bucketCol, buckets)
+      spark.sql(s"MSCK REPAIR TABLE $t")
+      true
+    }
 
   /** Land one landing of `df` into the `sub` store, bucketed by
     * `bucketCol` (idempotent per landing id — the table's dynamic
@@ -127,13 +169,12 @@ object AnnStore {
     // dropped every landing) is re-created over the empty directory
     if (!landed) spark.sql(s"DROP TABLE IF EXISTS $t")
     if (!spark.catalog.tableExists(t)) {
-      if (!landed) createTable(spark, t, p, df.schema, bucketCol)
+      if (!landed)
+        createTable(spark, t, p, df.schema, bucketCol, bucketsForLanding(spark, storePath))
       else if (!registerOverFiles(spark, storePath, sub, bucketCol))
-        // legacy (non-bucketed) files under this path: refuse to mix —
-        // a bucketed table over unbucketed files mis-routes reads
-        throw new IllegalStateException(
-          s"store $p holds pre-bucketing landings; rebuild the store " +
-            "(AnnStore cannot append bucketed landings to legacy files)")
+        // legacy files under this path: refuse to mix — a table declared
+        // at a count the files were not written with mis-routes reads
+        throw legacy(p)
     }
     val order = spark.table(t).schema.fieldNames
     df.withColumn("__landing", lit(landingId))
@@ -232,7 +273,7 @@ object AnnStore {
     * the files — used when a temp store is removed after its report is
     * materialized). */
   def dropTables(spark: SparkSession, storePath: String): Unit =
-    Seq("vectors", "edges", "asg", "deletes").foreach { sub =>
+    Subs.foreach { sub =>
       spark.sql(s"DROP TABLE IF EXISTS ${tableName(storePath, sub)}")
     }
 }

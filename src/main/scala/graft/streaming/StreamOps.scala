@@ -1428,7 +1428,8 @@ object StreamOps {
       else annLiveVectors(spark, storePath, beforeLanding))
       .select(col("vec_id").as("src"))
     // bucketed scan: the latest-per-src window is partition-local and
-    // the live semi join co-located (both stores share the bucket count)
+    // the live semi join co-located (every sub-store of a store is
+    // clustered into the store's one recorded bucket count, AnnStore)
     val wl = Window.partitionBy(col("src"))
     graft.sinks.AnnStore.read(spark, storePath, "edges", "src")
       .filter(col("__landing").cast("long") < beforeLanding)

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -232,6 +235,123 @@ class AnnStoreSpec extends SparkSpec {
     AnnStore.dropTables(spark, store)
     AnnStore.read(spark, store, "vectors", "vec_id") // re-registers over the files
     overwriteOneLanding()
+  }
+
+  // ---- one bucket count per store, fixed by the session that lands it first
+
+  /** The catalog bucket count of each sub-store of `store` that has a table. */
+  private def catalogBuckets(s: SparkSession, store: String): Map[String, Int] =
+    Seq("vectors", "edges", "asg", "deletes").flatMap { sub =>
+      s.catalog.listTables().collect().map(_.name).filter(_.endsWith(s"_$sub"))
+        .map(t => s.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
+          .map(r => r.getString(0) -> r.getString(1)).toMap)
+        .find(_.get("Location").exists(_.endsWith(s"$store/$sub")))
+        .map(meta => sub -> meta("Num Buckets").trim.toInt)
+    }.toMap
+
+  /** The bucket ids in the file names of one landing, over every sub-store. */
+  private def bucketIdsOf(store: String, landing: Long): Set[Int] =
+    Seq("vectors", "edges", "asg", "deletes").flatMap { sub =>
+      Option(new java.io.File(s"$store/$sub/__landing=$landing").listFiles()).toSeq.flatten
+        .flatMap(f => """_(\d{5})\.c000""".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
+    }.toSet
+
+  private def rowStrings(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("a store has ONE bucket count, the shuffle parallelism of the session that " +
+    "landed it first, kept when a session of other parallelism re-registers and lands it") {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val store = buildStore()
+    assert(catalogBuckets(spark, store) == Map("vectors" -> parts, "edges" -> parts,
+      "asg" -> parts, "deletes" -> parts), "every sub-store is bucketed by the writing session")
+    val live = rowStrings(StreamOps.annLiveVectors(spark, store))
+    val report = rowStrings(StreamOps.annIndexReport(spark, store))
+    AnnStore.dropTables(spark, store)
+    val other = spark.newSession()
+    other.conf.set("spark.sql.shuffle.partitions", (parts / 2).toString)
+    Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      .foreach(other.conf.set(_, "-1"))
+    try {
+      assert(rowStrings(StreamOps.annLiveVectors(other, store)) == live, "live vectors re-read")
+      assert(rowStrings(StreamOps.annIndexReport(other, store)) == report, "index re-read")
+      // the serve views re-register the three stores they read
+      assert(catalogBuckets(other, store) == Map("vectors" -> parts, "edges" -> parts,
+        "deletes" -> parts), s"re-registered at the recorded count, not the session's ${parts / 2}")
+      assert(shuffles(StreamOps.annLiveVectors(other, store)) == 0, "annLiveVectors co-located")
+      assert(shuffles(StreamOps.annIndexReport(other, store)) == 0, "annIndexReport co-located")
+      val all = Tables.t(other, sfDir, "embeddings")
+        .select(col("vec_id"), F.asDouble(col("embedding")).as("v"))
+      StreamOps.annIndexTick(other, store, all.filter(col("vec_id") % 10 === 9),
+        "vec_id", "v", r = 8, beam = 4, hops = 3, landingId = 2L,
+        deletes = all.filter(col("vec_id") % 20 === 7))
+      assert(bucketIdsOf(store, 2L) == (0 until parts).toSet,
+        s"the other session's tick wrote ${parts}-bucket files: ${bucketIdsOf(store, 2L)}")
+      assert(catalogBuckets(other, store) == Map("vectors" -> parts, "edges" -> parts,
+        "asg" -> parts, "deletes" -> parts), "the tick registers asg at the recorded count too")
+    } finally AnnStore.dropTables(other, store)
+  }
+
+  test("a 5-query beam-4 3-hop search over the pinned views of a tick-built store runs " +
+    "9 jobs of at most spark.sql.shuffle.partitions tasks per pinned-view scan") {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val store = buildStore()
+    val corpus = StreamOps.annLiveVectors(spark, store).localCheckpoint(eager = true)
+    val edges = StreamOps.annIndexReport(spark, store).localCheckpoint(eager = true)
+    try {
+      assert(corpus.rdd.getNumPartitions == parts && edges.rdd.getNumPartitions == parts,
+        s"pinned views: ${corpus.rdd.getNumPartitions} and ${edges.rdd.getNumPartitions} partitions")
+      val anchors = corpus.filter(pmod(col("vec_id"), lit(64L)) === 0)
+      // the queries as a local relation, as a serving loop holds them
+      val q = spark.createDataFrame(corpus.orderBy("vec_id").limit(5).collect().toSeq.asJava,
+        corpus.schema)
+      def search(): Int =
+        Graft.annGraph(corpus, q, anchors, edges, "vec_id", "v", 10, 4, 3).collect().length
+      search() // warm: codegen
+      val group = "annstore-search"
+      val stageJob = TrieMap.empty[Int, Int]
+      val tasks = TrieMap.empty[Int, Int]
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) {
+            tasks(j.jobId) = 0
+            j.stageIds.foreach(stageJob(_) = j.jobId)
+          }
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          stageJob.get(t.stageId).foreach(id => tasks(id) = tasks(id) + 1)
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "graph search over the pinned views")
+        try assert(search() == 50) finally sc.clearJobGroup()
+        var (last, polls) = ("", 0) // listener events arrive async
+        while (tasks.toString != last && polls < 20) { last = tasks.toString; Thread.sleep(500); polls += 1 }
+      } finally sc.removeSparkListener(listener)
+      val perJob = tasks.toSeq.sorted.map(_._2)
+      info(s"tasks per job: ${perJob.mkString(" ")}")
+      assert(perJob.size == 9, s"the search ran ${perJob.size} jobs, not 9")
+      // one task per partition of what a job scans: each hop's edge job
+      // scans the pinned edges twice (both directions, a union), every
+      // other job one pinned view, the local queries or a shuffle
+      assert(perJob.count(_ > parts) == 3 && perJob.max <= 2 * parts,
+        s"more than $parts tasks per scan: ${perJob.mkString(" ")}")
+    } finally { Checkpoints.free(corpus); Checkpoints.free(edges); AnnStore.dropTables(spark, store) }
+  }
+
+  test("a store with bucketed landings but no bucket record predates the record: it is " +
+    "served as a plain parquet read, and land refuses it") {
+    val store = buildStore()
+    val live = rowStrings(StreamOps.annLiveVectors(spark, store))
+    AnnStore.dropTables(spark, store)
+    Seq("_buckets", "._buckets.crc").foreach(f => new java.io.File(s"$store/$f").delete())
+    assert(rowStrings(StreamOps.annLiveVectors(spark, store)) == live,
+      "the plain read serves the same live set")
+    noBroadcast(assert(shuffles(StreamOps.annLiveVectors(spark, store)) > 0,
+      "no bucketed table was declared over the files"))
+    val ex = intercept[IllegalStateException] {
+      AnnStore.land(spark, store, "vectors", vecsOf(sfDir).limit(5), 2L, "vec_id")
+    }
+    assert(ex.getMessage.contains("pre-bucketing"), ex.getMessage)
   }
 }
 
